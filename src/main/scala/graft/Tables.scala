@@ -56,8 +56,4 @@ object Tables {
     val target = spark.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
   }
-
-  /** Register all tables as temp views (for spark.sql-style queries). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -71,8 +71,6 @@ object PdfText {
   final case class PStream(dict: Map[String, Any], raw: Array[Byte])
 
   private final class Lexer(b: Array[Byte], var p: Int) {
-    def bytesLeft: Int = b.length - p
-
     def ws(): Unit = {
       var go = true
       while (go) {

@@ -52,13 +52,6 @@ object TextFunctions {
         length(regexp_replace(text, "[^A-Za-z]", "")).cast("double") /
           length(text).cast("double"))
 
-  /** Ratio of punctuation characters to total characters. */
-  def punctRatio(text: Column): Column =
-    when(length(text) === 0, lit(0.0))
-      .otherwise(
-        length(regexp_replace(text, "[^.,;:!?'\"()\\[\\]-]", "")).cast("double") /
-          length(text).cast("double"))
-
   private val stopwords =
     Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 

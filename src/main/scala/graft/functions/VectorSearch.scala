@@ -1,9 +1,10 @@
 package graft.functions
 
 import graft.functions.{NativeExpressions => NE}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Approximate-nearest-neighbour search over an embedding column.
   *
@@ -266,24 +267,24 @@ object VectorSearch {
 
   /** Thresholded cosine pairs within shared `cell` values — the pairing
     * half of [[semanticDedupPairs]], shared with the IMI variant (the
-    * assignment strategy is orthogonal to the pairing).
-    *
-    * GROUPED BLOCK KERNEL (r16): the old formulation self-joined the
-    * assignment table on `cell` and computed the cosine per candidate
-    * ROW — at the cap-4 sf10 dial that materializes ~1.6e9 join rows
-    * each carrying TWO 64-float vectors through the join operator, and
-    * the row plumbing (not the ~2e11 flops of dot products, which are
-    * ~2 s of machine work) held the stage at ~50 s. Here each cell's
-    * members are collected once (bounded: cell occupancy is held ~64 by
-    * the corpus-scaled codebook, times the ≤cap² probe expansion) and
-    * all within-cell pairs are scored in one primitive loop, emitting
-    * only the survivors. The arithmetic is BIT-IDENTICAL to the
-    * declarative tree the DuckDB oracle replays: dot = Σ (double)aᵢ·bᵢ
-    * left-to-right (VectorDotF's loop), norms = √Σx² (VectorL2Norm),
-    * cosine = round(dot/(na·nb), 4) on the HALF_UP lattice, and the
-    * threshold keeps NaN-greatest ordering exactly like Spark's `>=`
-    * on doubles (VectorSearchSpec pins kernel ≡ join formulation).
+    * assignment strategy is orthogonal to the pairing). The threshold
+    * sink of [[cellKernel]].
     */
+  private[graft] def pairsWithinCells(
+      assignedIn: DataFrame, threshold: Double,
+      dedup: Boolean = true): DataFrame = {
+    val s = assignedIn.sparkSession
+    import s.implicits._
+    val raw = cellKernel(assignedIn, sameLabel = None)(
+        b => new ThresholdSink(b, threshold))
+      .toDF("id_a", "id_b", "cosine")
+    // dedup = false skips the final distinct for callers that feed the
+    // pairs straight into ConnectedComponents, whose symmetric-closure
+    // distinct subsumes it — one pair-set exchange saved per composite
+    // (r19); callers that EMIT the pairs keep the dedup.
+    if (dedup) raw.distinct() else raw
+  }
+
   /** Rows one kernel task may collect for a single (cell[, salt block])
     * before failing LOUDLY instead of OOMing (conf
     * `graft.cell.maxKernelRows`). The corpus-scaled codebook holds the
@@ -297,17 +298,18 @@ object VectorSearch {
     s.conf.getOption("graft.cell.maxKernelRows").map(_.toInt)
       .getOrElse(4000000)
 
-  /** Salt factor for the pair kernels (conf `graft.cell.salts`, default
-    * 1 = off). At S > 1 every cell's members split into S hash blocks on
-    * vec_id and each unordered block pair (i ≤ j) is scored by its own
-    * task — identical pair arithmetic (VectorSearchSpec pins salted ≡
-    * join on a one-hot-cell fixture), task memory O(cellmax/S) instead
-    * of O(cellmax), at the standard salting price of an S× replicated
-    * kernel exchange (guide §2.5 — salt the key, explode the
-    * counterpart side). Production sets S from max-expected-cell /
-    * memory budget; the gate default keeps the exact unsalted plan, and
-    * a cell that outgrows the cap under S = 1 fails loudly pointing
-    * here rather than melting a task.
+  /** Salt factor for [[cellKernel]] (conf `graft.cell.salts`, default
+    * 1 = off), honoured by every sink: threshold pairs, kNN and
+    * label-kNN. At S > 1 every cell's members split into S hash blocks
+    * on vec_id and each unordered block pair (i ≤ j) is scored by its
+    * own task — identical pair arithmetic and results (VectorSearchSpec
+    * pins salted ≡ unsalted ≡ join for all three sinks on a one-hot-cell
+    * fixture), task memory O(cellmax/S) instead of O(cellmax), at the
+    * standard salting price of an S× replicated kernel exchange (guide
+    * §2.5 — salt the key, explode the counterpart side). Production sets
+    * S from max-expected-cell / memory budget; the gate default keeps the
+    * exact unsalted plan, and a cell that outgrows the cap under S = 1
+    * fails loudly pointing here rather than melting a task.
     */
   private def cellSalts(s: org.apache.spark.sql.SparkSession): Int = {
     val n = s.conf.getOption("graft.cell.salts").map(_.toInt).getOrElse(1)
@@ -319,31 +321,129 @@ object VectorSearch {
     s"cell block of $n rows exceeds graft.cell.maxKernelRows=$cap — a " +
       "pathologically hot cell (duplicate-vector pileup). Raise " +
       "graft.cell.salts to split cells into hash blocks (exact same " +
-      "pairs, O(cell/salts) task memory), run exact dedup first, or " +
+      "results, O(cell/salts) task memory), run exact dedup first, or " +
       "grow the codebook (k ~ sqrt(n) holds the average cell at ~64)."
 
-  private[graft] def pairsWithinCells(
-      assignedIn: DataFrame, threshold: Double,
-      dedup: Boolean = true): DataFrame = {
-    val s = assignedIn.sparkSession
+  /** GROUPED CELL-BLOCK KERNEL — the one scoring loop behind
+    * [[pairsWithinCells]], [[knnWithinCells]] and [[labelNeighbors]].
+    * Expects one row per (cell, vec_id, embedding[, label]) assignment.
+    *
+    * A cell self-join materializes every candidate row carrying BOTH
+    * 64-float vectors through the join operator (plus an m²-row window
+    * sort for the top-k sinks): at the cap-4 sf10 dial ~1.6e9 rows, and
+    * the row plumbing, not the ~2e11 flops, held the stage at ~50 s.
+    * Here each block's members are collected once and every unordered
+    * pair is scored ONCE in one primitive loop that allocates nothing
+    * per scored pair, only per emitted row.
+    *
+    * The arithmetic is BIT-IDENTICAL to the declarative join the DuckDB
+    * oracle replays (VectorSearchSpec pins kernel ≡ join for every
+    * sink): dot = Σ (double)aᵢ·bᵢ left-to-right (VectorDotF's loop,
+    * symmetric in its operands), norms = √Σx² (VectorL2Norm), cosine =
+    * round(dot/(na·nb), 4) on the HALF_UP lattice, and every comparison
+    * uses java.lang.Double.compare, so NaN ranks greatest exactly like
+    * Spark's `>=` and DESC sort on doubles.
+    *
+    * Both parameters are fixed per block. `sameLabel` is the admit rule:
+    * None scores every pair, Some(true) only same-label pairs, Some(false)
+    * only different-label pairs (the label rides as a long). `sink`
+    * builds the block's state that admitted pairs are offered to:
+    *  - [[ThresholdSink]]: (id_a < id_b, cosine) at cosine ≥ threshold;
+    *  - [[TopKSink]]: each member's top-k, O(m·k) state instead of the m²
+    *    candidate rows. The two-stage top-k is exact: a neighbor in a
+    *    src's GLOBAL top-k is in src's top-k of every block that scored
+    *    the pair (anything ranked above it there is above it globally),
+    *    so the caller's distinct + row_number re-rank over the union of
+    *    block survivors (≤ blocks·k per src) is the global top-k.
+    *
+    * Grouping: at `graft.cell.salts` S = 1 a block is one cell. At S > 1
+    * member x (salt sx = hash(vec_id) mod S) replicates to every block
+    * (min(sx, t), max(sx, t)) for t in 0..S-1, tagged with its role
+    * (whether it is the block's i-side), so each unordered pair {x, y} is
+    * scored in exactly one block: same salt → the (s, s) diagonal block,
+    * which holds one copy of each member and admits all its pairs;
+    * different salts → the (min, max) block, which admits cross-role
+    * pairs only. [[maxKernelRows]] bounds every block either way.
+    */
+  private def cellKernel[T: Encoder](
+      assigned: DataFrame, sameLabel: Option[Boolean])(
+      sink: CellBlock => BlockSink[T]): Dataset[T] = {
+    val s = assigned.sparkSession
     import s.implicits._
     val cap = maxKernelRows(s)
     val salts = cellSalts(s)
-    // the pair loop shared by the unsalted and salted paths: scores
-    // every admissible (i, j) pair once — `roles == null` admits all
-    // i < j (one cell block); with roles, only cross-role pairs (the
-    // same-salt pairs live in the (s, s) diagonal block)
-    def pairLoop(
-        ids: Array[Long], vs: Array[Array[Float]], norms: Array[Double],
-        roles: Array[Boolean]): Seq[(Long, Long, Double)] = {
-      val n = ids.length
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+    // one member is the tuple M = (vec_id[, label], embedding)
+    val fields = col("vec_id") +:
+      sameLabel.map(_ => col("label").cast("long")).toSeq :+ col("embedding")
+    val member = struct(
+      fields.zipWithIndex.map { case (c, i) => c.as(s"_${i + 1}") }: _*)
+    def score(ms: Seq[Product], roles: Array[Boolean]): Iterator[T] = {
+      require(ms.length <= cap, capMsg(ms.length, cap))
+      val block = new CellBlock(ms, sameLabel, roles)
+      val out = sink(block)
+      block.scorePairs(out)
+      out.rows
+    }
+    def run[M <: Product : TypeTag]: Dataset[T] =
+      if (salts == 1) assigned
+        .groupBy(col("cell"))
+        .agg(collect_list(member).as("m"))
+        .select(col("m").as[Seq[M]])
+        .flatMap(score(_, null))
+      else assigned
+        .withColumn("_s", pmod(xxhash64(col("vec_id")), lit(salts)).cast("int"))
+        .select(col("cell"), col("_s"), member.as("_m"),
+          explode(sequence(lit(0), lit(salts - 1))).as("_t"))
+        .groupBy(col("cell"), least(col("_s"), col("_t")).as("_i"),
+          greatest(col("_s"), col("_t")).as("_j"))
+        .agg(collect_list(struct(col("_m").as("_1"),
+          (col("_s") <= col("_t")).as("_2"))).as("m"))
+        .select((col("_i") === col("_j")).as("_1"), col("m").as("_2"))
+        .as[(Boolean, Seq[(M, Boolean)])]
+        .flatMap { case (diagonal, mm) =>
+          score(mm.map(_._1), if (diagonal) null else mm.map(_._2).toArray)
+        }
+    if (sameLabel.isEmpty) run[(Long, Array[Float])]
+    else run[(Long, Long, Array[Float])]
+  }
+
+  /** One block of [[cellKernel]], its (vec_id[, label], embedding)
+    * members unpacked once: ids, vectors and norms per member (never per
+    * pair), labels when the admit rule reads them, and the roles of an
+    * off-diagonal salted block (null otherwise).
+    */
+  private final class CellBlock(
+      ms: Seq[Product], sameLabel: Option[Boolean],
+      private val roles: Array[Boolean]) {
+    val n: Int = ms.length
+    val ids = new Array[Long](n)
+    val labels: Array[Long] = if (sameLabel.isEmpty) null else new Array[Long](n)
+    private val vs = new Array[Array[Float]](n)
+    private val norms = new Array[Double](n)
+    ms.iterator.zipWithIndex.foreach { case (m, i) =>
+      ids(i) = m.productElement(0).asInstanceOf[Long]
+      if (labels != null) labels(i) = m.productElement(1).asInstanceOf[Long]
+      val v = m.productElement(m.productArity - 1).asInstanceOf[Array[Float]]
+      vs(i) = v
+      var acc = 0.0
+      var d = 0
+      while (d < v.length) { val x = v(d).toDouble; acc += x * x; d += 1 }
+      norms(i) = math.sqrt(acc)
+    }
+
+    /** Offers every admitted pair (i < j) to `sink` exactly once. */
+    def scorePairs(sink: BlockSink[_]): Unit = {
+      // locals, so the loop need not reload fields after each `accept`
+      val ids = this.ids; val labels = this.labels; val roles = this.roles
+      val vs = this.vs; val norms = this.norms; val n = this.n
+      val same = sameLabel.contains(true)
       var i = 0
       while (i < n) {
         val a = vs(i)
         var j = i + 1
         while (j < n) {
-          if (ids(i) != ids(j) && (roles == null || roles(i) != roles(j))) {
+          if (ids(i) != ids(j) && (roles == null || roles(i) != roles(j)) &&
+              (labels == null || (labels(i) == labels(j)) == same)) {
             val b = vs(j)
             if (a.length != b.length) throw new IllegalArgumentException(
               s"vector_dot: mismatched lengths ${a.length} vs ${b.length}")
@@ -353,85 +453,70 @@ object VectorSearch {
               dot += a(d).toDouble * b(d).toDouble
               d += 1
             }
-            val cos = dot / (norms(i) * norms(j))
-            val r4 = Round4.halfUp(cos)
-            // Spark's `>=` on doubles ranks NaN greatest — mirror it
-            if (java.lang.Double.compare(r4, threshold) >= 0) {
-              out += (if (ids(i) < ids(j)) (ids(i), ids(j), r4)
-                else (ids(j), ids(i), r4))
-            }
+            sink.accept(i, j, Round4.halfUp(dot / (norms(i) * norms(j))))
           }
           j += 1
         }
         i += 1
       }
-      out.toSeq
     }
-    def unpack(m: Seq[(Long, Array[Float])])
-        : (Array[Long], Array[Array[Float]], Array[Double]) = {
-      val n = m.length
-      require(n <= cap, capMsg(n, cap))
-      val ids = new Array[Long](n)
-      val vs = new Array[Array[Float]](n)
-      val norms = new Array[Double](n)
-      var i = 0
-      m.foreach { case (id, v) =>
-        ids(i) = id
-        vs(i) = v
-        var acc = 0.0
-        var d = 0
-        while (d < v.length) { val x = v(d).toDouble; acc += x * x; d += 1 }
-        norms(i) = math.sqrt(acc)
-        i += 1
+  }
+
+  /** A block's sink state: `accept` sees each admitted pair (member
+    * indices, round-4 cosine) once; `rows` emits the survivors after.
+    */
+  private abstract class BlockSink[T] {
+    def accept(i: Int, j: Int, cos: Double): Unit
+    def rows: Iterator[T]
+  }
+
+  /** Pairs at cosine ≥ `threshold` as (id_a, id_b, cosine), id_a < id_b. */
+  private final class ThresholdSink(b: CellBlock, threshold: Double)
+      extends BlockSink[(Long, Long, Double)] {
+    private val out =
+      scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+    def accept(i: Int, j: Int, cos: Double): Unit =
+      if (java.lang.Double.compare(cos, threshold) >= 0) {
+        out += (if (b.ids(i) < b.ids(j)) (b.ids(i), b.ids(j), cos)
+          else (b.ids(j), b.ids(i), cos))
       }
-      (ids, vs, norms)
+    def rows: Iterator[(Long, Long, Double)] = out.iterator
+  }
+
+  /** Each member's top-`k` neighbors under the window's (round-4 cosine
+    * DESC, nbr ASC) total order, kept best-first; k is small (5-16), so
+    * O(k) insertion beats heap constant factors. Each pair is offered to
+    * both ends. `emit(src, nbr, cosine)` takes member indices.
+    */
+  private final class TopKSink[T](
+      b: CellBlock, k: Int, emit: (Int, Int, Double) => T)
+      extends BlockSink[T] {
+    private val tkCos = Array.ofDim[Double](b.n, k)
+    private val tkNbr = Array.ofDim[Int](b.n, k)
+    private val tkLen = new Array[Int](b.n)
+    private def beats(c1: Double, n1: Int, c2: Double, n2: Int): Boolean = {
+      val cmp = java.lang.Double.compare(c1, c2)
+      if (cmp != 0) cmp > 0 else b.ids(n1) < b.ids(n2)
     }
-    val raw =
-      if (salts == 1) {
-        val grouped = assignedIn
-          .groupBy(col("cell"))
-          .agg(collect_list(struct(col("vec_id").as("_1"),
-            col("embedding").as("_2"))).as("m"))
-          .select(col("m").as[Seq[(Long, Array[Float])]])
-        grouped.flatMap { m =>
-          val (ids, vs, norms) = unpack(m)
-          pairLoop(ids, vs, norms, null)
-        }.toDF("id_a", "id_b", "cosine")
-      } else {
-        // salted block pairing: member x (salt sx) replicates to every
-        // block (min(sx,t), max(sx,t)) for t in 0..S-1, tagged with its
-        // role (whether it is the block's i-side). Each unordered pair
-        // {x, y} is scored exactly once: same salt → the (s, s) diagonal
-        // block (one copy each, roles equal → admit i < j); different
-        // salts → the (min, max) block, cross-role only.
-        val withBlock = assignedIn
-          .withColumn("_s", pmod(xxhash64(col("vec_id")), lit(salts)).cast("int"))
-          .select(col("cell"), col("vec_id"), col("embedding"), col("_s"),
-            explode(sequence(lit(0), lit(salts - 1))).as("_t"))
-          .select(col("cell"),
-            least(col("_s"), col("_t")).as("_i"),
-            greatest(col("_s"), col("_t")).as("_j"),
-            (col("_s") <= col("_t")).as("_role"),
-            col("vec_id"), col("embedding"))
-        val grouped = withBlock
-          .groupBy(col("cell"), col("_i"), col("_j"))
-          .agg(collect_list(struct(col("vec_id").as("_1"),
-            col("embedding").as("_2"), col("_role").as("_3"))).as("m"))
-          .select((col("_i") === col("_j")).as("_1"), col("m").as("_2"))
-          .as[(Boolean, Seq[(Long, Array[Float], Boolean)])]
-        grouped.flatMap { case (diagonal, mm) =>
-          val (ids, vs, norms) = unpack(mm.map(t => (t._1, t._2)))
-          // the diagonal block holds one copy per member (role constant
-          // true) — admit all i < j; off-diagonal admits cross-role only
-          val roles = if (diagonal) null else mm.map(_._3).toArray
-          pairLoop(ids, vs, norms, roles)
-        }.toDF("id_a", "id_b", "cosine")
+    private def offer(at: Int, cos: Double, nbr: Int): Unit = {
+      val len = tkLen(at)
+      val cs = tkCos(at)
+      val ns = tkNbr(at)
+      if (len == k && !beats(cos, nbr, cs(len - 1), ns(len - 1))) return
+      var p = if (len == k) len - 1 else len
+      while (p > 0 && beats(cos, nbr, cs(p - 1), ns(p - 1))) {
+        cs(p) = cs(p - 1); ns(p) = ns(p - 1); p -= 1
       }
-    // dedup = false skips the final distinct for callers that feed the
-    // pairs straight into ConnectedComponents, whose symmetric-closure
-    // distinct subsumes it — one pair-set exchange saved per composite
-    // (r19); callers that EMIT the pairs keep the dedup.
-    if (dedup) raw.distinct() else raw
+      cs(p) = cos; ns(p) = nbr
+      if (len < k) tkLen(at) = len + 1
+    }
+    def accept(i: Int, j: Int, cos: Double): Unit = {
+      offer(i, cos, j)
+      offer(j, cos, i)
+    }
+    def rows: Iterator[T] = (0 until b.n).iterator.flatMap { at =>
+      (0 until tkLen(at)).iterator.map(p => emit(at, tkNbr(at)(p), tkCos(at)(p)))
+    }
   }
 
   /** Two-level IMI (inverted multi-index) coarse quantization (r13) —
@@ -681,7 +766,11 @@ object VectorSearch {
       imiAssignCellsMp(vectors, cb1, cb2, half, cap, margin), threshold,
       dedup)
 
-  /** [[imiKnnGraph]] over margin-gated symmetric multi-probe cells. */
+  /** [[knnGraph]] over IMI product cells (the q151 production chain),
+    * margin-gated symmetric multi-probe: the assignment strategy is
+    * orthogonal to the two-stage top-k, exactly as [[imiDedupPairsMp]]'s
+    * is to the pairing.
+    */
   def imiKnnGraphMp(
       vectors: DataFrame, cb1: Seq[(Int, Seq[Double])],
       cb2: Seq[(Int, Seq[Double])], half: Int, cap: Int, margin: Double,
@@ -724,32 +813,18 @@ object VectorSearch {
     * than k co-members yield fewer than k edges. Cell count is the scale
     * knob, exactly as in [[semanticDedupPairs]].
     *
-    * Two-stage top-k, exact: a neighbor in a src's GLOBAL top-k must be
-    * in the per-cell top-k of every cell it shares with src (anything
-    * ranked above it there is also above it globally), so stage 1 keeps
-    * the per-(src, cell) top-k — a window whose clustering is already
-    * satisfied by the join's hash partitioning on cell, i.e. a local
-    * sort with NO extra exchange over the full candidate set — and only
-    * the ≤ nAssign·k survivors per src reach the dedup + global re-rank.
-    * The full candidate set (n·nAssign·avg-cell-size rows) is scored and
-    * locally ranked exactly once and never shuffled again; the ranking
-    * order (cosine DESC rounded to 4, nbr ASC) is total per src, so
-    * multi-cell duplicates rank identically and dedup cannot disturb it.
+    * Two-stage top-k, exact (see [[cellKernel]]): stage 1 keeps each
+    * src's top-k per cell block inside the kernel, so the full candidate
+    * set (n·nAssign·avg-cell-size pairs) is scored exactly once and never
+    * shuffled; only the ≤ blocks·k survivors per src reach the dedup +
+    * global re-rank. The ranking order (cosine DESC rounded to 4, nbr
+    * ASC) is total per src, so multi-cell duplicates rank identically and
+    * dedup cannot disturb it.
     */
   def knnGraph(
       vectors: DataFrame, cents: Seq[(Int, Seq[Double])],
       nAssign: Int, k: Int): DataFrame =
     knnWithinCells(assignCells(vectors, cents, nAssign), k)
-
-  /** [[knnGraph]] over IMI product cells (the q151 production chain):
-    * assignment strategy is orthogonal to the two-stage top-k, exactly
-    * as [[imiDedupPairs]] is to [[semanticDedupPairs]].
-    */
-  def imiKnnGraph(
-      vectors: DataFrame, cb1: Seq[(Int, Seq[Double])],
-      cb2: Seq[(Int, Seq[Double])], half: Int, aProbe: Int,
-      k: Int): DataFrame =
-    knnWithinCells(imiAssignCells(vectors, cb1, cb2, half, aProbe), k)
 
   /** PROBE-ONLY top-k against a PERSISTED product-cell-bucketed index
     * (r14; r15 margin probe) — [[ivfTopKIndexed]] with the IMI coarse
@@ -796,149 +871,17 @@ object VectorSearch {
   }
 
   /** The per-cell/rank half of [[knnGraph]], shared with the IMI variant:
-    * expects one row per (cell, vec_id, embedding) assignment.
-    *
-    * GROUPED BLOCK KERNEL (r19, same class as [[pairsWithinCells]]'s r16
-    * fix): the old formulation self-joined the assignment table on `cell`
-    * and ranked per (cell, src) with a window — at the frozen q115/q129
-    * dial (k=8 cells, nAssign=3) the candidate space is ~9n²/8, and the
-    * join materialized every candidate row carrying BOTH 64-float vectors
-    * through the join operator plus an m²-row window sort (measured: ONE
-    * 26.7 task-seconds stage at sf0.1, 1.4 s of it GC — the row plumbing,
-    * not the ~2·10⁸ flops, which are well under a second of machine
-    * work). Here each cell's members are collected once (bounded: cell
-    * occupancy is held by the corpus-scaled codebook), every unordered
-    * pair is scored ONCE (the join scored both directions), and each
-    * member keeps a bounded (cosine DESC, nbr ASC) top-k — O(m·k) state,
-    * never the m² candidate rows. Arithmetic is BIT-IDENTICAL to the
-    * join tree: dot = Σ (double)aᵢ·bᵢ left-to-right (VectorDotF's loop,
-    * symmetric in its operands), norms = √Σx² (VectorL2Norm), cosine =
-    * round(dot/(na·nb), 4) on the HALF_UP lattice, and the selection
-    * order replays the window's (round-4 cosine DESC, nbr ASC) total
-    * order with java.lang.Double.compare — NaN ranks first, exactly like
-    * Spark's DESC sort (VectorSearchSpec pins kernel ≡ join formulation
-    * on every declared dial). The global re-rank stays declarative: only
-    * the ≤ nAssign·k survivors per src reach it, as before.
+    * the top-k sink of [[cellKernel]] plus the global re-rank, which only
+    * the ≤ blocks·k survivors per src reach.
     */
   private def knnWithinCells(assignedIn: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val s = assignedIn.sparkSession
     import s.implicits._
     val w = Window.partitionBy(col("src"))
       .orderBy(col("cosine").desc, col("nbr").asc)
-    val cap = maxKernelRows(s)
-    val grouped = assignedIn
-      .groupBy(col("cell"))
-      .agg(collect_list(struct(col("vec_id").as("_1"),
-        col("embedding").as("_2"))).as("m"))
-      .select(col("m").as[Seq[(Long, Array[Float])]])
-    grouped.flatMap { m =>
-      require(m.length <= cap, capMsg(m.length, cap))
-      knnBlock(m, k) }
+    cellKernel(assignedIn, sameLabel = None)(b =>
+        new TopKSink(b, k, (src, nbr, cos) => (b.ids(src), b.ids(nbr), cos)))
       .toDF("src", "nbr", "cosine")
-      .distinct()
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-  }
-
-  /** One cell's per-member top-`k` — the block kernel of
-    * [[knnWithinCells]]. Selection state per member is a best-first
-    * insertion list of ≤ k (cosine, nbr) entries under the window's
-    * (round-4 cosine DESC, nbr ASC) total order; each unordered pair is
-    * scored once and offered to both ends.
-    */
-  private[graft] def knnBlock(
-      m: Seq[(Long, Array[Float])], k: Int): Iterator[(Long, Long, Double)] = {
-    val n = m.length
-    val ids = new Array[Long](n)
-    val vs = new Array[Array[Float]](n)
-    val norms = new Array[Double](n)
-    var i = 0
-    m.foreach { case (id, v) =>
-      ids(i) = id
-      vs(i) = v
-      var acc = 0.0
-      var d = 0
-      while (d < v.length) { val x = v(d).toDouble; acc += x * x; d += 1 }
-      norms(i) = math.sqrt(acc)
-      i += 1
-    }
-    // per-member bounded top-k, kept sorted best-first; k is small
-    // (5-16), so O(k) insertion beats heap constant factors
-    val tkCos = Array.ofDim[Double](n, k)
-    val tkNbr = Array.ofDim[Long](n, k)
-    val tkLen = new Array[Int](n)
-    // the window's total order: round-4 cosine DESC (NaN greatest, like
-    // Spark's DESC on doubles), nbr ASC
-    def beats(c1: Double, n1: Long, c2: Double, n2: Long): Boolean = {
-      val cmp = java.lang.Double.compare(c1, c2)
-      if (cmp != 0) cmp > 0 else n1 < n2
-    }
-    def offer(at: Int, cos: Double, nbr: Long): Unit = {
-      val len = tkLen(at)
-      val cs = tkCos(at)
-      val ns = tkNbr(at)
-      if (len == k && !beats(cos, nbr, cs(len - 1), ns(len - 1))) return
-      var p = if (len == k) len - 1 else len
-      while (p > 0 && beats(cos, nbr, cs(p - 1), ns(p - 1))) {
-        cs(p) = cs(p - 1); ns(p) = ns(p - 1); p -= 1
-      }
-      cs(p) = cos; ns(p) = nbr
-      if (len < k) tkLen(at) = len + 1
-    }
-    i = 0
-    while (i < n) {
-      val a = vs(i)
-      var j = i + 1
-      while (j < n) {
-        if (ids(i) != ids(j)) {
-          val b = vs(j)
-          if (a.length != b.length) throw new IllegalArgumentException(
-            s"vector_dot: mismatched lengths ${a.length} vs ${b.length}")
-          var dot = 0.0
-          var d = 0
-          while (d < a.length) {
-            dot += a(d).toDouble * b(d).toDouble
-            d += 1
-          }
-          val cos = dot / (norms(i) * norms(j))
-          val r4 = Round4.halfUp(cos)
-          offer(i, r4, ids(j))
-          offer(j, r4, ids(i))
-        }
-        j += 1
-      }
-      i += 1
-    }
-    (0 until n).iterator.flatMap { at =>
-      (0 until tkLen(at)).iterator.map(p => (ids(at), tkNbr(at)(p), tkCos(at)(p)))
-    }
-  }
-
-  /** The pre-r19 cell self-join + per-(cell, src) window formulation,
-    * kept as the spec's reference semantics for [[knnWithinCells]]' block
-    * kernel (one definition, test-only consumer).
-    */
-  private[graft] def knnWithinCellsJoin(assignedIn: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val assigned = assignedIn
-      .select(col("cell"), col("vec_id"), col("embedding"),
-        NE.vectorL2Norm(col("embedding")).as("nrm"))
-    val a = assigned.select(col("cell").as("cell_a"),
-      col("vec_id").as("src"), col("embedding").as("va"), col("nrm").as("na"))
-    val b = assigned.select(col("cell").as("cell_b"),
-      col("vec_id").as("nbr"), col("embedding").as("vb"), col("nrm").as("nb"))
-    val wCell = Window.partitionBy(col("cell_a"), col("src"))
-      .orderBy(col("cosine").desc, col("nbr").asc)
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("cosine").desc, col("nbr").asc)
-    a.join(b, col("cell_a") === col("cell_b") && col("src") =!= col("nbr"))
-      .select(col("cell_a"), col("src"), col("nbr"),
-        round(NE.vectorDot(col("va"), col("vb"))
-          / (col("na") * col("nb")), 4).as("cosine"))
-      .withColumn("rc", row_number().over(wCell))
-      .filter(col("rc") <= k)
-      .select(col("src"), col("nbr"), col("cosine"))
       .distinct()
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
@@ -950,13 +893,10 @@ object VectorSearch {
     * pass of contrastive embedding training (the negatives that sit
     * closest to the anchor are the informative ones); structurally it is
     * [[knnGraph]] with the label carried through and the mismatch
-    * predicate applied IN the cell join, so the per-(cell, src) top-k
-    * window ranks only different-label candidates and the two-stage
-    * exactness argument holds unchanged: a global top-k negative must be
-    * in the per-cell top-k of every shared cell, the per-cell window
-    * rides the join's hash partitioning on cell with no extra exchange,
-    * and only ≤ nAssign·k survivors per anchor reach the global re-rank.
-    * Cell count is the scale knob exactly as in [[semanticDedupPairs]].
+    * predicate as the kernel's admit rule, so each block's top-k ranks
+    * only different-label candidates and the two-stage exactness
+    * argument holds unchanged. Cell count is the scale knob exactly as
+    * in [[semanticDedupPairs]].
     *
     * Input must carry (vec_id, embedding, label); output is
     * (src, rnk, nbr, nbr_label, cosine) with the (cosine DESC rounded to
@@ -970,19 +910,14 @@ object VectorSearch {
   /** Generalization of [[hardNegatives]]: top-`k` highest-cosine
     * neighbors with the SAME label (`sameLabel = true` — the positives
     * of a triplet-mining pass) or a DIFFERENT label (`false` — hard
-    * negatives). The label predicate lives IN the cell join in both
-    * cases, so the two-stage top-k exactness argument is unchanged.
+    * negatives). The label predicate is [[cellKernel]]'s admit rule, so
+    * the two-stage top-k exactness argument is unchanged.
     */
   def labelNeighbors(
       vectors: DataFrame, cents: Seq[(Int, Seq[Double])],
       nAssign: Int, k: Int, sameLabel: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // grouped block kernel (r19): [[knnWithinCells]]' per-cell top-k with
-    // the label predicate applied inside the pair loop — the same rows
-    // the old cell self-join + window produced (the predicate lived IN
-    // the join), without materializing the m² candidate rows. The label
-    // rides as a long through the kernel and is cast back to its source
-    // type on the way out, so the output schema is unchanged.
+    // the label rides as a long through the kernel and is cast back to
+    // its source type on the way out, so the output schema is unchanged
     val s = vectors.sparkSession
     import s.implicits._
     val labelType = vectors.schema("label").dataType
@@ -991,19 +926,11 @@ object VectorSearch {
       s"labelNeighbors kernel carries labels as LONG; got " +
         s"${labelType.simpleString} — widen the kernel rather than let a " +
         "lossy cast produce silently wrong neighbors")
-    val assigned = assignCells(vectors, cents, nAssign)
     val w = Window.partitionBy(col("src"))
       .orderBy(col("cosine").desc, col("nbr").asc)
-    val grouped = assigned
-      .groupBy(col("cell"))
-      .agg(collect_list(struct(col("vec_id").as("_1"),
-        col("label").cast("long").as("_2"),
-        col("embedding").as("_3"))).as("m"))
-      .select(col("m").as[Seq[(Long, Long, Array[Float])]])
-    val cap = maxKernelRows(s)
-    grouped.flatMap { m =>
-      require(m.length <= cap, capMsg(m.length, cap))
-      labelKnnBlock(m, k, sameLabel) }
+    cellKernel(assignCells(vectors, cents, nAssign), Some(sameLabel))(b =>
+        new TopKSink(b, k, (src, nbr, cos) =>
+          (b.ids(src), b.ids(nbr), b.labels(nbr), cos)))
       .toDF("src", "nbr", "nbr_label", "cosine")
       .distinct()
       .withColumn("rnk", row_number().over(w))
@@ -1011,119 +938,6 @@ object VectorSearch {
       .withColumn("nbr_label", col("nbr_label").cast(labelType))
       .select(col("src"), col("nbr"), col("nbr_label"), col("cosine"),
         col("rnk"))
-  }
-
-  /** One cell's per-member label-filtered top-`k` — [[knnBlock]] with the
-    * same/different-label predicate applied per pair (both directions
-    * share one dot product; the predicate is symmetric for `!=` and `==`
-    * alike).
-    */
-  private[graft] def labelKnnBlock(
-      m: Seq[(Long, Long, Array[Float])], k: Int, sameLabel: Boolean)
-      : Iterator[(Long, Long, Long, Double)] = {
-    val n = m.length
-    val ids = new Array[Long](n)
-    val labels = new Array[Long](n)
-    val vs = new Array[Array[Float]](n)
-    val norms = new Array[Double](n)
-    var i = 0
-    m.foreach { case (id, lab, v) =>
-      ids(i) = id
-      labels(i) = lab
-      vs(i) = v
-      var acc = 0.0
-      var d = 0
-      while (d < v.length) { val x = v(d).toDouble; acc += x * x; d += 1 }
-      norms(i) = math.sqrt(acc)
-      i += 1
-    }
-    val tkCos = Array.ofDim[Double](n, k)
-    val tkNbr = Array.ofDim[Long](n, k)
-    val tkLab = Array.ofDim[Long](n, k)
-    val tkLen = new Array[Int](n)
-    def beats(c1: Double, n1: Long, c2: Double, n2: Long): Boolean = {
-      val cmp = java.lang.Double.compare(c1, c2)
-      if (cmp != 0) cmp > 0 else n1 < n2
-    }
-    def offer(at: Int, cos: Double, nbr: Long, lab: Long): Unit = {
-      val len = tkLen(at)
-      val cs = tkCos(at)
-      val ns = tkNbr(at)
-      val ls = tkLab(at)
-      if (len == k && !beats(cos, nbr, cs(len - 1), ns(len - 1))) return
-      var p = if (len == k) len - 1 else len
-      while (p > 0 && beats(cos, nbr, cs(p - 1), ns(p - 1))) {
-        cs(p) = cs(p - 1); ns(p) = ns(p - 1); ls(p) = ls(p - 1); p -= 1
-      }
-      cs(p) = cos; ns(p) = nbr; ls(p) = lab
-      if (len < k) tkLen(at) = len + 1
-    }
-    i = 0
-    while (i < n) {
-      val a = vs(i)
-      var j = i + 1
-      while (j < n) {
-        val labelOk =
-          if (sameLabel) labels(i) == labels(j) else labels(i) != labels(j)
-        if (labelOk && ids(i) != ids(j)) {
-          val b = vs(j)
-          if (a.length != b.length) throw new IllegalArgumentException(
-            s"vector_dot: mismatched lengths ${a.length} vs ${b.length}")
-          var dot = 0.0
-          var d = 0
-          while (d < a.length) {
-            dot += a(d).toDouble * b(d).toDouble
-            d += 1
-          }
-          val cos = dot / (norms(i) * norms(j))
-          val r4 = Round4.halfUp(cos)
-          offer(i, r4, ids(j), labels(j))
-          offer(j, r4, ids(i), labels(i))
-        }
-        j += 1
-      }
-      i += 1
-    }
-    (0 until n).iterator.flatMap { at =>
-      (0 until tkLen(at)).iterator.map(p =>
-        (ids(at), tkNbr(at)(p), tkLab(at)(p), tkCos(at)(p)))
-    }
-  }
-
-  /** The pre-r19 join + window formulation of [[labelNeighbors]], kept as
-    * the spec's reference semantics (test-only consumer).
-    */
-  private[graft] def labelNeighborsJoin(
-      vectors: DataFrame, cents: Seq[(Int, Seq[Double])],
-      nAssign: Int, k: Int, sameLabel: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val assigned = assignCells(vectors, cents, nAssign)
-      .select(col("cell"), col("vec_id"), col("label"), col("embedding"),
-        NE.vectorL2Norm(col("embedding")).as("nrm"))
-    val a = assigned.select(col("cell").as("cell_a"),
-      col("vec_id").as("src"), col("label").as("la"),
-      col("embedding").as("va"), col("nrm").as("na"))
-    val b = assigned.select(col("cell").as("cell_b"),
-      col("vec_id").as("nbr"), col("label").as("nbr_label"),
-      col("embedding").as("vb"), col("nrm").as("nb"))
-    val labelPred =
-      if (sameLabel) col("la") === col("nbr_label")
-      else col("la") =!= col("nbr_label")
-    val wCell = Window.partitionBy(col("cell_a"), col("src"))
-      .orderBy(col("cosine").desc, col("nbr").asc)
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("cosine").desc, col("nbr").asc)
-    a.join(b, col("cell_a") === col("cell_b") &&
-        col("src") =!= col("nbr") && labelPred)
-      .select(col("cell_a"), col("src"), col("nbr"), col("nbr_label"),
-        round(NE.vectorDot(col("va"), col("vb"))
-          / (col("na") * col("nb")), 4).as("cosine"))
-      .withColumn("rc", row_number().over(wCell))
-      .filter(col("rc") <= k)
-      .select(col("src"), col("nbr"), col("nbr_label"), col("cosine"))
-      .distinct()
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
   }
 
   /** IVF search against a PERSISTED index table (vec_id, embedding, cell)

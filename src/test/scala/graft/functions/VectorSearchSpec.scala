@@ -1,6 +1,8 @@
 package graft.functions
 
 import graft.SparkSpec
+import graft.functions.{NativeExpressions => NE}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** LSH ANN quality: recall of the bucketed search against brute force on
@@ -8,11 +10,124 @@ import org.apache.spark.sql.functions._
   */
 class VectorSearchSpec extends SparkSpec {
 
-  private lazy val emb =
+  private lazy val labelled =
     spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
+      .select(col("vec_id"), col("embedding"), col("label"))
+
+  private lazy val emb = labelled.select(col("vec_id"), col("embedding"))
 
   private lazy val probes = emb.filter(col("vec_id") < 10)
+
+  /** A one-centroid codebook: every vector lands in ONE cell — the
+    * pathological hot cell the salt dial exists for (a corpus-scaled
+    * codebook cannot spread near-identical vectors).
+    */
+  private val oneCell = Seq((0, Seq.fill(64)(1.0)))
+
+  private def withSalts[T](salts: Int)(body: => T): T = {
+    spark.conf.set("graft.cell.salts", salts.toString)
+    try body finally spark.conf.unset("graft.cell.salts")
+  }
+
+  private def knnRows(df: DataFrame): Set[(Long, Long, Double, Int)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+      r.getInt(3))).toSet
+
+  private def labelRows(df: DataFrame): Set[(Long, Long, Long, Double, Int)] =
+    df.select(col("src"), col("nbr"), col("nbr_label").cast("long"),
+        col("cosine"), col("rnk"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3), r.getInt(4))).toSet
+
+  /** The pre-r16 declarative cell self-join, verbatim: the reference
+    * semantics for the cell kernel's threshold sink (pairsWithinCells).
+    */
+  private def pairsWithinCellsJoin(
+      assigned: DataFrame, threshold: Double): Set[(Long, Long, Double)] = {
+    val withNorm = assigned.select(col("cell"), col("vec_id"),
+      col("embedding"), NE.vectorL2Norm(col("embedding")).as("nrm"))
+    val a = withNorm.select(col("cell").as("cell_a"),
+      col("vec_id").as("id_a"), col("embedding").as("va"),
+      col("nrm").as("na"))
+    val b = withNorm.select(col("cell").as("cell_b"),
+      col("vec_id").as("id_b"), col("embedding").as("vb"),
+      col("nrm").as("nb"))
+    a.join(b,
+        col("cell_a") === col("cell_b") && col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"),
+        round(NE.vectorDot(col("va"), col("vb"))
+          / (col("na") * col("nb")), 4).as("cosine"))
+      .filter(col("cosine") >= threshold)
+      .distinct()
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .toSet
+  }
+
+  /** The pre-r19 cell self-join + per-(cell, src) window formulation,
+    * the reference semantics for the cell kernel's top-k sink
+    * (VectorSearch.knnGraph).
+    */
+  private def knnWithinCellsJoin(assignedIn: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val assigned = assignedIn
+      .select(col("cell"), col("vec_id"), col("embedding"),
+        NE.vectorL2Norm(col("embedding")).as("nrm"))
+    val a = assigned.select(col("cell").as("cell_a"),
+      col("vec_id").as("src"), col("embedding").as("va"), col("nrm").as("na"))
+    val b = assigned.select(col("cell").as("cell_b"),
+      col("vec_id").as("nbr"), col("embedding").as("vb"), col("nrm").as("nb"))
+    val wCell = Window.partitionBy(col("cell_a"), col("src"))
+      .orderBy(col("cosine").desc, col("nbr").asc)
+    val w = Window.partitionBy(col("src"))
+      .orderBy(col("cosine").desc, col("nbr").asc)
+    a.join(b, col("cell_a") === col("cell_b") && col("src") =!= col("nbr"))
+      .select(col("cell_a"), col("src"), col("nbr"),
+        round(NE.vectorDot(col("va"), col("vb"))
+          / (col("na") * col("nb")), 4).as("cosine"))
+      .withColumn("rc", row_number().over(wCell))
+      .filter(col("rc") <= k)
+      .select(col("src"), col("nbr"), col("cosine"))
+      .distinct()
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+  }
+
+  /** The pre-r19 join + window formulation of
+    * VectorSearch.labelNeighbors, the reference semantics for the cell
+    * kernel's label-admitting top-k sink.
+    */
+  private def labelNeighborsJoin(
+      vectors: DataFrame, cents: Seq[(Int, Seq[Double])],
+      nAssign: Int, k: Int, sameLabel: Boolean): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val assigned = VectorSearch.assignCells(vectors, cents, nAssign)
+      .select(col("cell"), col("vec_id"), col("label"), col("embedding"),
+        NE.vectorL2Norm(col("embedding")).as("nrm"))
+    val a = assigned.select(col("cell").as("cell_a"),
+      col("vec_id").as("src"), col("label").as("la"),
+      col("embedding").as("va"), col("nrm").as("na"))
+    val b = assigned.select(col("cell").as("cell_b"),
+      col("vec_id").as("nbr"), col("label").as("nbr_label"),
+      col("embedding").as("vb"), col("nrm").as("nb"))
+    val labelPred =
+      if (sameLabel) col("la") === col("nbr_label")
+      else col("la") =!= col("nbr_label")
+    val wCell = Window.partitionBy(col("cell_a"), col("src"))
+      .orderBy(col("cosine").desc, col("nbr").asc)
+    val w = Window.partitionBy(col("src"))
+      .orderBy(col("cosine").desc, col("nbr").asc)
+    a.join(b, col("cell_a") === col("cell_b") &&
+        col("src") =!= col("nbr") && labelPred)
+      .select(col("cell_a"), col("src"), col("nbr"), col("nbr_label"),
+        round(NE.vectorDot(col("va"), col("vb"))
+          / (col("na") * col("nb")), 4).as("cosine"))
+      .withColumn("rc", row_number().over(wCell))
+      .filter(col("rc") <= k)
+      .select(col("src"), col("nbr"), col("nbr_label"), col("cosine"))
+      .distinct()
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+  }
 
   test("native VectorDotF/L2Norm agree with the higher-order-function path") {
     import graft.functions.{NativeExpressions => NE, VectorFunctions => VF}
@@ -378,7 +493,6 @@ class VectorSearchSpec extends SparkSpec {
   }
 
   test("q115 knn graph: sound per-edge cosines, bounded degree, and decent recall vs brute top-5") {
-    import graft.functions.{NativeExpressions => NE}
     val dir = "/root/testdata/sf0.001"
     val g = graft.Queries.byName("q115_knn_graph").build(spark, dir).cache()
     // degree bounded by k, ranks contiguous from 1, no self-edges
@@ -450,18 +564,13 @@ class VectorSearchSpec extends SparkSpec {
     // the r19 grouped kernel must reproduce the pre-r19 cell self-join +
     // (cell, src) window EXACTLY — same rows, same round-4 cosines, same
     // ranks — on both the flat and the IMI assignment, both k dials
-    val full = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val cents = VectorSearch.trainIvfCodebook(full, k = 8, iters = 3,
+    val cents = VectorSearch.trainIvfCodebook(emb, k = 8, iters = 3,
       sampleBuckets = 3)
     for (k <- Seq(3, 5)) {
-      val kernel = VectorSearch.knnGraph(full, cents, nAssign = 3, k = k)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-          r.getInt(3))).toSet
-      val join = VectorSearch.knnWithinCellsJoin(
-          VectorSearch.assignCells(full, cents, nAssign = 3), k = k)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-          r.getInt(3))).toSet
+      val kernel = knnRows(VectorSearch.knnGraph(emb, cents, nAssign = 3,
+        k = k))
+      val join = knnRows(knnWithinCellsJoin(
+        VectorSearch.assignCells(emb, cents, nAssign = 3), k = k))
       assert(kernel == join,
         s"k=$k: kernel diverged on ${(kernel diff join).size} + " +
           s"${(join diff kernel).size} edges")
@@ -469,24 +578,13 @@ class VectorSearchSpec extends SparkSpec {
   }
 
   test("label-knn block kernel == join + per-cell window formulation (r19)") {
-    val full = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"), col("label"))
-    val cents = VectorSearch.trainIvfCodebook(
-      full.select(col("vec_id"), col("embedding")), k = 8, iters = 3,
+    val cents = VectorSearch.trainIvfCodebook(emb, k = 8, iters = 3,
       sampleBuckets = 3)
     for (sameLabel <- Seq(false, true)) {
-      val kernel = VectorSearch.labelNeighbors(full, cents, nAssign = 2,
-          k = 3, sameLabel = sameLabel)
-        .select(col("src"), col("nbr"), col("nbr_label").cast("long"),
-          col("cosine"), col("rnk"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getDouble(3), r.getInt(4))).toSet
-      val join = VectorSearch.labelNeighborsJoin(full, cents, nAssign = 2,
-          k = 3, sameLabel = sameLabel)
-        .select(col("src"), col("nbr"), col("nbr_label").cast("long"),
-          col("cosine"), col("rnk"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getDouble(3), r.getInt(4))).toSet
+      val kernel = labelRows(VectorSearch.labelNeighbors(labelled, cents,
+        nAssign = 2, k = 3, sameLabel = sameLabel))
+      val join = labelRows(labelNeighborsJoin(labelled, cents,
+        nAssign = 2, k = 3, sameLabel = sameLabel))
       assert(kernel == join,
         s"sameLabel=$sameLabel: kernel diverged on " +
           s"${(kernel diff join).size} + ${(join diff kernel).size} edges")
@@ -502,7 +600,6 @@ class VectorSearchSpec extends SparkSpec {
     // random-similarity noise floor of this synthetic corpus (max
     // pairwise cosine 0.51), where pairs straddle cells the most; real
     // semantic dedup runs at thresholds where pairs co-cell.
-    import graft.functions.{NativeExpressions => NE}
     val cents = VectorSearch.trainIvfCodebook(emb, k = 32, iters = 3)
     val assigned = VectorSearch.assignCells(emb, cents, nAssign = 2)
       .select(col("cell"), col("vec_id"), col("embedding"))
@@ -536,7 +633,6 @@ class VectorSearchSpec extends SparkSpec {
 
   test("q179 hard negatives: every edge crosses labels, cosines exact, " +
       "recall vs brute different-label top-3") {
-    import graft.functions.{NativeExpressions => NE}
     val dir = "/root/testdata/sf0.001"
     val hn = graft.Queries.byName("q179_hard_negatives").build(spark, dir)
       .cache()
@@ -748,24 +844,7 @@ class VectorSearchSpec extends SparkSpec {
     val got = VectorSearch.pairsWithinCells(assigned, 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
-    // the pre-r16 declarative formulation, verbatim
-    val withNorm = assigned.select(col("cell"), col("vec_id"),
-      col("embedding"), NE.vectorL2Norm(col("embedding")).as("nrm"))
-    val a = withNorm.select(col("cell").as("cell_a"),
-      col("vec_id").as("id_a"), col("embedding").as("va"),
-      col("nrm").as("na"))
-    val b = withNorm.select(col("cell").as("cell_b"),
-      col("vec_id").as("id_b"), col("embedding").as("vb"),
-      col("nrm").as("nb"))
-    val want = a.join(b,
-        col("cell_a") === col("cell_b") && col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(NE.vectorDot(col("va"), col("vb"))
-          / (col("na") * col("nb")), 4).as("cosine"))
-      .filter(col("cosine") >= 0.4)
-      .distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
+    val want = pairsWithinCellsJoin(assigned, 0.4)
     assert(want.nonEmpty, "pin needs live pairs")
     assert(got == want,
       s"grouped kernel diverged: ${got.size} vs ${want.size} pairs, " +
@@ -774,56 +853,83 @@ class VectorSearchSpec extends SparkSpec {
 
   test("salted block pairing == unsalted kernel == join, one-hot-cell " +
       "skew fixture (r20 skew guard)") {
-    import graft.functions.{NativeExpressions => NE}
-    // every vector lands in ONE cell — the pathological hot cell the
-    // salt dial exists for (a corpus-scaled codebook cannot spread
-    // near-identical vectors)
-    val assigned = emb.limit(300).withColumn("cell", lit(0))
-    def run(salts: Int): Set[(Long, Long, Double)] = {
-      spark.conf.set("graft.cell.salts", salts.toString)
-      try VectorSearch.pairsWithinCells(assigned, 0.4)
+    // every sink of the cell kernel — threshold pairs, kNN, and label-kNN
+    // admitting same and different labels — must give its join
+    // reference's answer on the one hot cell at every salt factor
+    val hot = labelled.limit(300)
+    val assigned = hot.select(col("vec_id"), col("embedding"))
+      .withColumn("cell", lit(0))
+    val pairsWant = pairsWithinCellsJoin(assigned, 0.4)
+    val knnWant = knnRows(knnWithinCellsJoin(
+      VectorSearch.assignCells(hot, oneCell, nAssign = 1), k = 5))
+    val labelWant = Seq(false, true).map(same => same -> labelRows(
+      labelNeighborsJoin(hot, oneCell, nAssign = 1, k = 3, sameLabel = same)))
+    assert(pairsWant.nonEmpty, "skew pin needs live pairs")
+    assert(knnWant.size == 300 * 5, "every member needs k neighbors")
+    Seq(1, 2, 3, 7).foreach { sNum => withSalts(sNum) {
+      val pairs = VectorSearch.pairsWithinCells(assigned, 0.4)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSet
-      finally spark.conf.unset("graft.cell.salts")
-    }
-    val unsalted = run(1)
-    // the declarative join reference, verbatim (the r16 pin's formulation)
-    val withNorm = assigned.select(col("cell"), col("vec_id"),
-      col("embedding"), NE.vectorL2Norm(col("embedding")).as("nrm"))
-    val a = withNorm.select(col("cell").as("cell_a"),
-      col("vec_id").as("id_a"), col("embedding").as("va"),
-      col("nrm").as("na"))
-    val b = withNorm.select(col("cell").as("cell_b"),
-      col("vec_id").as("id_b"), col("embedding").as("vb"),
-      col("nrm").as("nb"))
-    val want = a.join(b,
-        col("cell_a") === col("cell_b") && col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(NE.vectorDot(col("va"), col("vb"))
-          / (col("na") * col("nb")), 4).as("cosine"))
-      .filter(col("cosine") >= 0.4)
-      .distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    assert(want.nonEmpty, "skew pin needs live pairs")
-    assert(unsalted == want, "unsalted kernel diverged from the join")
-    Seq(2, 3, 7).foreach { sNum =>
-      val salted = run(sNum)
-      assert(salted == want,
-        s"salts=$sNum diverged: ${salted.size} vs ${want.size}, " +
-          s"extra=${(salted -- want).take(3)} missing=${(want -- salted).take(3)}")
-    }
+      assert(pairs == pairsWant,
+        s"pairs, salts=$sNum diverged: ${pairs.size} vs ${pairsWant.size}, " +
+          s"extra=${(pairs -- pairsWant).take(3)} " +
+          s"missing=${(pairsWant -- pairs).take(3)}")
+      val knn = knnRows(VectorSearch.knnGraph(hot.select(col("vec_id"),
+        col("embedding")), oneCell, nAssign = 1, k = 5))
+      assert(knn == knnWant,
+        s"knn, salts=$sNum diverged: extra=${(knn -- knnWant).take(3)} " +
+          s"missing=${(knnWant -- knn).take(3)}")
+      labelWant.foreach { case (same, want) =>
+        val got = labelRows(VectorSearch.labelNeighbors(hot, oneCell,
+          nAssign = 1, k = 3, sameLabel = same))
+        assert(want.nonEmpty && got == want,
+          s"label-knn sameLabel=$same, salts=$sNum diverged: " +
+            s"extra=${(got -- want).take(3)} missing=${(want -- got).take(3)}")
+      }
+    } }
   }
 
   test("kernel cap fails loudly on an oversized cell block (r20)") {
-    val assigned = emb.limit(50).withColumn("cell", lit(0))
-    spark.conf.set("graft.cell.maxKernelRows", "10")
-    try {
-      val e = intercept[org.apache.spark.SparkException] {
-        VectorSearch.pairsWithinCells(assigned, 0.4).collect()
-      }
+    // every sink checks the cap, and its message names the remedy
+    val hot = labelled.limit(50)
+    def loud(run: => Any): Unit = {
+      val e = intercept[org.apache.spark.SparkException](run)
       assert(e.getMessage.contains("graft.cell.maxKernelRows") ||
         String.valueOf(e.getCause).contains("graft.cell.maxKernelRows"))
+    }
+    spark.conf.set("graft.cell.maxKernelRows", "10")
+    try {
+      loud(VectorSearch.pairsWithinCells(hot.select(col("vec_id"),
+        col("embedding")).withColumn("cell", lit(0)), 0.4).collect())
+      loud(VectorSearch.knnGraph(hot.select(col("vec_id"), col("embedding")),
+        oneCell, nAssign = 1, k = 5).collect())
+      Seq(false, true).foreach { same =>
+        loud(VectorSearch.labelNeighbors(hot, oneCell, nAssign = 1, k = 3,
+          sameLabel = same).collect())
+      }
+    } finally spark.conf.unset("graft.cell.maxKernelRows")
+  }
+
+  test("salts rescue the top-k sinks from a hot cell over the kernel cap") {
+    // 40 rows in one cell exceed a cap of 30 at S = 1; at S = 7 a block
+    // holds only two salts' members, so kNN and label-kNN complete with
+    // their join reference's answer
+    val hot = labelled.limit(40)
+    val vecs = hot.select(col("vec_id"), col("embedding"))
+    spark.conf.set("graft.cell.maxKernelRows", "30")
+    try {
+      intercept[org.apache.spark.SparkException](
+        VectorSearch.knnGraph(vecs, oneCell, nAssign = 1, k = 5).collect())
+      withSalts(7) {
+        assert(knnRows(VectorSearch.knnGraph(vecs, oneCell, nAssign = 1,
+            k = 5)) ==
+          knnRows(knnWithinCellsJoin(
+            VectorSearch.assignCells(vecs, oneCell, nAssign = 1), k = 5)))
+        assert(labelRows(VectorSearch.labelNeighbors(hot, oneCell,
+            nAssign = 1, k = 3, sameLabel = false)) ==
+          labelRows(labelNeighborsJoin(hot, oneCell, nAssign = 1, k = 3,
+            sameLabel = false)))
+      }
     } finally spark.conf.unset("graft.cell.maxKernelRows")
   }
 
@@ -855,7 +961,6 @@ class VectorSearchSpec extends SparkSpec {
 
   test("codebook plan size is O(1) in k: kernels carry reference objects, " +
       "not per-centroid literals (r16, VERDICT r15 #3)") {
-    import graft.functions.{NativeExpressions => NE}
     def planLen(k: Int): Int = {
       val cents = (0 until k).map(i => (i, Seq.tabulate(8)(d =>
         (i * 8 + d + 1).toDouble / (k * 8))))
