@@ -147,11 +147,13 @@ object AnnIndex {
     * writes six tables whose jobs share no state: issuing them from a
     * small pool lets the tiny codebook/params writes back-fill executor
     * slots freed by the big bucketed writes' tails, and the per-write
-    * driver commit tails overlap instead of summing. Exceptions
-    * propagate with their original cause; the pool never outlives the
-    * call.
+    * driver commit tails overlap instead of summing. A failure never cuts
+    * a sibling short (an interrupt could land mid-commit): every job runs
+    * to its end, then the first failure in `work` order is rethrown with
+    * the others attached as suppressed. The pool is shut down before the
+    * call returns.
     */
-  private def inParallel(work: Seq[() => Unit]): Unit = {
+  private[functions] def inParallel(work: Seq[() => Unit]): Unit = {
     if (work.isEmpty) return
     if (work.size == 1) { work.head(); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
@@ -159,13 +161,17 @@ object AnnIndex {
       val futs = work.map(w => pool.submit(new java.util.concurrent.Callable[Unit] {
         override def call(): Unit = w()
       }))
-      futs.foreach { f =>
-        try f.get()
+      val failures = futs.flatMap { f =>
+        try { f.get(); None }
         catch {
-          case e: java.util.concurrent.ExecutionException => throw e.getCause
+          case e: java.util.concurrent.ExecutionException => Some(e.getCause)
         }
       }
-    } finally pool.shutdownNow()
+      failures.headOption.foreach { first =>
+        failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      }
+    } finally pool.shutdown()
   }
 
   private def md5hex(s: String): String =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over a candidate-pair edge list — the
@@ -33,11 +33,7 @@ import org.apache.spark.sql.functions._
   * lineage's blocks on EXECUTORS — losing an executor mid-run loses
   * blocks that can no longer be recomputed, failing the job. That is the
   * right default for an iterative job whose rounds are minutes (rerun on
-  * failure); for very long runs on preemptible fleets, pass
-  * `reliableCheckpoints = true` to write each round's labels to the
-  * cluster checkpoint dir (`sc.setCheckpointDir` must point at durable
-  * shared storage, e.g. an HDFS/object-store path) — survivable, at the
-  * cost of a distributed-FS write per round.
+  * failure).
   */
 object ConnectedComponents {
 
@@ -50,164 +46,101 @@ object ConnectedComponents {
     * @param maxIter safety bound on propagation rounds; the algorithm
     *               throws if it has not converged by then (a converged
     *               result is exact, never approximate)
-    * @param reliableCheckpoints write per-round label snapshots to the
-    *               reliable checkpoint dir instead of executor-local
-    *               blocks (see class doc); requires `sc.setCheckpointDir`
     * @return (node LONG, component LONG) — component is the MINIMUM node
     *         id reachable from `node`; one row per distinct node that
     *         appears in `edges`
     */
-  /** Evaluate `f` with AQE disabled, restoring the previous setting.
-    * Used around the one-time materialization of loop-static relations:
-    * with AQE on, `localCheckpoint` captures UnknownPartitioning (the
-    * adaptive plan's partitioning is not final at capture time — measured
-    * r20), so every round's join silently re-exchanged the edge set the
-    * r19 repartition-once fix thought it had pinned. Checkpointing the
-    * static side under a non-adaptive plan preserves its HashPartitioning
-    * into the LogicalRDD, and the AQE-on round joins then exchange only
-    * the label/rank vector.
-    */
-  private[operators] def withAqeOff[T](
-      s: org.apache.spark.sql.SparkSession)(f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try f finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
-  /** Partition count for a materialized loop-static relation: derived
-    * from its ROW COUNT, never from spark.sql.shuffle.partitions — the
-    * fixed-partitioning checkpoint is outside AQE, so sizing it at the
-    * session's shuffle width would pin every subsequent round to (e.g.)
-    * 32-task stages however tiny the graph is (measured r20: q129 +1.2 s
-    * at sf0.1 from exactly that), while at 100 TB the same constant
-    * would under-partition. Rows are narrow (8-50 B edge/label tuples),
-    * so the default 2M rows/partition lands partitions in the guide's
-    * tens-of-MB band; override via `graft.iter.rowsPerPartition`.
-    */
-  private[operators] def sizedPartitions(
-      s: org.apache.spark.sql.SparkSession, rows: Long): Int = {
-    val perPart = s.conf.getOption("graft.iter.rowsPerPartition")
-      .map(_.toLong).getOrElse(2000000L)
-    math.max(1L, math.min(Int.MaxValue.toLong,
-      (rows + perPart - 1) / perPart)).toInt
-  }
-
   def run(
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 30, reliableCheckpoints: Boolean = false): DataFrame = {
+      maxIter: Int = 30): DataFrame = {
     require(maxIter > 0, s"maxIter must be positive, got $maxIter")
-    def snap(df: DataFrame): DataFrame =
-      if (reliableCheckpoints) df.checkpoint(true) else df.localCheckpoint(true)
     val e = edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-    // symmetric closure, deduped once up front: every round reuses it.
-    // r20, three pieces:
-    //  - ONE pass over the edge pipeline: the old e.union(e.reversed)
-    //    planned the upstream candidate generation TWICE (union branches
-    //    are separate subtrees; only exchanges are reused, and the pair
-    //    kernels sit above their exchange), so every composite paid its
-    //    pair-verify kernel twice. A per-row explode to (a,b)+(b,a)
-    //    evaluates the pipeline once, materialized as `raw`.
-    //  - SIZE-DERIVED partitioning: `raw`'s materialized row count picks
-    //    the partition count (sizedPartitions — scale-adaptive, never the
-    //    session shuffle width).
-    //  - AQE-OFF final checkpoint: the repartition lands BELOW the
-    //    distinct (hashpartitioning(b) already co-locates equal (a,b)
-    //    rows, so the distinct reuses that one exchange), and with AQE
-    //    off the LogicalRDD keeps hashpartitioning(b, n) — every round's
-    //    neighbor join then exchanges only the label vector, never the
-    //    edge set (guide §2.4; with AQE on the checkpoint captured
-    //    UnknownPartitioning and the r19 repartition was silently void).
-    val raw = e.select(explode(array(
-        struct(col("a"), col("b")),
-        struct(col("b").as("a"), col("a").as("b")))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
-      .localCheckpoint(true)
-    val nParts = sizedPartitions(edges.sparkSession, raw.count())
-    val und = withAqeOff(edges.sparkSession) {
-      snap(raw.repartition(nParts, col("b")).distinct())
-    }
-    // the one-pass staging checkpoint is retired the moment `und`
-    // materializes; freeing it NOW (not at the next GC) keeps retired
-    // blocks from piling onto whatever runs next (r20 — the async
-    // ContextCleaner was stealing time from neighboring queries)
-    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(raw)
-
-    // r20: labels seed at the FIRST round's neighbor minimum instead of
-    // the identity — min(Γ(node) ∪ {node}) is one aggregation over `und`
-    // that reuses its hashpartitioning(b) (zero exchanges, cheaper than
-    // the old distinct-node scan), and the descent starts one round
-    // further along. The fixpoint is unchanged: labels still start ≤
-    // node, descend monotonically, and the convergence check certifies
-    // the same stable point (every label equal to the min over
-    // Γ(node) ∪ {node}); only the round count moves. The oracle replays
-    // a recursive-CTE closure, not the schedule.
-    var labels = withAqeOff(edges.sparkSession) {
-      snap(und.groupBy(col("b"))
+    // the symmetric closure, deduped once and pinned on b (see LoopStatic).
+    // One explode to (a,b)+(b,a) evaluates the upstream pipeline once (a
+    // self-union would plan it twice), and the distinct reuses the
+    // repartition's exchange: hashpartitioning(b) co-locates equal rows.
+    val (und, _) = LoopStatic.pin(
+      e.select(explode(array(
+          struct(col("a"), col("b")),
+          struct(col("b").as("a"), col("a").as("b")))).as("p"))
+        .select(col("p.a").as("a"), col("p.b").as("b")),
+      "b", _.distinct())
+    try {
+      // labels seed at the FIRST round's neighbor minimum instead of the
+      // identity — min(Γ(node) ∪ {node}) is one aggregation over `und`
+      // that reuses its hashpartitioning(b) (zero exchanges, cheaper than
+      // the old distinct-node scan), and the descent starts one round
+      // further along. The fixpoint is unchanged: labels still start ≤
+      // node, descend monotonically, and the convergence check certifies
+      // the same stable point (every label equal to the min over
+      // Γ(node) ∪ {node}); only the round count moves. The oracle replays
+      // a recursive-CTE closure, not the schedule.
+      var labels = GraftSqlBridge.checkpointNonAdaptive(und.groupBy(col("b"))
         .agg(least(min(col("a")), col("b")).as("lbl"))
         .select(col("b").as("node"), col("lbl")))
-    }
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      iter += 1
-      // 1) neighbor min + previous-label carry in ONE keyed aggregation:
-      // the labels set contributes its own (lbl, prev=lbl) row and each
-      // undirected edge contributes the neighbor's label with a null
-      // prev, so min(lbl) is the minimum over Γ(node) ∪ {node} and
-      // max(prev) recovers the node's previous label (exactly one
-      // non-null per group). The r6 shape computed the same thing as a
-      // groupBy FOLLOWED BY a left join back to labels — two shuffles
-      // where this needs one; at test scale the loop is pure per-round
-      // scheduling overhead, so the extra exchange was ~30% of q93.
-      // (Convergence is still read off the same materialized result —
-      // the r5 double-action fix is preserved.)
-      val nbr = und
-        .join(labels.select(col("node").as("b"), col("lbl")), "b")
-        .select(col("a").as("node"), col("lbl"),
-          lit(null).cast("long").as("prev"))
-      val afterNbr = labels
-        .select(col("node"), col("lbl"), col("lbl").as("prev"))
-        .union(nbr)
-        .groupBy(col("node"))
-        .agg(min(col("lbl")).as("lbl"), max(col("prev")).as("prev"))
-      // 2) pointer jump: labels are themselves node ids, so resolve one
-      // level of indirection. r19: jump through the PREVIOUS round's
-      // MATERIALIZED labels (lbl := labels_t(lbl)) instead of
-      // self-joining afterNbr — the self-join evaluated the whole
-      // union+agg subtree twice per round; the stale map is free
-      // (checkpointed blocks) and still only ever maps a label to a
-      // smaller id of the same component (labels_t(x) <= x and labels
-      // start at the identity), so monotone convergence to the
-      // component minimum — the property the convergence check below
-      // certifies — is untouched; only the number of rounds to get
-      // there can differ, and the converged fixpoint (every label equal
-      // to the min over Γ(node) ∪ {node}) is the same. The oracle
-      // replays a recursive-CTE closure, not the round schedule, so
-      // declared results cannot move.
-      val stepped = snap(afterNbr
-        .join(
-          labels.select(col("node").as("pn"), col("lbl").as("pl")),
-          col("lbl") === col("pn"), "left")
-        .select(col("node"), col("prev"),
-          coalesce(col("pl"), col("lbl")).as("lbl")))
-      // the eager checkpoint above already ran the round's join/agg work;
-      // this filter only scans the materialized label blocks (take(1),
-      // short-circuits on the first changed row)
-      converged = stepped.filter(col("lbl") =!= col("prev")).isEmpty
-      // round t's labels are dead once `stepped` is materialized and
-      // checked — free the blocks eagerly (see the staging unpersist)
-      org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(labels)
-      labels = stepped.select(col("node"), col("lbl"))
-    }
-    require(converged,
-      s"connected components did not converge within $maxIter rounds")
-    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(und)
-    labels.select(col("node"), col("lbl").as("component"))
+      try {
+        var converged = false
+        var iter = 0
+        while (!converged && iter < maxIter) {
+          iter += 1
+          // 1) neighbor min + previous-label carry in ONE keyed aggregation:
+          // the labels set contributes its own (lbl, prev=lbl) row and each
+          // undirected edge contributes the neighbor's label with a null
+          // prev, so min(lbl) is the minimum over Γ(node) ∪ {node} and
+          // max(prev) recovers the node's previous label (exactly one
+          // non-null per group). A groupBy FOLLOWED BY a left join back to
+          // labels computes the same thing in two shuffles where this needs
+          // one; at test scale the loop is pure per-round scheduling
+          // overhead, so the extra exchange was ~30% of q93. (Convergence
+          // is read off the same materialized result, so no round runs
+          // twice.)
+          val nbr = und
+            .join(labels.select(col("node").as("b"), col("lbl")), "b")
+            .select(col("a").as("node"), col("lbl"),
+              lit(null).cast("long").as("prev"))
+          val afterNbr = labels
+            .select(col("node"), col("lbl"), col("lbl").as("prev"))
+            .union(nbr)
+            .groupBy(col("node"))
+            .agg(min(col("lbl")).as("lbl"), max(col("prev")).as("prev"))
+          // 2) pointer jump: labels are themselves node ids, so resolve one
+          // level of indirection. Jump through the PREVIOUS round's
+          // MATERIALIZED labels (lbl := labels_t(lbl)) instead of
+          // self-joining afterNbr — the self-join evaluated the whole
+          // union+agg subtree twice per round; the stale map is free
+          // (checkpointed blocks) and still only ever maps a label to a
+          // smaller id of the same component (labels_t(x) <= x and labels
+          // start at the identity), so monotone convergence to the
+          // component minimum — the property the convergence check below
+          // certifies — is untouched; only the number of rounds to get
+          // there can differ, and the converged fixpoint (every label equal
+          // to the min over Γ(node) ∪ {node}) is the same. The oracle
+          // replays a recursive-CTE closure, not the round schedule, so
+          // declared results cannot move.
+          val stepped = afterNbr
+            .join(
+              labels.select(col("node").as("pn"), col("lbl").as("pl")),
+              col("lbl") === col("pn"), "left")
+            .select(col("node"), col("prev"),
+              coalesce(col("pl"), col("lbl")).as("lbl"))
+            .localCheckpoint()
+          // the eager checkpoint above already ran the round's join/agg work;
+          // this filter only scans the materialized label blocks (take(1),
+          // short-circuits on the first changed row)
+          converged = stepped.filter(col("lbl") =!= col("prev")).isEmpty
+          // round t's labels are dead once `stepped` is materialized and
+          // checked — free the blocks eagerly
+          GraftSqlBridge.unpersistCheckpoint(labels)
+          labels = stepped.select(col("node"), col("lbl"))
+        }
+        require(converged,
+          s"connected components did not converge within $maxIter rounds")
+      } catch {
+        case t: Throwable => GraftSqlBridge.unpersistCheckpoint(labels); throw t
+      }
+      labels.select(col("node"), col("lbl").as("component"))
+    } finally GraftSqlBridge.unpersistCheckpoint(und)
   }
 }

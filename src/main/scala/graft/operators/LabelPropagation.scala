@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** Synchronous label propagation (Raghavan, Albert, Kumara 2007) over a
@@ -42,49 +42,43 @@ object LabelPropagation {
     */
   def run(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    // r19: hash-partition the symmetric edge set by src ONCE before
-    // materializing. r20: one explode pass instead of a self-union (the
-    // union planned the upstream edge pipeline twice — only exchanges are
-    // reused across branches), and the checkpoint runs under AQE-off so
-    // the LogicalRDD actually carries hashpartitioning(src) (with AQE on
-    // it captured UnknownPartitioning and every round re-exchanged the
-    // edge set — measured r20; guide §2.4).
-    val rawBidir = edges.select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("p"))
-      .select(col("p.src").as("src"), col("p.dst").as("dst"))
-      .localCheckpoint()
-    // size-derived fixed partitioning (see ConnectedComponents.
-    // sizedPartitions): rounds reuse it; only the label vector exchanges
-    val bidir = ConnectedComponents.withAqeOff(nodes.sparkSession) {
-      rawBidir.repartition(
-          ConnectedComponents.sizedPartitions(nodes.sparkSession,
-            rawBidir.count()), col("src"))
+    // the symmetric edge set, pinned on src (see LoopStatic): rounds reuse
+    // its partitioning and only the label vector exchanges. One explode
+    // pass, not a self-union: a union plans the upstream edge pipeline
+    // twice (only exchanges are reused across branches).
+    val (bidir, _) = LoopStatic.pin(
+      edges.select(explode(array(
+          struct(col("src"), col("dst")),
+          struct(col("dst").as("src"), col("src").as("dst")))).as("p"))
+        .select(col("p.src").as("src"), col("p.dst").as("dst")),
+      "src")
+    try {
+      var labels = nodes.select(col("node"), col("node").as("label"))
         .localCheckpoint()
-    }
-    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(rawBidir)
-    var labels = nodes.select(col("node"), col("node").as("label"))
-      .localCheckpoint()
-    for (_ <- 0 until iters) {
-      val counts = bidir
-        .join(labels.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-      // argmax by (cnt desc, label asc) without a window: lexicographic
-      // struct min on (-cnt, label) rides the same dst partitioning
-      val winner = counts
-        .groupBy(col("dst"))
-        .agg(min(struct((col("cnt") * -1).as("nc"), col("label"))).as("w"))
-        .select(col("dst").as("node"), col("w.label").as("newLabel"))
-      val next = labels.join(winner, Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("newLabel"), col("label")).as("label"))
-        .localCheckpoint()
-      // round t's labels are dead once round t+1 is materialized (r20)
-      org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(labels)
-      labels = next
-    }
-    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(bidir)
-    labels
+      try {
+        for (_ <- 0 until iters) {
+          val counts = bidir
+            .join(labels.withColumnRenamed("node", "src"), "src")
+            .groupBy(col("dst"), col("label"))
+            .agg(count(lit(1)).as("cnt"))
+          // argmax by (cnt desc, label asc) without a window: lexicographic
+          // struct min on (-cnt, label) rides the same dst partitioning
+          val winner = counts
+            .groupBy(col("dst"))
+            .agg(min(struct((col("cnt") * -1).as("nc"), col("label"))).as("w"))
+            .select(col("dst").as("node"), col("w.label").as("newLabel"))
+          val next = labels.join(winner, Seq("node"), "left")
+            .select(col("node"),
+              coalesce(col("newLabel"), col("label")).as("label"))
+            .localCheckpoint()
+          // round t's labels are dead once round t+1 is materialized
+          GraftSqlBridge.unpersistCheckpoint(labels)
+          labels = next
+        }
+      } catch {
+        case t: Throwable => GraftSqlBridge.unpersistCheckpoint(labels); throw t
+      }
+      labels
+    } finally GraftSqlBridge.unpersistCheckpoint(bidir)
   }
 }

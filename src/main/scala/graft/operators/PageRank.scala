@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions.{abs, coalesce, col, count, lit, round, sum}
 
 /** Result of a [[PageRank.run]]: the rank vector and how many iterations
@@ -49,129 +49,105 @@ object PageRank {
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     def lattice(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       roundDecimals.fold(c)(d => round(c, d))
-    // r19: join outdeg into the edge set ONCE and hash-partition it by
-    // src before materializing. r20: the materialization runs under
-    // AQE-off (ConnectedComponents.withAqeOff) — with AQE on,
-    // localCheckpoint captured UnknownPartitioning and every iteration's
-    // contribution join silently re-exchanged the edge set; now the
-    // LogicalRDD carries hashpartitioning(src) and only the N-row rank
-    // vector is exchanged per round (guide §2.4 — the edge set is the
-    // big side and it never changes).
-    import ConnectedComponents.{withAqeOff, sizedPartitions}
-    val s = nodes.sparkSession
-    // two-step: materialize the deg-joined edge set once under the
-    // adaptive planner (one pass), size the fixed partitioning from its
-    // actual row count (scale-adaptive — a session-width constant would
-    // pin every round to 32-task stages at gate scale and under-
-    // partition at 100 TB), then pin hashpartitioning(src, n) with an
-    // AQE-off checkpoint the round joins can actually see.
-    val rawEdges = edges
-      .join(edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src")
-      .localCheckpoint()
-    val nE = sizedPartitions(s, rawEdges.count())
-    val edgesWithDeg = withAqeOff(s) {
-      rawEdges.repartition(nE, col("src")).localCheckpoint()
-    }
-    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(rawEdges)
-    // the node set is re-read every round (left join) — materialize it
-    // once, partitioned on the join key. When dangling mass is
-    // redistributed, the set carries a has_out flag (computed ONCE by a
-    // node-keyed join against the distinct sources) so the per-round
-    // dangling aggregate is a bare filter+sum over the materialized rank
-    // vector — no per-round anti-join, and no broadcast of a
-    // node-cardinality relation (the r19 shape broadcast srcNodes every
-    // round: at 100 TB graph scale that is a driver OOM).
-    val rawNodes = (
-      if (!redistributeDangling) nodes
-      else nodes.join(
-          edgesWithDeg.select(col("src").as("node")).distinct()
-            .withColumn("has_out", lit(true)),
-          Seq("node"), "left")
-        .select(col("node"), coalesce(col("has_out"), lit(false)).as("has_out"))
-    ).localCheckpoint()
-    val nodeCount = rawNodes.count()
-    require(nodeCount > 0, "empty node set")
-    val nodeSet = withAqeOff(s) {
-      rawNodes.repartition(sizedPartitions(s, nodeCount), col("node"))
-        .localCheckpoint()
-    }
-    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(rawNodes)
-    val n = nodeCount.toDouble
-    var pr = nodeSet
-      .select(col("node") +: lattice(lit(1.0 / n)).as("pr") +:
-        (if (redistributeDangling) Seq(col("has_out")) else Nil): _*)
-      .localCheckpoint()
-    var it = 0
-    var done = false
-    while (it < maxIters && !done) {
-      // dangling mass: one tiny filter+sum over the materialized N-row
-      // rank vector (nodes with no out-edges), collected as a scalar
-      val dangling =
-        if (!redistributeDangling) 0.0
-        else pr.filter(!col("has_out"))
-          .agg(coalesce(sum(col("pr")), lit(0.0))).collect()(0).getDouble(0)
-      // With a lattice, the per-edge contribution is put on an INTEGER
-      // e(d+4) lattice and summed as longs: floor(pr_eD · 1e4 / outdeg).
-      // A double sum of pr/outdeg is association-order-dependent, and a
-      // result within 1 ulp of a .5·10^-d boundary then rounds
-      // differently between engines (observed r14: one q151 node at
-      // sf0.1 flipped at 1e-8 when the edge set changed). The integer
-      // sum is exact in ANY order, and the SQL oracle replays the same
-      // integer division, so the straddle class is gone by construction.
-      // (The double intermediates are exact: pr_eD·1e4 ≤ 10^(d+4) and
-      // the floor of the correctly-rounded division cannot misround —
-      // a non-divisible quotient sits ≥ 1/outdeg below the next
-      // integer, orders of magnitude beyond 1 ulp at this scale.)
-      // the contribution join carries only (node, pr) of the rank vector
-      val prSlim = pr.select(col("node").as("src"), col("pr"))
-      val contrib = roundDecimals match {
-        case Some(d) =>
-          val unit = math.pow(10.0, d + 4)
-          edgesWithDeg
-            .join(prSlim, "src")
-            .groupBy(col("dst"))
-            .agg((sum(org.apache.spark.sql.functions.floor(
-                round(col("pr") * math.pow(10.0, d)) * lit(1e4)
-                  / col("outdeg")).cast("long")).cast("double") / lit(unit))
-              .as("m"))
-            .withColumnRenamed("dst", "node")
-        case None =>
-          edgesWithDeg
-            .join(prSlim, "src")
-            .groupBy(col("dst"))
-            .agg(sum(col("pr") / col("outdeg")).as("m"))
-            .withColumnRenamed("dst", "node")
-      }
-      val next = nodeSet
-        .join(contrib, Seq("node"), "left")
-        .select(col("node") +: lattice(
-          lit((1.0 - damping) / n)
-            + lit(damping) * (coalesce(col("m"), lit(0.0))
-              + lit(damping_dangling(dangling, n)))).as("pr") +:
-          (if (redistributeDangling) Seq(col("has_out")) else Nil): _*)
-        .localCheckpoint()
-      it += 1
-      if (tol > 0.0) {
-        // one more tiny agg: L1 delta of consecutive N-row rank vectors
-        val delta = next.select(col("node"), col("pr").as("pn"))
-          .join(pr.select(col("node"), col("pr")), Seq("node"))
-          .agg(coalesce(sum(abs(col("pn") - col("pr"))), lit(0.0)))
-          .collect()(0).getDouble(0)
-        done = delta < tol
-      }
-      // round t's rank vector is dead once `next` is materialized and
-      // the delta read — free its blocks eagerly (r20)
-      org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(pr)
-      pr = next
-    }
-    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(edgesWithDeg)
-    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(nodeSet)
-    PageRankResult(pr.select(col("node"), col("pr")), it)
+    // join outdeg into the edge set ONCE and pin it on src (see
+    // LoopStatic): every iteration's contribution join then exchanges only
+    // the N-row rank vector, never the edge set.
+    val (edgesWithDeg, _) = LoopStatic.pin(
+      edges.join(edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src"),
+      "src")
+    try {
+      // the node set is re-read every round (left join) — pin it too, on
+      // the join key. When dangling mass is redistributed, the set carries
+      // a has_out flag (computed ONCE by a node-keyed join against the
+      // distinct sources) so the per-round dangling aggregate is a bare
+      // filter+sum over the materialized rank vector — no per-round
+      // anti-join, and no broadcast of a node-cardinality relation (at
+      // 100 TB graph scale a per-round broadcast of the source nodes is a
+      // driver OOM).
+      val (nodeSet, nodeCount) = LoopStatic.pin(
+        if (!redistributeDangling) nodes
+        else nodes.join(
+            edgesWithDeg.select(col("src").as("node")).distinct()
+              .withColumn("has_out", lit(true)),
+            Seq("node"), "left")
+          .select(col("node"), coalesce(col("has_out"), lit(false)).as("has_out")),
+        "node")
+      try {
+        require(nodeCount > 0, "empty node set")
+        val n = nodeCount.toDouble
+        var pr = nodeSet
+          .select(col("node") +: lattice(lit(1.0 / n)).as("pr") +:
+            (if (redistributeDangling) Seq(col("has_out")) else Nil): _*)
+          .localCheckpoint()
+        var it = 0
+        var done = false
+        try {
+          while (it < maxIters && !done) {
+            // dangling mass: one tiny filter+sum over the materialized N-row
+            // rank vector (nodes with no out-edges), collected as a scalar
+            val dangling =
+              if (!redistributeDangling) 0.0
+              else pr.filter(!col("has_out"))
+                .agg(coalesce(sum(col("pr")), lit(0.0))).collect()(0).getDouble(0)
+            // With a lattice, the per-edge contribution is put on an INTEGER
+            // e(d+4) lattice and summed as longs: floor(pr_eD · 1e4 / outdeg).
+            // A double sum of pr/outdeg is association-order-dependent, and a
+            // result within 1 ulp of a .5·10^-d boundary then rounds
+            // differently between engines (observed: one q151 node at
+            // sf0.1 flipped at 1e-8 when the edge set changed). The integer
+            // sum is exact in ANY order, and the SQL oracle replays the same
+            // integer division, so the straddle class is gone by construction.
+            // (The double intermediates are exact: pr_eD·1e4 ≤ 10^(d+4) and
+            // the floor of the correctly-rounded division cannot misround —
+            // a non-divisible quotient sits ≥ 1/outdeg below the next
+            // integer, orders of magnitude beyond 1 ulp at this scale.)
+            // the contribution join carries only (node, pr) of the rank vector
+            val prSlim = pr.select(col("node").as("src"), col("pr"))
+            val contrib = roundDecimals match {
+              case Some(d) =>
+                val unit = math.pow(10.0, d + 4)
+                edgesWithDeg
+                  .join(prSlim, "src")
+                  .groupBy(col("dst"))
+                  .agg((sum(org.apache.spark.sql.functions.floor(
+                      round(col("pr") * math.pow(10.0, d)) * lit(1e4)
+                        / col("outdeg")).cast("long")).cast("double") / lit(unit))
+                    .as("m"))
+                  .withColumnRenamed("dst", "node")
+              case None =>
+                edgesWithDeg
+                  .join(prSlim, "src")
+                  .groupBy(col("dst"))
+                  .agg(sum(col("pr") / col("outdeg")).as("m"))
+                  .withColumnRenamed("dst", "node")
+            }
+            val next = nodeSet
+              .join(contrib, Seq("node"), "left")
+              .select(col("node") +: lattice(
+                lit((1.0 - damping) / n)
+                  + lit(damping) * (coalesce(col("m"), lit(0.0))
+                    + lit(dangling / n))).as("pr") +:
+                (if (redistributeDangling) Seq(col("has_out")) else Nil): _*)
+              .localCheckpoint()
+            it += 1
+            if (tol > 0.0) {
+              // one more tiny agg: L1 delta of consecutive N-row rank vectors
+              val delta = next.select(col("node"), col("pr").as("pn"))
+                .join(pr.select(col("node"), col("pr")), Seq("node"))
+                .agg(coalesce(sum(abs(col("pn") - col("pr"))), lit(0.0)))
+                .collect()(0).getDouble(0)
+              done = delta < tol
+            }
+            // round t's rank vector is dead once `next` is materialized and
+            // the delta read — free its blocks eagerly
+            GraftSqlBridge.unpersistCheckpoint(pr)
+            pr = next
+          }
+        } catch {
+          case t: Throwable => GraftSqlBridge.unpersistCheckpoint(pr); throw t
+        }
+        PageRankResult(pr.select(col("node"), col("pr")), it)
+      } finally GraftSqlBridge.unpersistCheckpoint(nodeSet)
+    } finally GraftSqlBridge.unpersistCheckpoint(edgesWithDeg)
   }
-
-  /** Per-node share of the redistributed dangling mass (0 when the
-    * option is off).
-    */
-  private def damping_dangling(danglingMass: Double, n: Double): Double =
-    danglingMass / n
 }

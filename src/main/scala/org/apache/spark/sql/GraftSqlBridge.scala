@@ -1,7 +1,11 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.classic.ClassicConversions._
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.internal.SQLConf
 
 /** Minimal bridge into `private[sql]` surface: Column <-> Expression
   * conversion, needed to expose native Catalyst expressions (e.g.
@@ -26,12 +30,30 @@ object GraftSqlBridge {
     * a later GC and the cleanup steals time from whatever query runs
     * NEXT (measured: queries following checkpoint-heavy ones drifted
     * +0.2–0.7 s). Unpersisting the retired round's RDD directly frees
-    * the blocks on the spot. No-op for plans that carry no LogicalRDD.
+    * the blocks on the spot. Only a bare checkpoint is accepted: a
+    * LogicalRDD, optionally under one Project. Any other plan may read
+    * checkpoints that are still live elsewhere, so it is rejected rather
+    * than having every LogicalRDD in it freed.
     */
   def unpersistCheckpoint(df: Dataset[_]): Unit =
-    df.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
-      case _ => ()
+    df.queryExecution.analyzed match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case Project(_, r: LogicalRDD) => r.rdd.unpersist(blocking = false)
+      case p => throw new IllegalArgumentException(
+        s"unpersistCheckpoint needs a bare checkpoint, got:\n$p")
     }
+
+  /** `df.localCheckpoint()` planned with AQE off, on a clone of `df`'s
+    * session, so the caller's session is never touched; the result is
+    * bound back to the caller's session. See `graft.operators.LoopStatic`
+    * for why loop-static relations are checkpointed this way.
+    */
+  def checkpointNonAdaptive(df: DataFrame): DataFrame = {
+    val parent = castToImpl(df.sparkSession)
+    val clone = parent.cloneSession()
+    clone.conf.set(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key, "false")
+    val cp = classic.Dataset.ofRows(clone, castToImpl(df).logicalPlan)
+      .localCheckpoint()
+    classic.Dataset.ofRows(parent, cp.logicalPlan)
+  }
 }

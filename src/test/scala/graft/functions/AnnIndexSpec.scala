@@ -691,4 +691,20 @@ class AnnIndexSpec extends SparkSpec {
     assert(spark.table(s"$db.vectors").count()
       == full.count() - m1.nTombstones)
   }
+
+  test("inParallel lets every sibling finish before rethrowing the first " +
+    "failure") {
+    // interrupting the pool on the first failure (shutdownNow) would cut
+    // the sleeper short before it sets its flag
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val boom = new IllegalStateException("boom")
+    val late = new IllegalStateException("late")
+    val e = intercept[IllegalStateException](AnnIndex.inParallel(Seq(
+      () => throw boom,
+      () => { Thread.sleep(300); done.set(true) },
+      () => { Thread.sleep(100); throw late })))
+    assert(e eq boom)
+    assert(done.get, "a sibling was cut short")
+    assert(e.getSuppressed.toSeq == Seq(late))
+  }
 }

@@ -33,14 +33,27 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("seeded random graphs equal brute-force union-find") {
+    // two graphs at a time, on two threads sharing one session
     val rng = new scala.util.Random(20260812L)
-    (1 to 8).foreach { _ =>
+    val graphs = (1 to 8).map { _ =>
       val n = 2 + rng.nextInt(40)
       val m = 1 + rng.nextInt(60)
-      val es = Seq.fill(m)((rng.nextInt(n).toLong, rng.nextInt(n).toLong))
+      Seq.fill(m)((rng.nextInt(n).toLong, rng.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
-      if (es.nonEmpty) assert(run(es) == unionFind(es), s"edges: $es")
-    }
+    }.filter(_.nonEmpty)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    try graphs.grouped(2).foreach { pair =>
+      val runs = pair.map(es => scala.concurrent.Future(run(es)))
+      pair.zip(runs).foreach { case (es, f) =>
+        val got = scala.concurrent.Await.result(f,
+          scala.concurrent.duration.Duration.Inf)
+        assert(got == unionFind(es), s"edges: $es")
+      }
+    } finally pool.shutdown()
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
+      "concurrent runs left the session's AQE flag changed")
   }
 
   test("long path (worst-case diameter) converges in O(log n) rounds") {
@@ -76,8 +89,13 @@ class ConnectedComponentsSpec extends SparkSpec {
 
   test("non-convergence within maxIter fails loudly") {
     val path = (0L until 50L).map(i => (i, i + 1))
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val e = intercept[IllegalArgumentException](run(path, maxIter = 1))
     assert(e.getMessage.contains("did not converge"))
+    // the failed run freed every checkpoint it made: the edge set and
+    // the last label vector
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty, s"checkpoints left behind: $leaked")
   }
 
   test("result plan size is constant in the iteration count (lineage cut)") {
