@@ -1,15 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Plan audit helper: dump formatted physical plans for selected queries. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession("4")
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>
       println(s"===== $name =====")

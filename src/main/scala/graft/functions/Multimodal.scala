@@ -920,45 +920,6 @@ object Multimodal {
     })
   }
 
-  /** [[audioFingerprint]] for clips of ARBITRARY length ≥ 64 samples:
-    * the clip is reduced to 64 window ENERGIES (sum of |sample| per
-    * contiguous window, nearest-boundary partition — the resizeImages
-    * convention), then delta-signed and band-packed identically. Energy
-    * sums scale linearly under gain, so the delta signs — and therefore
-    * the fingerprint — are invariant under any POSITIVE gain (offsets
-    * are not preserved through |·|, unlike the fixed-64 variant; the
-    * practical re-encode evasion is gain). A 64-sample clip reduces to
-    * per-sample |energies|, so this is the production face; q208's
-    * oracle-checked fixed-64 path stays the cross-engine contract.
-    */
-  def audioFingerprintWindowed(media: Dataset[MediaRow]): Dataset[AudioFp] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map { m =>
-      val (_, smp) = decodeWav(m.bytes)
-      val n = smp.length
-      require(n >= 64,
-        s"audioFingerprintWindowed needs >= 64 samples, got $n (id=${m.id})")
-      val en = new Array[Long](64)
-      var w = 0
-      while (w < 64) {
-        var i = w * n / 64
-        val end = (w + 1) * n / 64
-        var s = 0L
-        while (i < end) { s += math.abs(smp(i).toLong); i += 1 }
-        en(w) = s
-        w += 1
-      }
-      val bands = new Array[Int](4)
-      var i = 0
-      while (i < 64) {
-        val bit = if (i < 63) en(i + 1) > en(i) else en(0) > en(63)
-        if (bit) bands(i / 16) |= (1 << (i % 16))
-        i += 1
-      }
-      AudioFp(m.id, bands(0), bands(1), bands(2), bands(3))
-    })
-  }
-
   /** WIDE fingerprint — the widen-bands-with-n lever the q188/q208/q210
     * notes promise (r15, VERDICT r14 #7): with B = 4 bands the pigeonhole
     * radius stays 3, but the BAND SPACE grows from 2^16 to 2^(nBits/4),
@@ -970,9 +931,16 @@ object Multimodal {
     */
   final case class WideFp(id: Long, b0: Long, b1: Long, b2: Long, b3: Long)
 
-  /** [[audioFingerprintWindowed]] generalized to `nBits` energy windows
-    * (nBits divisible by 4, nBits/4 ≤ 64 — four Long bands): delta-sign
-    * bits over nBits windows, gain-invariant exactly as the 64-bit face.
+  /** [[audioFingerprint]] for clips of ARBITRARY length ≥ `nBits`
+    * samples (nBits divisible by 4, nBits/4 ≤ 64 — four Long bands): the
+    * clip is reduced to `nBits` window ENERGIES (sum of |sample| per
+    * contiguous window, nearest-boundary partition — the resizeImages
+    * convention), then delta-signed and band-packed. Energy sums scale
+    * linearly under gain, so the delta signs — and therefore the
+    * fingerprint — are invariant under any POSITIVE gain (offsets are not
+    * preserved through |·|, unlike the fixed-64 variant; the practical
+    * re-encode evasion is gain). q208's oracle-checked fixed-64 path
+    * stays the cross-engine contract.
     */
   def audioFingerprintWide(
       media: Dataset[MediaRow], nBits: Int): Dataset[WideFp] = {

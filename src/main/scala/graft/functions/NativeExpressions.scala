@@ -512,8 +512,8 @@ case class IvfTopCellsMargin(
   * training included) is replayed CTE-for-CTE by the DuckDB oracle
   * (q218). Recall loss vs the flat scan is only a vector whose true
   * top cell hides in an unprobed super — exactly the boundary case the
-  * super-level margin gate is there to catch; ScaleK's `assign` mode
-  * measures the residual.
+  * super-level margin gate is there to catch; BASELINE.md's r16
+  * two-level-descent row records the measured residual.
   */
 final class IvfHierRef(
     val superSids: Array[Int],

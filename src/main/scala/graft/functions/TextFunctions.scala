@@ -14,27 +14,19 @@ object TextFunctions {
 
   /** Whitespace-normalized, lowercased view of a text column — the
     * canonical form used by dedup and fingerprinting. r19: the
-    * single-pass byte kernel ([[TextKernels.normWs]]); semantics are the
-    * declarative form below, pinned bit-for-bit in TextKernelsSpec. */
+    * single-pass byte kernel ([[TextKernels.normWs]]); semantics are
+    * `lower(trim(regexp_replace(text, "\\s+", " ")))`, pinned
+    * bit-for-bit in TextKernelsSpec. */
   def normalizeText(text: Column): Column =
     org.apache.spark.sql.GraftSqlBridge.column(
       WsNormalize(org.apache.spark.sql.GraftSqlBridge.expression(text)))
 
-  /** The pre-r19 declarative form of [[normalizeText]] — the reference
-    * semantics (test-only consumer). */
-  private[graft] def normalizeTextDeclarative(text: Column): Column =
-    lower(trim(regexp_replace(text, "\\s+", " ")))
-
   /** Whitespace tokenization (the baseline tokenizer). r19: single-pass
     * byte kernel ([[TextKernels.wsTokens]]), pinned ≡ the declarative
-    * split in TextKernelsSpec. */
+    * `split(trim(text), "\\s+")` in TextKernelsSpec. */
   def tokens(text: Column): Column =
     org.apache.spark.sql.GraftSqlBridge.column(
       WsTokens(org.apache.spark.sql.GraftSqlBridge.expression(text)))
-
-  /** The pre-r19 declarative form of [[tokens]] (test-only consumer). */
-  private[graft] def tokensDeclarative(text: Column): Column =
-    split(trim(text), "\\s+")
 
   /** Token count. */
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")

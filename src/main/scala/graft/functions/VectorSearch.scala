@@ -598,11 +598,11 @@ object VectorSearch {
     * kHalf = max(4, ceil(sqrt(n / 64))) — product cells K = kHalf² grow
     * ∝ n, holding the average cell occupancy at ~64 vectors, so the
     * within-cell pair work Σ n_c² stays ~linear in n instead of the
-    * frozen-K n² blow-up. Reproduces the measured ScaleK imi curve
-    * (kHalf 6/18/56 at n = 2k/20k/200k; pairs 6.2 s at sf10). The same
-    * arithmetic is emitted into the DuckDB oracle by [[scaledKHalfSql]]
-    * — both engines run ceil(sqrt(x)) on IEEE doubles, so the derived k
-    * is identical by construction.
+    * frozen-K n² blow-up. Reproduces the measured imi curve frozen in
+    * BASELINE.md's r15 rows (kHalf 6/18/56 at n = 2k/20k/200k; pairs
+    * 6.2 s at sf10). The same arithmetic is emitted into the DuckDB
+    * oracle by [[scaledKHalfSql]] — both engines run ceil(sqrt(x)) on
+    * IEEE doubles, so the derived k is identical by construction.
     */
   def scaledKHalf(n: Long): Int =
     math.max(4, math.ceil(math.sqrt(n / 64.0)).toInt)
@@ -712,7 +712,7 @@ object VectorSearch {
     * super-centroid is the mean of ~√k cells, so similarities at the
     * super level are compressed toward each other and a same-width gate
     * under-probes — measured on the sf1 corpus at forced kHalf = 128
-    * (ScaleK assign mode): pair recall vs the flat scan is 86.0 % at
+    * (BASELINE.md r16 row): pair recall vs the flat scan is 86.0 % at
     * (cap, margin), 93.7 % at (1.5·cap, 1.5·margin) and 97.3 % at the
     * doubled gate, which still scans ~(2·cap·√k + √k) centroids per
     * vector — the asymptotics the descent exists for.

@@ -106,13 +106,15 @@ object CorpusOps {
        |  FROM s${r - 1}, m$r)""".stripMargin
 
   /** Train the 3 BPE merges on the full-corpus word-frequency table —
-    * q144's training loop, shared verbatim by q145 (per-doc apply) and
-    * q182 (per-lang fertility). One corpus pass builds the vocab-sized
-    * frequency table; each round is one agg + head() over that table
-    * (vocab-sized, never the corpus) and a narrow literal replace.
+    * the one training loop behind q144 (which returns the final
+    * `(t, n, seq)` table), q145 (per-doc apply) and q182 (per-lang
+    * fertility). One corpus pass builds the vocab-sized frequency table;
+    * each round is one agg + head() over that table (vocab-sized, never
+    * the corpus) and a narrow literal replace. Returns the merges in
+    * learned order and the table segmented by all of them.
     */
-  private def trainedBpeMerges(
-      s: SparkSession, dir: String): Seq[(String, String)] = {
+  private def trainBpe(
+      s: SparkSession, dir: String): (Seq[(String, String)], DataFrame) = {
     val wf = Tables.spread(s, docs(s, dir).select(col("text")))
       .select(explode(TF.tokens(TF.normalizeText(col("text")))).as("t"))
       .filter(col("t") =!= "")
@@ -120,7 +122,7 @@ object CorpusOps {
     var cur = wf
       .withColumn("seq", regexp_replace(col("t"), "(.)", "$1|"))
       .localCheckpoint()
-    (1 to 3).map { _ =>
+    val merges = (1 to 3).map { _ =>
       val syms = split(col("seq"), "\\|")
       val pairs = when(size(syms) >= 3,
           transform(sequence(lit(1), size(syms) - 2),
@@ -139,6 +141,7 @@ object CorpusOps {
         .localCheckpoint()
       (pair, merged)
     }
+    (merges, cur)
   }
 
   /** Subword count of one token under the learned merges — a pure
@@ -805,31 +808,7 @@ object CorpusOps {
            |${BpeRound("s2", 3)}
            |SELECT t AS token, CAST(n AS BIGINT) AS cnt, seq AS segmentation
            |FROM s3 ORDER BY token ASC""".stripMargin) { (s, dir) =>
-        val wf = Tables.spread(s, docs(s, dir).select(col("text")))
-          .select(explode(TF.tokens(TF.normalizeText(col("text")))).as("t"))
-          .filter(col("t") =!= "")
-          .groupBy(col("t")).agg(count(lit(1)).as("n"))
-        var cur = wf
-          .withColumn("seq", regexp_replace(col("t"), "(.)", "$1|"))
-          .localCheckpoint()
-        for (_ <- 1 to 3) {
-          val syms = split(col("seq"), "\\|")
-          val pairs = when(size(syms) >= 3,
-              transform(sequence(lit(1), size(syms) - 2),
-                i => concat(element_at(syms, i), lit("|"),
-                  element_at(syms, i + 1), lit("|"))))
-            .otherwise(array().cast("array<string>"))
-          val top = cur.select(col("n"), explode(pairs).as("pair"))
-            .groupBy(col("pair")).agg(sum(col("n")).as("cnt"))
-            .orderBy(col("cnt").desc, col("pair").asc)
-            .limit(1).head()
-          val pair = top.getString(0)
-          val merged = pair.replace("|", "") + "|"
-          cur = cur.withColumn("seq",
-            org.apache.spark.sql.functions.replace(
-              col("seq"), lit(pair), lit(merged)))
-            .localCheckpoint()
-        }
+        val (_, cur) = trainBpe(s, dir)
         cur.select(col("t").as("token"), col("n").cast("long").as("cnt"),
             col("seq").as("segmentation"))
           .orderBy(col("token").asc)
@@ -870,7 +849,7 @@ object CorpusOps {
          |      m1.pair, m1.merged), m2.pair, m2.merged), m3.pair, m3.merged),
          |      '|')) - 1)), (a, b) -> a + b) AS BIGINT) AS n_subwords
          |FROM d, m1, m2, m3 ORDER BY doc_id ASC""".stripMargin) { (s, dir) =>
-      val merges = trainedBpeMerges(s, dir)
+      val (merges, _) = trainBpe(s, dir)
       val toks = filter(TF.tokens(TF.normalizeText(col("text"))),
         t => length(t) > 0)
       Tables.spread(s, docs(s, dir).filter(col("doc_id") < 300))
@@ -927,7 +906,7 @@ object CorpusOps {
          |  CAST(floor(10000.0 * sum(n_chr) / sum(n_sub) + 0.5) AS BIGINT)
          |    AS cps_e4
          |FROM per GROUP BY lang ORDER BY lang ASC""".stripMargin) { (s, dir) =>
-      val merges = trainedBpeMerges(s, dir)
+      val (merges, _) = trainBpe(s, dir)
       val toks = filter(TF.tokens(TF.normalizeText(col("text"))),
         t => length(t) > 0)
       Tables.spread(s, docs(s, dir).filter(col("doc_id") < 300))

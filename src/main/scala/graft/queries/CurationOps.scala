@@ -48,7 +48,7 @@ object CurationOps {
   private val BlockW = 1000L
 
   /** q173's alphabet, in the exact summation order both engines use. */
-  private val Alphabet: Seq[String] = ('a' to 'z').map(_.toString) :+ " "
+  private[queries] val Alphabet: Seq[String] = ('a' to 'z').map(_.toString) :+ " "
 
   /** The 5 synchronous label-propagation rounds q171 freezes (determinism:
     * fixed budget, min-label tie-break — see operators/LabelPropagation).
@@ -130,22 +130,6 @@ object CurationOps {
     val s = graft.functions.NativeExpressions
       .charEntropy(nt, Alphabet.mkString)
     (s.getField("l"), s.getField("ent"))
-  }
-
-  /** The pre-r16 27-term translate fold, kept as the spec's reference
-    * semantics for [[entropyCols]]' kernel (one definition, test-only
-    * consumer).
-    */
-  private[queries] def entropyColsDeclarative(nt: Column): (Column, Column) = {
-    val cnts: Seq[Column] = Alphabet.map { ch =>
-      length(nt) - length(translate(nt, ch, ""))
-    }
-    val l = cnts.map(_.cast("double")).reduce(_ + _)
-    val ent = cnts.map { c =>
-      when(c > 0, -((c.cast("double") / l) * log(c.cast("double") / l)))
-        .otherwise(lit(0.0))
-    }.reduce(_ + _)
-    (l, ent)
   }
 
   def defs: Seq[QueryDef] = Seq(

@@ -3232,8 +3232,9 @@ object LlmPipeline {
     // window. Scale shape: same as q133 — assignment is shuffle-free,
     // the only exchange is the cell-keyed join, the per-(cell, anchor)
     // top-k is a local sort on the join's partitioning, and k-the-cell-
-    // count is the measured lever (ScaleK). The oracle replays training,
-    // 2-of-32 assignment, mismatch pairing, and ranking CTE-for-CTE.
+    // count is the measured lever (BASELINE.md r14–r15 rows). The
+    // oracle replays training, 2-of-32 assignment, mismatch pairing, and
+    // ranking CTE-for-CTE.
     QueryDef.sql(
       "q179_hard_negatives",
       s"""WITH ${kmeansCtes(k = 32, iters = 3, sampleBuckets = 3)},

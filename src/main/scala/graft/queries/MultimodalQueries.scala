@@ -196,12 +196,13 @@ object MultimodalQueries {
     // never all-pairs — and the exact hamming verify runs only on
     // band-colliding candidates. r16 retires the original 4×16-bit
     // packing as the production default: on a 2^16 band space random
-    // collisions grow ~n²/2^16 (the measured BandScale curve paid 5.68 M
-    // sf10 candidates), while the 2^64 space keeps candidates
-    // true-dup-sized at any realistic corpus — the q215 lever, now THE
-    // default. Same REAL image path (embedding → TIFF encode →
-    // executor-side decode → hash; 16×16 via the PNG16 jitter lattice in
-    // a TIFF container). Dup path kept LIVE by injected replays per the
+    // collisions grow ~n²/2^16 (the band-saturation curve frozen in
+    // BASELINE.md's r15 rows paid 5.68 M sf10 candidates), while the
+    // 2^64 space keeps candidates true-dup-sized at any realistic
+    // corpus — the q215 lever, now THE default. Same REAL image path
+    // (embedding → TIFF encode → executor-side decode → hash; 16×16 via
+    // the PNG16 jitter lattice in a TIFF container). Dup path kept LIVE
+    // by injected replays per the
     // q40/q99 discipline: 10 exact copies (hamming 0) and 5 one-value
     // perturbations; the oracle replays the injection, the pixel
     // expansion, the hash, band packing (HUGEINT shifts folded to signed
@@ -549,7 +550,7 @@ object MultimodalQueries {
     // WIDE-BAND IMAGE NEAR-DUP DEDUP (q215, r15) — the widen-bands-with-n
     // saturation lever as a FIRST-CLASS query: q188/q205/q210's 4×16-bit
     // banding holds a constant ~1.6e-4 share of the QUADRATIC pair space
-    // as the corpus grows (measured, graft.BandScale: 122 → 33k → 3.1M
+    // as the corpus grows (measured, BASELINE.md r15: 122 → 33k → 3.1M
     // candidates at n = 2k/20k/200k), because the 16-bit band space
     // saturates; this query runs the same pigeonhole discipline over a
     // 256-bit aHash (16×16 raster) packed into four 64-BIT bands — same
@@ -768,10 +769,11 @@ object MultimodalQueries {
     // 256 bits packed into four 64-BIT bands whose pigeonhole makes the
     // band equi-join a LOSSLESS blocker for hamming ≤ 3. r16 retires
     // the 4×16-bit packing as the default: 2^16-band-space random
-    // collisions grow ~n²/2^16 (the BandScale saturation), 2^64 keeps
-    // candidates true-dup-sized at any corpus. Clips come from the
-    // deterministic 4×-jitter expansion (embeddingsAsWavLong). Dup
-    // paths live by injection (q40/q99 discipline): 10 exact copies
+    // collisions grow ~n²/2^16 (the band saturation in BASELINE.md's
+    // r15 rows), 2^64 keeps candidates true-dup-sized at any corpus.
+    // Clips come from the deterministic 4×-jitter expansion
+    // (embeddingsAsWavLong). Dup paths live by injection (q40/q99
+    // discipline): 10 exact copies
     // (hamming 0) and 5 one-value perturbations. The WAV round trip is
     // the identity on quantized samples, so the oracle replays the
     // expansion, energies, deltas, band packing (HUGEINT shifts folded

@@ -467,6 +467,25 @@ object N5BlockIO {
     if ("file" == fs.getScheme) java.nio.file.Paths.get(p.toUri.getPath)
     else null
 
+  /** Publish a fully written `file://` temp over `dest`: stamp the mtime
+    * at PUBLISH time (not temp-close time) so the streaming source's
+    * watermark can never advance past a file that is not yet visible,
+    * then atomically rename. A `.<name>.crc` sibling left by an earlier
+    * Hadoop write describes the bytes being replaced, and shard reads go
+    * through the checksummed `fs.open`, so it is deleted first: a reader
+    * then sees old or new bytes without a checksum, never new bytes
+    * under a stale one.
+    */
+  def publishLocal(tmp: java.nio.file.Path, dest: java.nio.file.Path): Unit = {
+    java.nio.file.Files.setLastModifiedTime(tmp,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
+    java.nio.file.Files.deleteIfExists(
+      dest.resolveSibling(s".${dest.getFileName}.crc"))
+    java.nio.file.Files.move(tmp, dest,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
   /** Whole-file read: nio for file://, Hadoop stream otherwise. */
   def readAllBytes(fs: FileSystem, p: HPath): Array[Byte] = {
     val lp = localPath(fs, p)
@@ -1172,11 +1191,7 @@ class N5BlockWriter(
       val ltmp = lp.getParent.resolve(tmp.getName)
       pending = tmp
       java.nio.file.Files.write(ltmp, bytes)
-      java.nio.file.Files.setLastModifiedTime(ltmp,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-      java.nio.file.Files.move(ltmp, lp,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      N5BlockIO.publishLocal(ltmp, lp)
       pending = null
       return
     }
@@ -1282,14 +1297,9 @@ class N5BlockWriter(
     shardOut = null
     val dest = new HPath(root, s"$dataset/$shardKey")
     val lp = N5BlockIO.localPath(fs, dest)
-    if (lp != null) {
-      val ltmp = lp.getParent.resolve(shardTmp.getName)
-      java.nio.file.Files.setLastModifiedTime(ltmp,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-      java.nio.file.Files.move(ltmp, lp,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } else {
+    if (lp != null)
+      N5BlockIO.publishLocal(lp.getParent.resolve(shardTmp.getName), lp)
+    else {
       fs.setTimes(shardTmp, System.currentTimeMillis(), -1)
       fc.rename(shardTmp, dest,
         org.apache.hadoop.fs.Options.Rename.OVERWRITE)

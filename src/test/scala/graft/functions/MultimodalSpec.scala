@@ -301,7 +301,7 @@ class MultimodalSpec extends SparkSpec {
       String.valueOf(err.getCause).contains("expects 64 samples"))
   }
 
-  test("audioFingerprintWindowed handles arbitrary clip lengths, is " +
+  test("audioFingerprintWide(nBits = 64) handles arbitrary clip lengths, is " +
       "positive-gain-invariant, and refuses sub-64 clips (r14)") {
     import spark.implicits._
     val rng = new scala.util.Random(11)
@@ -312,25 +312,26 @@ class MultimodalSpec extends SparkSpec {
     val media = spark.createDataset(Seq(
       Multimodal.MediaRow(1L, "audio/wav", Multimodal.encodeWav(clip, 16000)),
       Multimodal.MediaRow(2L, "audio/wav", Multimodal.encodeWav(doubled, 16000))))
-    val fps = Multimodal.audioFingerprintWindowed(media).collect()
-      .map(f => f.id -> ((f.h0, f.h1, f.h2, f.h3))).toMap
+    val fps = Multimodal.audioFingerprintWide(media, nBits = 64).collect()
+      .map(f => f.id -> ((f.b0, f.b1, f.b2, f.b3))).toMap
     assert(fps(1L) == fps(2L), "2x gain changed the windowed fingerprint")
     // a different clip of the same length does not collide
     val other = Array.fill(640)((rng.nextInt(4000) - 2000).toShort)
-    val fpOther = Multimodal.audioFingerprintWindowed(spark.createDataset(Seq(
+    val fpOther = Multimodal.audioFingerprintWide(spark.createDataset(Seq(
         Multimodal.MediaRow(3L, "audio/wav",
-          Multimodal.encodeWav(other, 16000))))).collect().head
-    assert(fps(1L) != ((fpOther.h0, fpOther.h1, fpOther.h2, fpOther.h3)))
+          Multimodal.encodeWav(other, 16000)))), nBits = 64).collect().head
+    assert(fps(1L) != ((fpOther.b0, fpOther.b1, fpOther.b2, fpOther.b3)))
     // a 64-sample clip degrades to per-sample |energies| (the production
     // face of the fixed-64 contract), and sub-64 clips are loud
     val exact64 = Array.fill(64)((rng.nextInt(4000) - 2000).toShort)
-    assert(Multimodal.audioFingerprintWindowed(spark.createDataset(Seq(
+    assert(Multimodal.audioFingerprintWide(spark.createDataset(Seq(
       Multimodal.MediaRow(4L, "audio/wav",
-        Multimodal.encodeWav(exact64, 16000))))).collect().length == 1)
+        Multimodal.encodeWav(exact64, 16000)))), nBits = 64).collect().length == 1)
     val err = intercept[org.apache.spark.SparkException] {
-      Multimodal.audioFingerprintWindowed(spark.createDataset(Seq(
+      Multimodal.audioFingerprintWide(spark.createDataset(Seq(
         Multimodal.MediaRow(5L, "audio/wav",
-          Multimodal.encodeWav(Array.fill(10)(1.toShort), 16000))))).collect()
+          Multimodal.encodeWav(Array.fill(10)(1.toShort), 16000)))), nBits = 64)
+        .collect()
     }
     assert(err.getMessage.contains(">= 64 samples") ||
       String.valueOf(err.getCause).contains(">= 64 samples"))

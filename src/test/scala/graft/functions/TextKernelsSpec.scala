@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Pins the r19 single-pass whitespace kernels to the declarative
@@ -21,8 +22,16 @@ class TextKernelsSpec extends SparkSpec {
     "x" * 3 + "\t\t\t" + "Y" * 4, "trailing space ", " leading",
     "nb\u00a0sp")  // NBSP is NOT \s -- must stay inside a token
 
-  private def both(c: org.apache.spark.sql.Column,
-      d: org.apache.spark.sql.Column) = {
+  /** The pre-r19 declarative form of [[TextFunctions.normalizeText]] —
+    * the reference semantics. */
+  private def normalizeTextDeclarative(text: Column) =
+    lower(trim(regexp_replace(text, "\\s+", " ")))
+
+  /** The pre-r19 declarative form of [[TextFunctions.tokens]]. */
+  private def tokensDeclarative(text: Column) =
+    split(trim(text), "\\s+")
+
+  private def both(c: Column, d: Column) = {
     import spark.implicits._
     val lit = adversarial.toDF("text")
     val corpus = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
@@ -32,7 +41,7 @@ class TextKernelsSpec extends SparkSpec {
 
   test("ws_normalize == lower(trim(regexp_replace(text, \\s+, ' ')))") {
     val rows = both(TextFunctions.normalizeText(col("text")),
-      TextFunctions.normalizeTextDeclarative(col("text"))).collect()
+      normalizeTextDeclarative(col("text"))).collect()
     val bad = rows.filter(r => r.getString(0) != r.getString(1))
     assert(bad.isEmpty, s"${bad.length} diverged; first: " +
       bad.headOption.map(r => s"[${r.getString(0)}] vs [${r.getString(1)}]"))
@@ -40,7 +49,7 @@ class TextKernelsSpec extends SparkSpec {
 
   test("ws_tokens == split(trim(text), \\s+)") {
     val rows = both(TextFunctions.tokens(col("text")),
-      TextFunctions.tokensDeclarative(col("text"))).collect()
+      tokensDeclarative(col("text"))).collect()
     val bad = rows.filter(r => r.getSeq[String](0) != r.getSeq[String](1))
     assert(bad.isEmpty, s"${bad.length} diverged; first: " +
       bad.headOption.map(r => s"${r.getSeq[String](0)} vs ${r.getSeq[String](1)}"))
@@ -50,7 +59,7 @@ class TextKernelsSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq("a b").toDF("text")
     val k = df.select(TextFunctions.tokens(col("text"))).schema.head.dataType
-    val r = df.select(TextFunctions.tokensDeclarative(col("text")))
+    val r = df.select(tokensDeclarative(col("text")))
       .schema.head.dataType
     assert(k == r, s"kernel $k vs split $r")
   }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The q173 entropy kernel (r16): the one-pass native fold must be
@@ -12,6 +13,20 @@ import org.apache.spark.sql.functions._
   */
 class CurationOpsSpec extends SparkSpec {
 
+  /** The pre-r16 27-term translate fold — the reference semantics for
+    * [[CurationOps.entropyCols]]' kernel. */
+  private def entropyColsDeclarative(nt: Column): (Column, Column) = {
+    val cnts = CurationOps.Alphabet.map { ch =>
+      length(nt) - length(translate(nt, ch, ""))
+    }
+    val l = cnts.map(_.cast("double")).reduce(_ + _)
+    val ent = cnts.map { c =>
+      when(c > 0, -((c.cast("double") / l) * log(c.cast("double") / l)))
+        .otherwise(lit(0.0))
+    }.reduce(_ + _)
+    (l, ent)
+  }
+
   test("char-entropy kernel == declarative translate fold, bit-for-bit") {
     import graft.functions.{TextFunctions => TF}
     val base = spark.read
@@ -19,7 +34,7 @@ class CurationOpsSpec extends SparkSpec {
       .select(col("doc_id"), TF.normalizeText(col("text")).as("nt"))
       .filter(col("nt").rlike("[a-z ]"))
     val (lK, entK) = CurationOps.entropyCols(col("nt"))
-    val (lD, entD) = CurationOps.entropyColsDeclarative(col("nt"))
+    val (lD, entD) = entropyColsDeclarative(col("nt"))
     val rows = base.select(col("doc_id"), lK.as("lk"), entK.as("ek"),
         lD.as("ld"), entD.as("ed")).collect()
     assert(rows.nonEmpty)
@@ -40,9 +55,9 @@ class CurationOpsSpec extends SparkSpec {
       .toDF("nt")
     val cmp = edge.select(
       CurationOps.entropyCols(col("nt"))._1.as("lk"),
-      CurationOps.entropyColsDeclarative(col("nt"))._1.as("ld"),
+      entropyColsDeclarative(col("nt"))._1.as("ld"),
       CurationOps.entropyCols(col("nt"))._2.as("ek"),
-      CurationOps.entropyColsDeclarative(col("nt"))._2.as("ed")).collect()
+      entropyColsDeclarative(col("nt"))._2.as("ed")).collect()
     cmp.foreach { r =>
       assert(r.getDouble(0) == r.getDouble(1), s"edge l: $r")
       assert(

@@ -267,6 +267,41 @@ class Zarr3Spec extends SparkSpec {
       "SHARDED v3 store failed")
   }
 
+  test("re-publishing a shard over a foreign .crc sibling: the stale " +
+      "checksum goes, so the checksummed shard read sees the new bytes") {
+    val dir = java.nio.file.Files.createTempDirectory("zarr3_crc").toString
+    val src = N5Meta.datasetAttributes(root, "vol")
+    // raw inner chunks: a re-write with other values keeps every shard's
+    // length, so only the checksum (not the size) can tell the bytes apart
+    val attrs = src.copy(shard = src.shard.map(
+      _.copy(innerCompression = Compression("raw"))))
+    val blocks = N5.read(spark, root, "vol")
+    N5.write(blocks, dir, "copy", attrs)
+    // an external Hadoop write of one shard leaves a matching .crc sibling
+    val shard = new org.apache.hadoop.fs.Path(s"$dir/copy/c/0/0/0")
+    val bytes = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(shard.toUri.getPath))
+    val lfs = org.apache.hadoop.fs.FileSystem.getLocal(
+      new org.apache.hadoop.conf.Configuration())
+    val out = lfs.create(shard, true)
+    try out.write(bytes) finally out.close()
+    val crc = new java.io.File(s"$dir/copy/c/0/0/.0.crc")
+    assert(crc.exists(), "the Hadoop write must leave a .crc sibling")
+    val flipped = blocks.withColumn("data",
+      transform(col("data"), x => lit(65535) - x))
+    N5.write(flipped, dir, "copy", attrs)
+    assert(new java.io.File(shard.toUri.getPath).length == bytes.length,
+      "the raw re-write must keep the shard length")
+    assert(!crc.exists(), "the re-publish must delete the stale .crc")
+    def byGrid(df: org.apache.spark.sql.DataFrame) =
+      df.select("gx", "gy", "gz", "data").collect().map(r =>
+        (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getSeq[Int](3)).toMap
+    val want = byGrid(flipped)
+    assert(want.nonEmpty)
+    assert(byGrid(N5.read(spark, dir, "copy")) == want,
+      "the re-written shards must read back with the new values")
+  }
+
   // ---- r19: ranged shard reads (closes the r18 whole-shard `weak`) ----
   // Multi-MB fixture from the independent python writer: two 4 MiB raw
   // shards ([bytes LE] inner codecs, so on-disk size == raw size), 64
