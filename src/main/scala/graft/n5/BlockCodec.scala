@@ -53,6 +53,9 @@ object BlockCodec {
     val n = if (mode == 1) hdr.getInt() else shape.product
     val headerLen = 4 + 4 * ndim + (if (mode == 1) 4 else 0)
     val payload = decompress(raw, headerLen, comp, n * dtype.bytesPerElement)
+    require(payload.length >= n * dtype.bytesPerElement,
+      s"N5 block: ${payload.length} payload bytes < " +
+        s"$n x ${dtype.bytesPerElement} expected")
     val buf = ByteBuffer.wrap(payload).order(ByteOrder.BIG_ENDIAN)
     dtype match {
       case Dtype.Float32 =>

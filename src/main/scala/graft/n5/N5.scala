@@ -10,12 +10,6 @@ import org.apache.spark.sql.types.DataType
   */
 object N5 {
 
-  /** Hadoop conf for executor-side block access: one per JVM, not one per
-    * task group (Configuration construction re-parses default resources).
-    */
-  @transient private lazy val taskConf =
-    new org.apache.hadoop.conf.Configuration()
-
   /** Reject non-integral numeric input BEFORE an integer cast — ANSI cast
     * only errors on overflow, so 3.7 would otherwise truncate to 3
     * silently (the fail-loudly discipline, `n5_to_tif.py:28`).
@@ -44,7 +38,7 @@ object N5 {
     */
   def readGroup(spark: SparkSession, root: String, group: String): DataFrame = {
     val base = new org.apache.hadoop.fs.Path(root, group)
-    val fs = base.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = graft.sources.HadoopFs.fs(base)
     require(fs.exists(base), s"no N5 group at $base")
     val chRe = "c(\\d+)".r
     val lvRe = "s(\\d+)".r
@@ -246,10 +240,10 @@ object N5 {
     * for element views over in-flight block DataFrames.
     */
   def elementsScan(spark: SparkSession, root: String, dataset: String): DataFrame =
-    spark.read.format("n5")
-      .option("dataset", dataset)
-      .option("view", "elements")
-      .load(root)
+    elementsReader(spark, dataset).load(root)
+
+  private def elementsReader(spark: SparkSession, dataset: String) =
+    spark.read.format("n5").option("dataset", dataset).option("view", "elements")
 
   def elements(blocks: DataFrame): DataFrame = {
     def axisMeta(i: Int) = new org.apache.spark.sql.types.MetadataBuilder()
@@ -292,13 +286,15 @@ object N5 {
       .filter(col("x") >= start(0) && col("x") < end(0)
         && col("y") >= start(1) && col("y") < end(1)
         && col("z") >= start(2) && col("z") < end(2))
-    val stored = inBox(elementsScan(spark, root, dataset))
+    // the known element schema spares inferSchema another attributes read
+    val stored = inBox(elementsReader(spark, dataset)
+      .schema(graft.sources.n5.N5Schema.elementSchema(attrs.dataType)).load(root))
     if (!fillMissing) return stored
     // Which of the box's grid positions exist on disk? Pure driver-side
     // directory walk bounded to the box's grid range (one listStatus per
     // surviving directory) — no Spark job at plan-construction time.
     val dsPath = new org.apache.hadoop.fs.Path(root, dataset)
-    val fs = dsPath.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = graft.sources.HadoopFs.fs(dsPath)
     val present = graft.sources.n5.N5GridWalk
       .listChunks(fs, dsPath, attrs, (axis, v) => v >= g0(axis) && v <= g1(axis))
       .map { case (g, _) => (g(0), g(1), g(2)) }.toSet
@@ -437,7 +433,7 @@ object N5 {
           // partial cover: start from the stored block (zeros when absent)
           val path = new org.apache.hadoop.fs.Path(
             root, s"$dataset/${grid.mkString("/")}")
-          val fs = path.getFileSystem(taskConf)
+          val fs = graft.sources.HadoopFs.fs(path)
           if (fs.exists(path)) {
             val raw = graft.sources.n5.N5BlockIO.readAllBytes(fs, path)
             val dec = BlockCodec.decode(raw, attrs.dataType, attrs.compression)
@@ -579,7 +575,7 @@ object N5 {
       dataType = dtype.getOrElse(t.dataType))
     if (overwrite) {
       val p = new org.apache.hadoop.fs.Path(outRoot, outDataset)
-      val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val fs = graft.sources.HadoopFs.fs(p)
       if (fs.exists(p)) fs.delete(p, true)
     }
     N5Meta.ensureRoot(outRoot)

@@ -2,8 +2,8 @@ package graft.n5
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.sources.HadoopFs.fs
+import org.apache.hadoop.fs.Path
 import scala.jdk.CollectionConverters._
 
 /** N5 element dtype with its JVM widening (JVM has no unsigned types, so
@@ -206,8 +206,6 @@ object N5Meta {
   // ObjectMapper is thread-safe once configured; share a single instance
   private val mapper = new ObjectMapper()
 
-  private def fs(p: Path): FileSystem = p.getFileSystem(new Configuration())
-
   def readJson(p: Path): JsonNode = {
     val in = fs(p).open(p)
     try mapper.readTree(in) finally in.close()
@@ -223,10 +221,11 @@ object N5Meta {
     val n5Path = new Path(root, s"$dataset/attributes.json")
     val zarrPath = new Path(root, s"$dataset/.zarray")
     val zarr3Path = new Path(root, s"$dataset/zarr.json")
-    if (!fs(n5Path).exists(n5Path) && fs(zarr3Path).exists(zarr3Path))
-      return zarr3ArrayAttributes(zarr3Path)
-    if (!fs(n5Path).exists(n5Path) && fs(zarrPath).exists(zarrPath))
-      return zarrArrayAttributes(zarrPath)
+    val f = fs(n5Path)
+    if (!f.exists(n5Path)) {
+      if (f.exists(zarr3Path)) return zarr3ArrayAttributes(zarr3Path)
+      if (f.exists(zarrPath)) return zarrArrayAttributes(zarrPath)
+    }
     val j = readJson(n5Path)
     val dims = j.get("dimensions").elements().asScala.map(_.asLong()).toArray
     val bs = j.get("blockSize").elements().asScala.map(_.asInt()).toArray

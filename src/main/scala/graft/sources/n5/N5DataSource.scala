@@ -3,7 +3,7 @@ package graft.sources.n5
 import java.util
 
 import graft.n5._
-import org.apache.hadoop.conf.Configuration
+import graft.sources.HadoopFs
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -124,7 +124,8 @@ class N5Table(options: CaseInsensitiveStringMap, tableSchema: StructType)
       TableCapability.STREAMING_WRITE, TableCapability.TRUNCATE)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder = {
-    val attrs = N5Meta.datasetAttributes(root, dataset)
+    // a table without attributes re-reads them to fail with the read error
+    val attrs = readAttributes.getOrElse(N5Meta.datasetAttributes(root, dataset))
     // merge table options (load-time) over scan options
     val merged = new java.util.HashMap[String, String]()
     o.forEach((k, v) => merged.put(k, v))
@@ -520,7 +521,8 @@ object N5BlockIO {
       attrs: DatasetAttributes,
       shardState: ShardReadState = null): DecodedBlock = {
     val p = new HPath(root, s"$dataset/${attrs.chunkKey(g)}")
-    attrs.shard match {
+    // name the block: a bare EOFException or BufferUnderflowException names none
+    try attrs.shard match {
       case Some(sp) if attrs.isZarr3 =>
         readSharded(fs, p, g, attrs, sp, shardState)
       case _ =>
@@ -533,6 +535,9 @@ object N5BlockIO {
           BlockCodec.decodeZarr(raw, attrs.dataType, attrs.compression,
             attrs.blockSize, attrs.blockShape(g), attrs.zarrLittleEndian)
         else BlockCodec.decode(raw, attrs.dataType, attrs.compression)
+    } catch {
+      case scala.util.control.NonFatal(e) => throw new java.io.IOException(
+        s"cannot read block $dataset/${g.mkString("/")} ($p): $e", e)
     }
   }
 
@@ -696,7 +701,7 @@ class N5Scan(
 
   private def listSurvivors(): Seq[Array[Int]] = {
     val rootPath = new HPath(root, dataset)
-    val fs = rootPath.getFileSystem(new Configuration())
+    val fs = HadoopFs.fs(rootPath)
     val axisOk: (Int, Int) => Boolean =
       if (elementsView) N5GridFilters.elementAxisOk(filters, attrs.blockSize)
       else N5GridFilters.axisOk(filters)
@@ -727,7 +732,7 @@ class N5BlockReader(
   private var i = -1
   private var row: InternalRow = _
   private val fs: FileSystem =
-    new HPath(part.root).getFileSystem(new Configuration())
+    HadoopFs.fs(new HPath(part.root))
   private val shardState = new N5BlockIO.ShardReadState
 
   private def needsData = required.fieldNames.contains("data")
@@ -834,7 +839,7 @@ class N5ElementsReader(
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
   private val fs: FileSystem =
-    new HPath(part.root).getFileSystem(new Configuration())
+    HadoopFs.fs(new HPath(part.root))
   private val shardState = new N5BlockIO.ShardReadState
   private val vectors: Array[OnHeapColumnVector] =
     OnHeapColumnVector.allocateColumns(batchRows, required)
@@ -1066,7 +1071,7 @@ class N5BatchWrite(
     // driver-side prep: optional truncate, container root marker
     if (truncate) {
       val p = new HPath(root, dataset)
-      val fs = p.getFileSystem(new Configuration())
+      val fs = HadoopFs.fs(p)
       if (fs.exists(p)) fs.delete(p, true)
     }
     // a zarr store has no N5 root marker; injecting attributes.json into
@@ -1124,10 +1129,9 @@ class N5BlockWriter(
     inputSchema: StructType, varlength: Boolean = false)
     extends DataWriter[InternalRow] {
 
-  private val conf = new Configuration()
-  private val fs: FileSystem = new HPath(root).getFileSystem(conf)
+  private val fs: FileSystem = HadoopFs.fs(new HPath(root))
   private val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-    fs.getUri, conf)
+    fs.getUri, HadoopFs.conf)
   private val idx: Map[String, Int] =
     inputSchema.fieldNames.zipWithIndex.toMap
   private val elemType = N5Schema.elementType(attrs.dataType)

@@ -1,7 +1,7 @@
 package graft.sources.n5
 
 import graft.n5.DatasetAttributes
-import org.apache.hadoop.conf.Configuration
+import graft.sources.HadoopFs
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
@@ -45,8 +45,7 @@ class N5MicroBatchStream(
 
   import N5MicroBatchStream._
 
-  @transient private lazy val fs =
-    new HPath(root).getFileSystem(new Configuration())
+  @transient private lazy val fs = HadoopFs.fs(new HPath(root))
 
   /** (grid, mtime) of every stored block surviving the pushed filters. */
   private def listBlocks(): Seq[(Array[Int], Long)] =

@@ -5,7 +5,7 @@ import javax.imageio.ImageIO
 import javax.imageio.stream.MemoryCacheImageInputStream
 
 import graft.n5.{Compression, DatasetAttributes, Dtype, N5Meta}
-import org.apache.hadoop.conf.Configuration
+import graft.sources.HadoopFs
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -172,7 +172,7 @@ object OmeTiffVolume {
     */
   private def openReader(path: String): (javax.imageio.ImageReader, () => Unit) = {
     val p = new HPath(path)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = HadoopFs.fs(p)
     val ios: javax.imageio.stream.ImageInputStream =
       if (fs.getUri.getScheme == "file")
         new javax.imageio.stream.FileImageInputStream(

@@ -1,7 +1,7 @@
 package graft.sources.tiff
 
 import graft.n5.{Compression, DatasetAttributes, Dtype, N5, N5Meta}
-import org.apache.hadoop.conf.Configuration
+import graft.sources.HadoopFs
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,7 +25,7 @@ object TiffVolume {
       w: Int, h: Int, px: Array[Int], bits: Int): Unit = {
     val bytes = TiffIO.encode(w, h, px, bits)
     val p = new HPath(outDir, f"$prefix$z%05d.tif")
-    val fs = p.getFileSystem(new Configuration())
+    val fs = HadoopFs.fs(p)
     fs.mkdirs(p.getParent)
     val out = fs.create(p, true)
     try out.write(bytes) finally out.close()
@@ -138,7 +138,7 @@ object TiffVolume {
       TiffIO.buildImage(w, h, px, bits)
     }
     val p = new HPath(outFile)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = HadoopFs.fs(p)
     fs.mkdirs(p.getParent)
     val out = fs.create(p, true)
     val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(out)
@@ -194,10 +194,9 @@ object TiffVolume {
       .zipWithIndex().toDF("path", "z")
     ranked.select(col("z"), col("path")).as[(Long, String)]
       .mapPartitions { it =>
-        val conf = new Configuration()
         it.map { case (z, p) =>
           val hp = new HPath(p)
-          val fs = hp.getFileSystem(conf)
+          val fs = HadoopFs.fs(hp)
           val in = fs.open(hp)
           val bytes =
             try in.readAllBytes()

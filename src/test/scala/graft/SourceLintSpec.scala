@@ -1,0 +1,41 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
+
+/** Source-level LINT over `src/main/scala`, for invariants no plan shows.
+  *
+  *  - Hadoop `Configuration` is constructed only in
+  *    [[graft.sources.HadoopFs]]: the first lookup on a fresh instance
+  *    re-parses the default resources, so a per-call construction on a
+  *    metadata read, grid walk or block reader costs tens of milliseconds
+  *    per query.
+  */
+class SourceLintSpec extends AnyFunSuite {
+
+  private val mainRoot = Paths.get("src/main/scala")
+
+  private def sources: Seq[Path] = {
+    val s = Files.walk(mainRoot)
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
+  test("Hadoop Configuration is constructed only in graft.sources.HadoopFs") {
+    val helper = mainRoot.resolve("graft/sources/HadoopFs.scala")
+    val ctor = """new\s+(org\.apache\.hadoop\.conf\.)?Configuration\s*\(""".r
+    val files = sources
+    assert(files.contains(helper), s"missing $helper")
+    val offenders = for {
+      f <- files if f != helper
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if ctor.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      s"per-call Hadoop Configuration construction:\n${offenders.mkString("\n")}")
+    assert(ctor.findAllIn(new String(Files.readAllBytes(helper))).size == 1)
+  }
+}
