@@ -4,12 +4,11 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
-/** One decoded N5 block: grid position, actual (edge-trimmed) shape in
-  * x,y,z order, and the element payload widened to Long (integer dtypes)
-  * or Double (float dtypes), in x-fastest flat order.
+/** One decoded N5 block: actual (edge-trimmed) shape in x,y,z order, and
+  * the element payload widened to Long (integer dtypes) or Double (float
+  * dtypes), in x-fastest flat order.
   */
 final case class DecodedBlock(
-    grid: Array[Int],
     shape: Array[Int],
     longs: Array[Long],    // null for float dtypes
     doubles: Array[Double] // null for integer dtypes
@@ -31,9 +30,11 @@ final case class DecodedBlock(
   * element payload. Element order is x-fastest C-order of the z,y,x view —
   * i.e. flat index = x + y*sx + z*sx*sy with the LOCAL block shape.
   *
-  * Unsigned dtypes are widened on read and narrowed on write (single
-  * DtypeCodec path — SURVEY §7 flags scattered sign handling as the main
-  * correctness hazard here).
+  * [[widen]] and [[narrow]] are the single dtype codec between element
+  * bytes and the Long/Double payload: unsigned dtypes are zero-extended on
+  * read, and every write range-checks there (SURVEY §7 flags scattered
+  * sign handling as the main correctness hazard here). N5 and zarr differ
+  * only in the header, the byte order and zarr's edge padding.
   */
 object BlockCodec {
 
@@ -56,32 +57,7 @@ object BlockCodec {
     require(payload.length >= n * dtype.bytesPerElement,
       s"N5 block: ${payload.length} payload bytes < " +
         s"$n x ${dtype.bytesPerElement} expected")
-    val buf = ByteBuffer.wrap(payload).order(ByteOrder.BIG_ENDIAN)
-    dtype match {
-      case Dtype.Float32 =>
-        val out = new Array[Double](n)
-        var i = 0; while (i < n) { out(i) = buf.getFloat().toDouble; i += 1 }
-        DecodedBlock(null, shape, null, out)
-      case Dtype.Float64 =>
-        val out = new Array[Double](n)
-        var i = 0; while (i < n) { out(i) = buf.getDouble(); i += 1 }
-        DecodedBlock(null, shape, null, out)
-      case d =>
-        val out = new Array[Long](n)
-        var i = 0
-        d match {
-          case Dtype.UInt8 => while (i < n) { out(i) = buf.get() & 0xffL; i += 1 }
-          case Dtype.Int8 => while (i < n) { out(i) = buf.get().toLong; i += 1 }
-          case Dtype.UInt16 => while (i < n) { out(i) = buf.getShort() & 0xffffL; i += 1 }
-          case Dtype.Int16 => while (i < n) { out(i) = buf.getShort().toLong; i += 1 }
-          case Dtype.UInt32 => while (i < n) { out(i) = buf.getInt() & 0xffffffffL; i += 1 }
-          case Dtype.Int32 => while (i < n) { out(i) = buf.getInt().toLong; i += 1 }
-          // uint64 values above Long.MaxValue wrap (documented narrowing)
-          case Dtype.UInt64 | Dtype.Int64 => while (i < n) { out(i) = buf.getLong(); i += 1 }
-          case _ => throw new IllegalStateException(s"unreachable: $d")
-        }
-        DecodedBlock(null, shape, out, null)
-    }
+    widen(shape, payload, ByteOrder.BIG_ENDIAN, dtype, n)
   }
 
   /** Decode one zarr v2 chunk into the N5 block shape contract. A zarr
@@ -97,64 +73,20 @@ object BlockCodec {
       raw: Array[Byte], dtype: Dtype, comp: Compression,
       chunkShape: Array[Int], trimmedShape: Array[Int],
       littleEndian: Boolean): DecodedBlock = {
+    val es = dtype.bytesPerElement
     val full = chunkShape.product
-    val payload = decompress(raw, 0, comp, full * dtype.bytesPerElement)
-    require(payload.length >= full * dtype.bytesPerElement,
-      s"zarr chunk: ${payload.length} payload bytes < " +
-        s"$full x ${dtype.bytesPerElement} expected")
-    val buf = ByteBuffer.wrap(payload)
-      .order(if (littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
-    // full-chunk flat index of a trimmed flat index (x fastest)
+    val payload = decompress(raw, 0, comp, full * es)
+    require(payload.length >= full * es,
+      s"zarr chunk: ${payload.length} payload bytes < $full x $es expected")
     val n = trimmedShape.product
-    val srcIdx = new Array[Int](n)
-    locally {
-      var i = 0
-      while (i < n) {
-        var rem = i; var stride = 1; var src = 0
-        var d = 0
-        while (d < trimmedShape.length) {
-          src += (rem % trimmedShape(d)) * stride
-          rem /= trimmedShape(d)
-          stride *= chunkShape(d)
-          d += 1
-        }
-        srcIdx(i) = src
-        i += 1
+    val elems =
+      if (java.util.Arrays.equals(chunkShape, trimmedShape)) payload
+      else {
+        val t = new Array[Byte](n * es)
+        copyRows(payload, t, trimmedShape, chunkShape, es, pad = false)
+        t
       }
-    }
-    dtype match {
-      case Dtype.Float32 =>
-        val out = new Array[Double](n)
-        var i = 0
-        while (i < n) { out(i) = buf.getFloat(srcIdx(i) * 4).toDouble; i += 1 }
-        DecodedBlock(null, trimmedShape, null, out)
-      case Dtype.Float64 =>
-        val out = new Array[Double](n)
-        var i = 0
-        while (i < n) { out(i) = buf.getDouble(srcIdx(i) * 8); i += 1 }
-        DecodedBlock(null, trimmedShape, null, out)
-      case d =>
-        val out = new Array[Long](n)
-        var i = 0
-        d match {
-          case Dtype.UInt8 =>
-            while (i < n) { out(i) = buf.get(srcIdx(i)) & 0xffL; i += 1 }
-          case Dtype.Int8 =>
-            while (i < n) { out(i) = buf.get(srcIdx(i)).toLong; i += 1 }
-          case Dtype.UInt16 =>
-            while (i < n) { out(i) = buf.getShort(srcIdx(i) * 2) & 0xffffL; i += 1 }
-          case Dtype.Int16 =>
-            while (i < n) { out(i) = buf.getShort(srcIdx(i) * 2).toLong; i += 1 }
-          case Dtype.UInt32 =>
-            while (i < n) { out(i) = buf.getInt(srcIdx(i) * 4) & 0xffffffffL; i += 1 }
-          case Dtype.Int32 =>
-            while (i < n) { out(i) = buf.getInt(srcIdx(i) * 4).toLong; i += 1 }
-          case Dtype.UInt64 | Dtype.Int64 =>
-            while (i < n) { out(i) = buf.getLong(srcIdx(i) * 8); i += 1 }
-          case _ => throw new IllegalStateException(s"unreachable: $d")
-        }
-        DecodedBlock(null, trimmedShape, out, null)
-    }
+    widen(trimmedShape, elems, zarrOrder(littleEndian), dtype, n)
   }
 
   /** Encode a block to the N5 binary layout. Exactly one of longs/doubles
@@ -172,40 +104,7 @@ object BlockCodec {
       comp: Compression,
       varlength: Boolean = false): Array[Byte] = {
     val n = shape.product
-    val payload = ByteBuffer.allocate(n * dtype.bytesPerElement)
-      .order(ByteOrder.BIG_ENDIAN)
-    dtype match {
-      case Dtype.Float32 =>
-        var i = 0; while (i < n) { payload.putFloat(doubles(i).toFloat); i += 1 }
-      case Dtype.Float64 =>
-        var i = 0; while (i < n) { payload.putDouble(doubles(i)); i += 1 }
-      case d =>
-        // fail-loudly discipline: the narrowing below would otherwise wrap
-        // out-of-range values silently (the raw block-table write path has
-        // no upstream range check, unlike ingest/writeBox)
-        d.integerRange.foreach { case (lo, hi) =>
-          var j = 0
-          while (j < n) {
-            if (longs(j) < lo || longs(j) > hi)
-              throw new IllegalArgumentException(
-                s"block value ${longs(j)} outside ${d.name} range [$lo, $hi]")
-            j += 1
-          }
-        }
-        var i = 0
-        d match {
-          case Dtype.UInt8 | Dtype.Int8 =>
-            while (i < n) { payload.put((longs(i) & 0xffL).toByte); i += 1 }
-          case Dtype.UInt16 | Dtype.Int16 =>
-            while (i < n) { payload.putShort((longs(i) & 0xffffL).toShort); i += 1 }
-          case Dtype.UInt32 | Dtype.Int32 =>
-            while (i < n) { payload.putInt((longs(i) & 0xffffffffL).toInt); i += 1 }
-          case Dtype.UInt64 | Dtype.Int64 =>
-            while (i < n) { payload.putLong(longs(i)); i += 1 }
-          case _ => throw new IllegalStateException(s"unreachable: $d")
-        }
-    }
-    val body = compress(payload.array(), comp)
+    val body = compress(narrow(longs, doubles, n, dtype, ByteOrder.BIG_ENDIAN), comp)
     val headerLen = 4 + 4 * shape.length + (if (varlength) 4 else 0)
     val out = ByteBuffer.allocate(headerLen + body.length)
       .order(ByteOrder.BIG_ENDIAN)
@@ -218,9 +117,9 @@ object BlockCodec {
   }
 
   /** Encode one block as a zarr v2 chunk (r14, write support) — the
-    * inverse of [[decodeZarr]]: the trimmed block payload is scattered
-    * into a FULL fill-0 chunk buffer (zarr edge chunks are fill-padded,
-    * never trimmed), elements little-endian by default in C order of the
+    * inverse of [[decodeZarr]]: the trimmed block payload is padded into
+    * a FULL fill-0 chunk buffer (zarr edge chunks are fill-padded, never
+    * trimmed), elements little-endian by default in C order of the
     * reversed axes (= the engine's x-fastest order), compressed whole
     * with no header. Same loud range check as the N5 [[encode]] path.
     */
@@ -229,9 +128,63 @@ object BlockCodec {
       longs: Array[Long], doubles: Array[Double],
       dtype: Dtype, comp: Compression,
       littleEndian: Boolean = true): Array[Byte] = {
-    val full = chunkShape.product
-    val n = trimmedShape.product
-    if (longs != null) dtype.integerRange.foreach { case (lo, hi) =>
+    val es = dtype.bytesPerElement
+    val elems = narrow(longs, doubles, trimmedShape.product, dtype,
+      zarrOrder(littleEndian))
+    val payload =
+      if (java.util.Arrays.equals(chunkShape, trimmedShape)) elems
+      else {
+        val p = new Array[Byte](chunkShape.product * es)
+        copyRows(elems, p, trimmedShape, chunkShape, es, pad = true)
+        p
+      }
+    comp.codec match {
+      case "raw" | "zlib" | "gzip" | "blosc" => ()
+      case other => throw new IllegalArgumentException(
+        s"zarr write: compressor '$other' unsupported (raw | zlib | gzip | blosc)")
+    }
+    compress(payload, comp)
+  }
+
+  private def zarrOrder(littleEndian: Boolean): ByteOrder =
+    if (littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
+
+  /** The dtype codec, read direction: the first `n` `dtype` elements of
+    * `bytes` (in `order`) as the payload — Long for integer dtypes, with
+    * unsigned values zero-extended, Double for float dtypes.
+    */
+  private def widen(
+      shape: Array[Int], bytes: Array[Byte], order: ByteOrder, dtype: Dtype,
+      n: Int): DecodedBlock = {
+    val buf = ByteBuffer.wrap(bytes).order(order)
+    val longs = if (dtype.isFloat) null else new Array[Long](n)
+    val doubles = if (dtype.isFloat) new Array[Double](n) else null
+    var i = 0
+    dtype match {
+      case Dtype.UInt8 => while (i < n) { longs(i) = buf.get() & 0xffL; i += 1 }
+      case Dtype.Int8 => while (i < n) { longs(i) = buf.get(); i += 1 }
+      case Dtype.UInt16 => while (i < n) { longs(i) = buf.getShort() & 0xffffL; i += 1 }
+      case Dtype.Int16 => while (i < n) { longs(i) = buf.getShort(); i += 1 }
+      case Dtype.UInt32 => while (i < n) { longs(i) = buf.getInt() & 0xffffffffL; i += 1 }
+      case Dtype.Int32 => while (i < n) { longs(i) = buf.getInt(); i += 1 }
+      // uint64 values above Long.MaxValue wrap (documented narrowing)
+      case Dtype.UInt64 | Dtype.Int64 => buf.asLongBuffer().get(longs)
+      case Dtype.Float32 => while (i < n) { doubles(i) = buf.getFloat(); i += 1 }
+      case Dtype.Float64 => buf.asDoubleBuffer().get(doubles)
+    }
+    DecodedBlock(shape, longs, doubles)
+  }
+
+  /** The dtype codec, write direction: the first `n` payload values as
+    * `dtype` element bytes in `order`. Holds the only range check: an
+    * integer outside a bounded dtype fails loudly instead of wrapping
+    * (the raw block-table write path has no upstream check, unlike
+    * ingest and writeBox).
+    */
+  private def narrow(
+      longs: Array[Long], doubles: Array[Double], n: Int, dtype: Dtype,
+      order: ByteOrder): Array[Byte] = {
+    dtype.integerRange.foreach { case (lo, hi) =>
       var j = 0
       while (j < n) {
         if (longs(j) < lo || longs(j) > hi)
@@ -240,51 +193,43 @@ object BlockCodec {
         j += 1
       }
     }
-    val payload = ByteBuffer.allocate(full * dtype.bytesPerElement)
-      .order(if (littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
-    // full-chunk flat index of a trimmed flat index — decodeZarr's map
-    val dstIdx = new Array[Int](n)
-    locally {
-      var i = 0
-      while (i < n) {
-        var rem = i; var stride = 1; var dst = 0; var d = 0
-        while (d < trimmedShape.length) {
-          dst += (rem % trimmedShape(d)) * stride
-          rem /= trimmedShape(d)
-          stride *= chunkShape(d)
-          d += 1
-        }
-        dstIdx(i) = dst
-        i += 1
-      }
-    }
+    val buf = ByteBuffer.allocate(n * dtype.bytesPerElement).order(order)
+    var i = 0
     dtype match {
-      case Dtype.Float32 =>
-        var i = 0
-        while (i < n) { payload.putFloat(dstIdx(i) * 4, doubles(i).toFloat); i += 1 }
-      case Dtype.Float64 =>
-        var i = 0
-        while (i < n) { payload.putDouble(dstIdx(i) * 8, doubles(i)); i += 1 }
-      case d =>
-        var i = 0
-        d match {
-          case Dtype.UInt8 | Dtype.Int8 =>
-            while (i < n) { payload.put(dstIdx(i), (longs(i) & 0xffL).toByte); i += 1 }
-          case Dtype.UInt16 | Dtype.Int16 =>
-            while (i < n) { payload.putShort(dstIdx(i) * 2, (longs(i) & 0xffffL).toShort); i += 1 }
-          case Dtype.UInt32 | Dtype.Int32 =>
-            while (i < n) { payload.putInt(dstIdx(i) * 4, (longs(i) & 0xffffffffL).toInt); i += 1 }
-          case Dtype.UInt64 | Dtype.Int64 =>
-            while (i < n) { payload.putLong(dstIdx(i) * 8, longs(i)); i += 1 }
-          case _ => throw new IllegalStateException(s"unreachable: $d")
-        }
+      case Dtype.UInt8 | Dtype.Int8 => while (i < n) { buf.put(longs(i).toByte); i += 1 }
+      case Dtype.UInt16 | Dtype.Int16 => while (i < n) { buf.putShort(longs(i).toShort); i += 1 }
+      case Dtype.UInt32 | Dtype.Int32 => while (i < n) { buf.putInt(longs(i).toInt); i += 1 }
+      case Dtype.UInt64 | Dtype.Int64 => buf.asLongBuffer().put(longs, 0, n)
+      case Dtype.Float32 => while (i < n) { buf.putFloat(doubles(i).toFloat); i += 1 }
+      case Dtype.Float64 => buf.asDoubleBuffer().put(doubles, 0, n)
     }
-    comp.codec match {
-      case "raw" | "zlib" | "gzip" | "blosc" => ()
-      case other => throw new IllegalArgumentException(
-        s"zarr write: compressor '$other' unsupported (raw | zlib | gzip | blosc)")
+    buf.array()
+  }
+
+  /** Zarr's edge handling over contiguous element bytes (`es` each), any
+    * ndim, x fastest: `pad = false` trims a padded `full` chunk to the
+    * `trimmed` block, `pad = true` places the block in a zeroed chunk.
+    * One arraycopy per trimmed row.
+    */
+  private def copyRows(
+      src: Array[Byte], dst: Array[Byte], trimmed: Array[Int],
+      full: Array[Int], es: Int, pad: Boolean): Unit = {
+    val rowBytes = trimmed(0) * es
+    val rows = trimmed.drop(1).product
+    var r = 0
+    while (r < rows) {
+      // chunk offset of row r: unravel r over the trimmed y,z,... extents
+      var rem = r; var stride = full(0); var off = 0; var d = 1
+      while (d < trimmed.length) {
+        off += (rem % trimmed(d)) * stride
+        rem /= trimmed(d)
+        stride *= full(d)
+        d += 1
+      }
+      if (pad) System.arraycopy(src, r * rowBytes, dst, off * es, rowBytes)
+      else System.arraycopy(src, off * es, dst, r * rowBytes, rowBytes)
+      r += 1
     }
-    compress(payload.array(), comp)
   }
 
   /** Wire formats match n5-java: gzip = GZIP stream, bzip2 = standard

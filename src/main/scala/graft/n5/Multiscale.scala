@@ -154,8 +154,7 @@ object Multiscale {
       // shards but writes the plain v3 profile); no-op otherwise
       shard = None)
     val Array(bx, by, bz) = src.blockSize
-    val isFloat =
-      src.dataType == Dtype.Float32 || src.dataType == Dtype.Float64
+    val isFloat = src.dataType.isFloat
     import spark.implicits._
     // native-typed read; float payloads travel as raw Double bits in the
     // Long array (the typed-pipeline convention shared with Regroup),
@@ -275,12 +274,10 @@ object Multiscale {
     downsampleElementsWith(spark, root, group, level, factors) { (src, _, e) =>
       method match {
         case "mean" =>
-          val isFloat =
-            src.dataType == Dtype.Float32 || src.dataType == Dtype.Float64
           e.groupBy(col("x"), col("y"), col("z"))
             .agg(avg(col("v")).as("m"))
             .select(col("x"), col("y"), col("z"),
-              (if (isFloat) col("m")
+              (if (src.dataType.isFloat) col("m")
                // numpy astype: truncate toward zero
                else expr("CAST(m AS BIGINT)")).as("v"))
         case "min" | "max" =>
@@ -290,11 +287,9 @@ object Multiscale {
           // kernel's math.min/max propagation) — Spark's min/max instead
           // order NaN above every value, so NaN windows are detected
           // explicitly
-          val isFloat =
-            src.dataType == Dtype.Float32 || src.dataType == Dtype.Float64
           val extreme = if (method == "min") min(col("v")) else max(col("v"))
           val vOut =
-            if (isFloat)
+            if (src.dataType.isFloat)
               when(max(when(isnan(col("v")), 1).otherwise(0)) === 1,
                 lit(Double.NaN).cast(N5Schema.elementType(src.dataType)))
                 .otherwise(extreme)
@@ -321,8 +316,6 @@ object Multiscale {
       spark: SparkSession, root: String, group: String, level: Int,
       factors: Array[Int], fill: Double = 0.0): DatasetAttributes =
     downsampleElementsWith(spark, root, group, level, factors) { (src, dstDims, e) =>
-      val isFloat =
-        src.dataType == Dtype.Float32 || src.dataType == Dtype.Float64
       val win = factors.map(_.toLong).product
       val stored = e.groupBy(col("x"), col("y"), col("z"))
         .agg(sum(col("v").cast("double")).as("s"), count(lit(1)).as("c"))
@@ -333,7 +326,7 @@ object Multiscale {
             val m = (coalesce(col("s"), lit(0.0))
               + lit(fill) * (lit(win) - coalesce(col("c"), lit(0L)))) / win
             // numpy astype: truncate toward zero for integer dtypes
-            (if (isFloat) m else m.cast("bigint")).as("v")
+            (if (src.dataType.isFloat) m else m.cast("bigint")).as("v")
           })
     }
 

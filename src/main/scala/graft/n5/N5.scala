@@ -371,8 +371,7 @@ object N5 {
       end.zip(attrs.dimensions).forall { case (e, d) => e <= d },
       s"box exceeds dims ${attrs.dimensions.mkString("x")}")
     val Array(bx, by, bz) = attrs.blockSize
-    val isFloat =
-      attrs.dataType == Dtype.Float32 || attrs.dataType == Dtype.Float64
+    val isFloat = attrs.dataType.isFloat
     import spark.implicits._
     val inBox = elems.filter(
       col("x") >= start(0) && col("x") < end(0)
@@ -435,8 +434,8 @@ object N5 {
             root, s"$dataset/${grid.mkString("/")}")
           val fs = graft.sources.HadoopFs.fs(path)
           if (fs.exists(path)) {
-            val raw = graft.sources.n5.N5BlockIO.readAllBytes(fs, path)
-            val dec = BlockCodec.decode(raw, attrs.dataType, attrs.compression)
+            val dec = graft.sources.n5.N5BlockIO.readDecode(
+              fs, root, dataset, grid, attrs)
             // same short-block discipline as N5ElementsReader /
             // N5BlockReader: a truncated varlength (mode-1) block must
             // fail loudly here too — a silent prefix+fill overlay would
@@ -445,14 +444,12 @@ object N5 {
               s"writeBox: block ${grid.mkString("/")} decodes " +
                 s"${dec.elementCount} elements, expected $vol — " +
                 "truncated varlength (mode-1) block")
-            var i = 0
-            val n = base.length
-            if (dec.isFloat)
-              while (i < n) {
+            if (dec.isFloat) {
+              var i = 0
+              while (i < vol) {
                 base(i) = java.lang.Double.doubleToRawLongBits(dec.doubles(i)); i += 1
               }
-            else
-              while (i < n) { base(i) = dec.longs(i); i += 1 }
+            } else System.arraycopy(dec.longs, 0, base, 0, vol)
           }
         }
         var i = 0

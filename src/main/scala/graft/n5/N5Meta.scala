@@ -28,6 +28,7 @@ sealed abstract class Dtype(
     case Dtype.Int32 => Some((Int.MinValue.toLong, Int.MaxValue.toLong))
     case _ => None
   }
+  def isFloat: Boolean = this == Dtype.Float32 || this == Dtype.Float64
 }
 object Dtype {
   case object UInt8 extends Dtype("uint8", 1)

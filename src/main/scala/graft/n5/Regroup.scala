@@ -59,9 +59,11 @@ object Regroup {
       case ShortType =>
         base.as[(Long, Long, Long, Array[Int], Array[Short])]
           .map(widen[Short](_.toLong))
+      // the encoder maps Array[Byte] to BINARY, not ARRAY<TINYINT>
       case ByteType =>
-        base.as[(Long, Long, Long, Array[Int], Array[Byte])]
-          .map(widen[Byte](_.toLong))
+        base.withColumn("data", col("data").cast("array<smallint>"))
+          .as[(Long, Long, Long, Array[Int], Array[Short])]
+          .map(widen[Short](_.toLong))
       case IntegerType =>
         base.as[(Long, Long, Long, Array[Int], Array[Int])]
           .map(widen[Int](_.toLong))
@@ -196,8 +198,7 @@ object Regroup {
       compression: Compression = Compression("gzip")): DatasetAttributes = {
     val src = N5Meta.datasetAttributes(srcRoot, srcDataset)
     val dst = src.copy(blockSize = newBlockSize, compression = compression)
-    val isFloat =
-      src.dataType == Dtype.Float32 || src.dataType == Dtype.Float64
+    val isFloat = src.dataType.isFloat
 
     import spark.implicits._
     // one typed pipeline for every dtype (native-typed read; floats as

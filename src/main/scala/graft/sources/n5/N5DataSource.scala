@@ -83,6 +83,28 @@ object N5Schema {
     case Dtype.Float64 => DoubleType
   }
 
+  /** The read conversion: a decoded block's values as the primitive array
+    * of [[elementType]], `numElements` long. The uint32/uint64/int64 Long
+    * and float64 Double payloads already are that array and pass through
+    * uncopied.
+    */
+  def sparkValues(dec: DecodedBlock, d: Dtype): AnyRef = {
+    val n = dec.numElements
+    var i = 0
+    d match {
+      case Dtype.UInt8 | Dtype.Int16 =>
+        val a = new Array[Short](n); while (i < n) { a(i) = dec.longs(i).toShort; i += 1 }; a
+      case Dtype.Int8 =>
+        val a = new Array[Byte](n); while (i < n) { a(i) = dec.longs(i).toByte; i += 1 }; a
+      case Dtype.UInt16 | Dtype.Int32 =>
+        val a = new Array[Int](n); while (i < n) { a(i) = dec.longs(i).toInt; i += 1 }; a
+      case Dtype.UInt32 | Dtype.UInt64 | Dtype.Int64 => dec.longs
+      case Dtype.Float32 =>
+        val a = new Array[Float](n); while (i < n) { a(i) = dec.doubles(i).toFloat; i += 1 }; a
+      case Dtype.Float64 => dec.doubles
+    }
+  }
+
   def blockSchema(d: Dtype): StructType = StructType(Seq(
     StructField("gx", IntegerType, nullable = false),
     StructField("gy", IntegerType, nullable = false),
@@ -488,7 +510,7 @@ object N5BlockIO {
   }
 
   /** Whole-file read: nio for file://, Hadoop stream otherwise. */
-  def readAllBytes(fs: FileSystem, p: HPath): Array[Byte] = {
+  private def readAllBytes(fs: FileSystem, p: HPath): Array[Byte] = {
     val lp = localPath(fs, p)
     if (lp != null) java.nio.file.Files.readAllBytes(lp)
     else {
@@ -625,10 +647,8 @@ object N5BlockIO {
 
   private def fillBlock(shape: Array[Int], attrs: DatasetAttributes): DecodedBlock = {
     val n = shape.product
-    if (attrs.dataType == graft.n5.Dtype.Float32 ||
-        attrs.dataType == graft.n5.Dtype.Float64)
-      DecodedBlock(null, shape, null, new Array[Double](n))
-    else DecodedBlock(null, shape, new Array[Long](n), null)
+    if (attrs.dataType.isFloat) DecodedBlock(shape, null, new Array[Double](n))
+    else DecodedBlock(shape, new Array[Long](n), null)
   }
 
 }
@@ -775,28 +795,13 @@ class N5BlockReader(
     require(dec.elementCount >= dec.numElements,
       s"block decodes ${dec.elementCount} elements, expected " +
         s"${dec.numElements} — truncated or varlength-short block")
-    val n = dec.numElements
-    attrs.dataType match {
-      case Dtype.UInt8 | Dtype.Int16 =>
-        val a = new Array[Short](n)
-        var i = 0; while (i < n) { a(i) = dec.longs(i).toShort; i += 1 }
-        UnsafeArrayData.fromPrimitiveArray(a)
-      case Dtype.Int8 =>
-        val a = new Array[Byte](n)
-        var i = 0; while (i < n) { a(i) = dec.longs(i).toByte; i += 1 }
-        UnsafeArrayData.fromPrimitiveArray(a)
-      case Dtype.UInt16 | Dtype.Int32 =>
-        val a = new Array[Int](n)
-        var i = 0; while (i < n) { a(i) = dec.longs(i).toInt; i += 1 }
-        UnsafeArrayData.fromPrimitiveArray(a)
-      case Dtype.UInt32 | Dtype.UInt64 | Dtype.Int64 =>
-        UnsafeArrayData.fromPrimitiveArray(dec.longs)
-      case Dtype.Float32 =>
-        val a = new Array[Float](n)
-        var i = 0; while (i < n) { a(i) = dec.doubles(i).toFloat; i += 1 }
-        UnsafeArrayData.fromPrimitiveArray(a)
-      case Dtype.Float64 =>
-        UnsafeArrayData.fromPrimitiveArray(dec.doubles)
+    N5Schema.sparkValues(dec, attrs.dataType) match {
+      case a: Array[Short] => UnsafeArrayData.fromPrimitiveArray(a)
+      case a: Array[Byte] => UnsafeArrayData.fromPrimitiveArray(a)
+      case a: Array[Int] => UnsafeArrayData.fromPrimitiveArray(a)
+      case a: Array[Long] => UnsafeArrayData.fromPrimitiveArray(a)
+      case a: Array[Float] => UnsafeArrayData.fromPrimitiveArray(a)
+      case a: Array[Double] => UnsafeArrayData.fromPrimitiveArray(a)
     }
   }
 
@@ -849,7 +854,7 @@ class N5ElementsReader(
 
   // current-block state
   private var bi = -1
-  private var dec: DecodedBlock = null
+  private var values: AnyRef = null // N5Schema.sparkValues of the block
   private var n = 0
   private var off = 0
   private var x0 = 0L; private var y0 = 0L; private var z0 = 0L
@@ -867,7 +872,7 @@ class N5ElementsReader(
     y0 = g(1).toLong * attrs.blockSize(1)
     z0 = g(2).toLong * attrs.blockSize(2)
     if (needV) {
-      dec = N5BlockIO.readDecode(fs, part.root, part.dataset, g, attrs,
+      val dec = N5BlockIO.readDecode(fs, part.root, part.dataset, g, attrs,
         shardState)
       // the coordinate unravel trusts the attrs-derived trimmed shape; a
       // block file whose stored header disagrees (corrupt write, foreign
@@ -878,6 +883,7 @@ class N5ElementsReader(
       require(dec.elementCount >= n,
         s"block ${g.mkString("/")}: decoded ${dec.elementCount} elements, " +
           s"expected $n — truncated or varlength-short block")
+      values = N5Schema.sparkValues(dec, attrs.dataType)
     }
     off = 0
     true
@@ -900,25 +906,13 @@ class N5ElementsReader(
         case "z" =>
           var i = 0
           while (i < m) { v.putLong(i, z0 + (off + i) / (sx * sy)); i += 1 }
-        case "v" => attrs.dataType match {
-          case Dtype.UInt8 | Dtype.Int16 =>
-            var i = 0
-            while (i < m) { v.putShort(i, dec.longs(off + i).toShort); i += 1 }
-          case Dtype.Int8 =>
-            var i = 0
-            while (i < m) { v.putByte(i, dec.longs(off + i).toByte); i += 1 }
-          case Dtype.UInt16 | Dtype.Int32 =>
-            var i = 0
-            while (i < m) { v.putInt(i, dec.longs(off + i).toInt); i += 1 }
-          case Dtype.UInt32 | Dtype.UInt64 | Dtype.Int64 =>
-            var i = 0
-            while (i < m) { v.putLong(i, dec.longs(off + i)); i += 1 }
-          case Dtype.Float32 =>
-            var i = 0
-            while (i < m) { v.putFloat(i, dec.doubles(off + i).toFloat); i += 1 }
-          case Dtype.Float64 =>
-            var i = 0
-            while (i < m) { v.putDouble(i, dec.doubles(off + i)); i += 1 }
+        case "v" => values match {
+          case a: Array[Short] => v.putShorts(0, m, a, off)
+          case a: Array[Byte] => v.putBytes(0, m, a, off)
+          case a: Array[Int] => v.putInts(0, m, a, off)
+          case a: Array[Long] => v.putLongs(0, m, a, off)
+          case a: Array[Float] => v.putFloats(0, m, a, off)
+          case a: Array[Double] => v.putDoubles(0, m, a, off)
         }
         case other =>
           throw new IllegalArgumentException(s"unknown element column $other")
@@ -1145,6 +1139,7 @@ class N5BlockWriter(
     val n = shape.product
     require(data.numElements() == n,
       s"block ($gx,$gy,$gz): data has ${data.numElements()} elements, shape needs $n")
+    // the write conversion: the codec's (longs, doubles) payload
     val (longs, doubles) = elemType match {
       case ShortType => (data.toShortArray().map(_.toLong), null)
       case ByteType => (data.toByteArray().map(_.toLong), null)

@@ -13,6 +13,12 @@ import scala.jdk.CollectionConverters._
   *    re-parses the default resources, so a per-call construction on a
   *    metadata read, grid walk or block reader costs tens of milliseconds
   *    per query.
+  *  - Per-dtype element conversions live in one place per direction:
+  *    `BlockCodec.widen`/`narrow` between element bytes and the Long/
+  *    Double payload, and `N5Schema.elementType` plus the read
+  *    conversion `N5Schema.sparkValues` in the connector. A new
+  *    `case Dtype.UInt8` loop set elsewhere in those files is the
+  *    scattered sign handling the single codec exists to prevent.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -37,5 +43,15 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"per-call Hadoop Configuration construction:\n${offenders.mkString("\n")}")
     assert(ctor.findAllIn(new String(Files.readAllBytes(helper))).size == 1)
+  }
+
+  test("per-dtype conversion loops live only in the dtype codec and N5Schema") {
+    for ((rel, max) <- Seq("graft/n5/BlockCodec.scala" -> 2,
+        "graft/sources/n5/N5DataSource.scala" -> 2)) {
+      val f = mainRoot.resolve(rel)
+      val n = "case Dtype.UInt8".r
+        .findAllIn(new String(Files.readAllBytes(f))).size
+      assert(n <= max, s"$f has $n `case Dtype.UInt8` matches; at most $max")
+    }
   }
 }

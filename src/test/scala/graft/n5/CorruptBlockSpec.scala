@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
 
 /** Foreign on-disk damage to an N5 block (no fixture): a truncated gzip
   * block and a valid gzip block holding too few bytes must each fail the
-  * read with a message naming that block, through both `readBox` and the
-  * blocks view, and never return rows.
+  * read with a message naming that block, through `readBox`, the blocks
+  * view and `writeBox`'s read of a partly covered block, and never return
+  * rows.
   */
 class CorruptBlockSpec extends SparkSpec {
 
@@ -45,7 +46,7 @@ class CorruptBlockSpec extends SparkSpec {
     r
   }
 
-  /** `intercept` fails the test if `read` returns rows instead of failing. */
+  /** `intercept` fails the test if `read` returns instead of failing. */
   private def assertNamedFailure(key: String)(read: => Array[_]): Unit = {
     val ex = intercept[Exception](read)
     val chain = Iterator.iterate(ex: Throwable)(_.getCause)
@@ -70,6 +71,16 @@ class CorruptBlockSpec extends SparkSpec {
         N5.read(spark, root, ds)
           .filter(col("gx") === g(0) && col("gy") === g(1) && col("gz") === g(2))
           .select(col("data")).collect()
+      }
+    }
+
+    test(s"writeBox into a $what block fails naming $key") {
+      val lo = g.zip(bs).map { case (gi, b) => gi.toLong * b }
+      val hi = lo.map(_ + 2)
+      assertNamedFailure(key) {
+        N5.writeBox(spark, root, ds, lo, hi,
+          N5.boxGrid(spark, lo, hi).withColumn("v", lit(1L)))
+        Array.empty[Int]
       }
     }
   }
