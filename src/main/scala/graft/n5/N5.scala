@@ -106,37 +106,27 @@ object N5 {
       expr(s"id div ${dx * dy} + ${start(2)}").as("z"))
   }
 
-  /** Write a block table (gx,gy,gz,shape,data) as a dataset. Dispatches
-    * on the attrs' declared container format (r15): `format = "zarr"`
-    * attrs — e.g. a pyramid level derived from a zarr s0 — route through
-    * [[writeZarr]] with their own separator, so derivation operators
-    * (Multiscale, Regroup) stay format-agnostic and never write N5
-    * metadata into a zarr store.
-    */
-  def write(
-      df: DataFrame, root: String, dataset: String, attrs: DatasetAttributes,
-      extraAttrs: Map[String, String] = Map.empty): Unit =
-    if (attrs.isZarr3)
-      writeZarr3(df, root, dataset, attrs, extraAttrs)
-    else if (attrs.isZarr)
-      writeZarr(df, root, dataset, attrs, attrs.zarrSeparator, extraAttrs)
-    else writeN5(df, root, dataset, attrs, extraAttrs)
-
-  /** Write a block table as a zarr v3 container: non-sharded profile
-    * (r18) — fill-padded C-order chunks through
-    * `[bytes <endian>, compressor?, crc32c]`, default "c/"-prefixed
-    * chunk keys, one `zarr.json` committed AFTER the data — or the
-    * `sharding_indexed` profile (r19) when `attrs.shard` is set:
-    * blockSize is the INNER chunk shape, chunk files are shards of
-    * `blockSize·chunksPerShard` voxels with the u64-pair index (+
-    * crc32c) at the end, and absent inner chunks stamp all-ones index
-    * entries (fill). Sharded writes CLUSTER the block table on the
-    * shard grid and sort within partitions so each shard's inner
-    * chunks reach exactly one task consecutively — the shard then
+  /** Write a block table (gx,gy,gz,shape,data) as a dataset in the attrs'
+    * declared container format — N5, zarr v2 (r14) or zarr v3 (r18) — so
+    * derivation operators (Multiscale, Regroup) stay format-agnostic: a
+    * pyramid level derived from a zarr s0 keeps its format, separator and
+    * byte order and never gets N5 metadata. Every writer option comes
+    * from the attrs here, once. Every container publishes chunks via
+    * atomic temp+rename and commits its metadata AFTER the data.
+    *
+    * zarr v3 writes the non-sharded profile — fill-padded C-order chunks
+    * through `[bytes <endian>, compressor?, crc32c]`, default
+    * "c/"-prefixed chunk keys — or the `sharding_indexed` profile (r19)
+    * when `attrs.shard` is set: blockSize is the INNER chunk shape, chunk
+    * files are shards of `blockSize·chunksPerShard` voxels with the
+    * u64-pair index (+ crc32c) at the end, and absent inner chunks stamp
+    * all-ones index entries (fill). Sharded writes CLUSTER the block
+    * table on the shard grid and sort within partitions so each shard's
+    * inner chunks reach exactly one task consecutively — the shard then
     * STREAMS to disk (O(chunk) writer memory however large the shard),
     * which is what makes GB-scale shards writable at all.
     */
-  def writeZarr3(
+  def write(
       df: DataFrame, root: String, dataset: String, attrs: DatasetAttributes,
       extraAttrs: Map[String, String] = Map.empty): Unit = {
     val clustered = attrs.shard match {
@@ -148,7 +138,7 @@ object N5 {
     }
     val base = clustered.write.format("n5")
       .option("dataset", dataset)
-      .option("format", "zarr3")
+      .option("format", attrs.format)
       .option("zarrSeparator", attrs.zarrSeparator)
       .option("zarrLittleEndian", attrs.zarrLittleEndian.toString)
       .option("zarr3ChunkPrefix", attrs.zarr3ChunkPrefix.toString)
@@ -176,45 +166,22 @@ object N5 {
       .save(root)
   }
 
-  private def writeN5(
+  /** Write a block table as a zarr v3 container (see [[write]]). */
+  def writeZarr3(
       df: DataFrame, root: String, dataset: String, attrs: DatasetAttributes,
-      extraAttrs: Map[String, String]): Unit =
-    df.write.format("n5")
-      .option("dataset", dataset)
-      .option("dimensions", attrs.dimensions.mkString(","))
-      .option("blockSize", attrs.blockSize.mkString(","))
-      .option("dataType", attrs.dataType.name)
-      .option("compression", attrs.compression.codec)
-      .option("compressionLevel", attrs.compression.level.toString)
-      .option("extraAttrs",
-        (attrs.extra ++ extraAttrs).map { case (k, v) => s"$k=$v" }.mkString(";;"))
-      .mode("append")
-      .save(root)
+      extraAttrs: Map[String, String] = Map.empty): Unit =
+    write(df, root, dataset, attrs.copy(format = "zarr3"), extraAttrs)
 
-  /** Write a block table (gx,gy,gz,shape,data) as a zarr v2 container
-    * (r14): C-order fill-padded chunks under "."- or "/"-separated keys
-    * plus `.zarray` metadata committed AFTER the data — the same
-    * atomic-rename writer discipline as the N5 path, so zarr stores get
-    * torn-block-free, retry-idempotent writes too. Compressor profile
+  /** Write a block table as a zarr v2 container (see [[write]]) with
+    * "."- or "/"-separated chunk keys; compressor profile
     * raw/zlib/gzip/blosc (loud otherwise).
     */
   def writeZarr(
       df: DataFrame, root: String, dataset: String, attrs: DatasetAttributes,
       separator: String = ".",
       extraAttrs: Map[String, String] = Map.empty): Unit =
-    df.write.format("n5")
-      .option("dataset", dataset)
-      .option("format", "zarr")
-      .option("zarrSeparator", separator)
-      .option("dimensions", attrs.dimensions.mkString(","))
-      .option("blockSize", attrs.blockSize.mkString(","))
-      .option("dataType", attrs.dataType.name)
-      .option("compression", attrs.compression.codec)
-      .option("compressionLevel", attrs.compression.level.toString)
-      .option("extraAttrs",
-        (attrs.extra ++ extraAttrs).map { case (k, v) => s"$k=$v" }.mkString(";;"))
-      .mode("append")
-      .save(root)
+    write(df, root, dataset,
+      attrs.copy(format = "zarr", zarrSeparator = separator), extraAttrs)
 
   /** Per-element view (x,y,z,v) of a block table. Lazy posexplode +
     * integer index math — only queries that genuinely need per-voxel rows

@@ -39,7 +39,7 @@ object Regroup {
     * the q85 volume). Float dtypes travel as raw Double bits (exact; the
     * convention of every typed pipeline here).
     */
-  private[n5] def typedLongBlocks(
+  private[graft] def typedLongBlocks(
       blocks: DataFrame, dtype: Dtype, keys: Seq[String])
       : org.apache.spark.sql.Dataset[(Long, Long, Long, Array[Int], Array[Long])] = {
     import blocks.sparkSession.implicits._
@@ -112,17 +112,31 @@ object Regroup {
       }
   }
 
-  /** Fragment full z-slices (z, x-fastest pixels of a w×h plane) into the
-    * block-column rectangles they intersect — the scale path for slice
-    * ingest: shuffle rows are fragments (blocks-per-slice), not pixels.
-    * Slices may arrive offset in z (streaming slabs pass absolute z).
+  /** The one plane-to-block writer: every TIFF ingest (slice series,
+    * per-channel series, OME page stacks, streaming slabs) hands its
+    * decoders' native Int planes (z, x-fastest pixels of a w×h plane)
+    * here. Each plane is range-checked once against the dtype, widened
+    * while its block-column rectangles are cut, then assembled and
+    * written. Slices may arrive offset in z (streaming slabs pass
+    * absolute z).
     */
-  def slicesToBlocks(
-      slices: org.apache.spark.sql.Dataset[(Long, Array[Long])],
+  def writeSlices(
+      slices: org.apache.spark.sql.Dataset[(Long, Array[Int])],
+      dst: DatasetAttributes, dstRoot: String, dstDataset: String): Unit =
+    writeAssembledAs(slicesToBlocks(slices, dst), dstRoot, dstDataset, dst,
+      isFloat = false)
+
+  /** Fragment full z-slices into the block-column rectangles they
+    * intersect: shuffle rows are fragments (blocks-per-slice), not pixels.
+    */
+  private def slicesToBlocks(
+      slices: org.apache.spark.sql.Dataset[(Long, Array[Int])],
       dst: DatasetAttributes): org.apache.spark.sql.Dataset[OutBlock] = {
     import slices.sparkSession.implicits._
     val Array(w, h, _) = dst.dimensions.map(_.toInt)
     val Array(nbx, nby, nbz) = dst.blockSize
+    val (lo, hi) = dst.dataType.integerRange.getOrElse((Long.MinValue, Long.MaxValue))
+    val dtypeName = dst.dataType.name
     val frags = slices.flatMap { case (z, px) =>
       val gz = (z / nbz).toInt
       val oz = (z - gz.toLong * nbz).toInt
@@ -138,7 +152,16 @@ object Regroup {
           val buf = new Array[Long](fx * fy)
           var y = 0
           while (y < fy) {
-            System.arraycopy(px, x0 + (y0 + y) * w, buf, y * fx, fx)
+            val src = x0 + (y0 + y) * w
+            var x = 0
+            while (x < fx) {
+              val v = px(src + x)
+              // safe cast (numpy casting='safe' analogue): fail, don't wrap
+              if (v < lo || v > hi) throw new IllegalArgumentException(
+                s"slice z=$z: pixel $v outside $dtypeName range [$lo, $hi]")
+              buf(y * fx + x) = v
+              x += 1
+            }
             y += 1
           }
           fr += Frag(tgx, tgy, gz, 0, 0, oz, fx, fy, 1, buf)
@@ -173,14 +196,9 @@ object Regroup {
         .select(col("gx"), col("gy"), col("gz"), col("shape"),
           col("data").cast(s"array<${elemT.catalogString}>").as("data"))
 
-  /** Write assembled blocks with the dtype's Spark element type. */
-  def writeAssembled(
-      assembled: org.apache.spark.sql.Dataset[OutBlock],
-      dstRoot: String, dstDataset: String, dst: DatasetAttributes): Unit =
-    writeAssembledAs(assembled, dstRoot, dstDataset, dst, isFloat = false)
-
-  /** Like writeAssembled, but decodes float payloads travelling as raw
-    * Double bits in the Long array (the typed-pipeline convention).
+  /** Write assembled blocks with the dtype's Spark element type, decoding
+    * float payloads that travel as raw Double bits in the Long array (the
+    * typed-pipeline convention) when `isFloat`.
     */
   def writeAssembledAs(
       assembled: org.apache.spark.sql.Dataset[OutBlock],

@@ -351,7 +351,7 @@ object N5GridFilters {
   * (grid, modificationTime) per stored block file.
   */
 object N5GridWalk {
-  def list(
+  private def list(
       fs: FileSystem, base: HPath, ndim: Int,
       axisOk: (Int, Int) => Boolean): Seq[(Array[Int], Long)] = {
     def digits(s: String) = s.nonEmpty && s.forall(_.isDigit)
@@ -385,23 +385,36 @@ object N5GridWalk {
       fs: FileSystem, base: HPath, attrs: DatasetAttributes,
       axisOk: (Int, Int) => Boolean): Seq[(Array[Int], Long)] =
     if (attrs.isZarr3) listZarr3(fs, base, attrs, axisOk)
-    else if (!attrs.isZarr) list(fs, base, attrs.ndim, axisOk)
-    else if (attrs.zarrSeparator == "/")
-      list(fs, base, attrs.ndim,
-        (axis, v) => axisOk(attrs.ndim - 1 - axis, v))
+    else if (attrs.isZarr)
+      listZarrKeys(fs, base, attrs.ndim, attrs.zarrSeparator, prefixed = false, axisOk)
+    else list(fs, base, attrs.ndim, axisOk)
+
+  /** zarr chunk FILES keyed by C-order indices joined by `sep` (after a
+    * leading "c" key part when `prefixed`, zarr v3's default encoding):
+    * "/" keys are the nested walk with axes reversed, "." keys ONE
+    * listing of the dataset dir. Grids and `axisOk` are in engine order.
+    */
+  private def listZarrKeys(
+      fs: FileSystem, base: HPath, ndim: Int, sep: String, prefixed: Boolean,
+      axisOk: (Int, Int) => Boolean): Seq[(Array[Int], Long)] =
+    if (sep == "/")
+      list(fs, if (prefixed) new HPath(base, "c") else base, ndim,
+        (axis, v) => axisOk(ndim - 1 - axis, v))
         .map { case (g, m) => (g.reverse, m) }
-    else {
-      if (!fs.exists(base)) Nil
-      else fs.listStatus(base).toSeq.flatMap { st =>
-        val parts = st.getPath.getName.split('.')
-        if (!st.isFile || parts.length != attrs.ndim ||
-          !parts.forall(p => p.nonEmpty && p.forall(_.isDigit))) Nil
-        else {
-          val g = parts.map(_.toInt).reverse
-          if (g.indices.forall(i => axisOk(i, g(i))))
-            Seq((g, st.getModificationTime))
-          else Nil
-        }
+    else if (!fs.exists(base)) Nil
+    else fs.listStatus(base).toSeq.flatMap { st =>
+      val all = st.getPath.getName.split('.')
+      val parts =
+        if (!prefixed) all
+        else if (all.length == ndim + 1 && all.head == "c") all.tail
+        else Array.empty[String]
+      if (!st.isFile || parts.length != ndim ||
+        !parts.forall(p => p.nonEmpty && p.forall(_.isDigit))) Nil
+      else {
+        val g = parts.map(_.toInt).reverse
+        if (g.indices.forall(i => axisOk(i, g(i))))
+          Seq((g, st.getModificationTime))
+        else Nil
       }
     }
 
@@ -423,32 +436,8 @@ object N5GridWalk {
       case Some(c) =>
         (0 until c(axis)).exists(l => axisOk(axis, v * c(axis) + l))
     }
-    val files: Seq[(Array[Int], Long)] =
-      if (attrs.zarrSeparator == "/") {
-        val walkBase =
-          if (attrs.zarr3ChunkPrefix) new HPath(base, "c") else base
-        list(fs, walkBase, ndim, (axis, v) => fileAxisOk(ndim - 1 - axis, v))
-          .map { case (g, m) => (g.reverse, m) }
-      } else {
-        if (!fs.exists(base)) Nil
-        else fs.listStatus(base).toSeq.flatMap { st =>
-          val partsAll = st.getPath.getName.split('.')
-          val parts =
-            if (attrs.zarr3ChunkPrefix) {
-              if (partsAll.length == ndim + 1 && partsAll.head == "c")
-                partsAll.tail
-              else Array.empty[String]
-            } else partsAll
-          if (!st.isFile || parts.length != ndim ||
-            !parts.forall(p => p.nonEmpty && p.forall(_.isDigit))) Nil
-          else {
-            val g = parts.map(_.toInt).reverse
-            if (g.indices.forall(i => fileAxisOk(i, g(i))))
-              Seq((g, st.getModificationTime))
-            else Nil
-          }
-        }
-      }
+    val files = listZarrKeys(fs, base, ndim, attrs.zarrSeparator,
+      attrs.zarr3ChunkPrefix, fileAxisOk)
     cps match {
       case None => files
       case Some(c) =>

@@ -12,8 +12,9 @@ import org.apache.spark.sql.types.StructType
   * file as one row when it APPEARS (or is rewritten with a newer mtime) —
   * the live-acquisition counterpart of the streaming sink, e.g. a
   * microscope writing blocks while a Spark job derives stats or
-  * multiscale levels downstream. Pushed gx/gy/gz filters prune the
-  * streaming directory walk exactly like the batch scan.
+  * multiscale levels downstream. Blocks are listed by the batch scan's
+  * container-aware walk (`N5GridWalk.listChunks`: N5, zarr v2 and zarr
+  * v3 keys alike), and pushed gx/gy/gz filters prune it the same way.
   *
   * Offset design: a modification-time watermark plus the block paths
   * within a GRACE WINDOW behind it. A batch admits files with
@@ -49,7 +50,7 @@ class N5MicroBatchStream(
 
   /** (grid, mtime) of every stored block surviving the pushed filters. */
   private def listBlocks(): Seq[(Array[Int], Long)] =
-    N5GridWalk.list(fs, new HPath(root, dataset), attrs.ndim,
+    N5GridWalk.listChunks(fs, new HPath(root, dataset), attrs,
       N5GridFilters.axisOk(filters))
 
   // snapshot backing the most recent latestOffset(), so a planned batch

@@ -19,10 +19,11 @@ import org.apache.spark.sql.functions._
   *
   * Spark shape: the driver does the metadata phase (page count, page
   * geometry) once; a page-manifest DataFrame fans pages out to executors;
-  * each task decodes only its pages and emits elements; per-channel block
-  * regroup + DSv2 write. Crop predicates prune pages in the MANIFEST —
-  * before any decode — mirroring the reference's grid enumeration over the
-  * cropped box (`ometif_to_n5.py:123-127`).
+  * each task decodes and crops only its pages; each channel's planes go
+  * through the shared plane-to-block writer (`Regroup.writeSlices`). Crop
+  * predicates prune pages in the MANIFEST — before any decode — mirroring
+  * the reference's grid enumeration over the cropped box
+  * (`ometif_to_n5.py:123-127`).
   */
 object OmeTiffVolume {
 
@@ -100,10 +101,8 @@ object OmeTiffVolume {
     val manifest = pages.toDF("c", "z", "page")
       .repartition(math.min(pages.size, 64))
 
-    // ---- executor phase: open-per-task decode (R13), element emit ----
+    // ---- executor phase: open-per-task decode (R13), crop ----
     val (ys, xs, yn, xn) = (box.yStart, box.xStart, box.ySize, box.xSize)
-    val (loVal, hiVal) =
-      dtype.integerRange.getOrElse((Long.MinValue, Long.MaxValue))
     val decoded = manifest.as[(Int, Int, Int)]
       .mapPartitions { it =>
         // each task opens the file fresh (no shared state across tasks)
@@ -117,27 +116,11 @@ object OmeTiffVolume {
             require(img.getRaster.getNumBands == 1,
               s"page $page: expected single-band grayscale, got " +
                 s"${img.getRaster.getNumBands} bands")
-            val w = img.getWidth
-            val px = new Array[Int](w * img.getHeight)
-            img.getRaster.getPixels(0, 0, w, img.getHeight, px)
-          // crop y/x and shift to the cropped origin; safe-cast discipline
-          // (Dtype.integerRange): reject out-of-range pixels with page
-          // context instead of an opaque ANSI overflow at write time
-          val out = new Array[Int](xn * yn)
-          var yy = 0
-          while (yy < yn) {
-            var xx = 0
-            while (xx < xn) {
-              val v = px((xs + xx) + (ys + yy) * w)
-              if (v < loVal || v > hiVal) throw new IllegalArgumentException(
-                s"page $page (c=$c, z=$z): pixel $v outside ${dtype.name} " +
-                  s"range [$loVal, $hiVal]")
-              out(xx + yy * xn) = v
-              xx += 1
-            }
-            yy += 1
-          }
-          (c, z - box.zStart, out)
+            // crop y/x to the cropped origin; the range check is the
+            // plane writer's (Regroup.writeSlices)
+            val out = new Array[Int](xn * yn)
+            img.getRaster.getPixels(xs, ys, xn, yn, out)
+            (c, (z - box.zStart).toLong, out)
           // materialize the partition's pages before closing the reader:
           // the iterator is lazy and the stream must outlive every read
           }.toVector
@@ -149,16 +132,13 @@ object OmeTiffVolume {
       // channel's pages nc times
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // ---- per-channel datasets c{c}/<dataset> (ometif_to_n5.py:111-116),
-    // fragment regroup per channel (shuffle rows = slice∩block rectangles)
+    // ---- per-channel datasets c{c}/<dataset> (ometif_to_n5.py:111-116)
     try {
       (box.cStart until (box.cStart + box.cSize)).map { c =>
-        val slices = decoded.filter(col("c") === c)
-          .select(col("z").cast("long"), col("px").cast("array<bigint>"))
-          .as[(Long, Array[Long])]
-        graft.n5.Regroup.writeAssembled(
-          graft.n5.Regroup.slicesToBlocks(slices, attrs),
-          dstRoot, s"c$c/$dataset", attrs)
+        graft.n5.Regroup.writeSlices(
+          decoded.filter(col("c") === c).select(col("z"), col("px"))
+            .as[(Long, Array[Int])],
+          attrs, dstRoot, s"c$c/$dataset")
         attrs
       }
     } finally decoded.unpersist()

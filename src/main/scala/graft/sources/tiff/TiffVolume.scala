@@ -1,21 +1,27 @@
 package graft.sources.tiff
 
-import graft.n5.{Compression, DatasetAttributes, Dtype, N5, N5Meta}
+import graft.n5.{Compression, DatasetAttributes, Dtype, N5, N5Meta, Regroup}
 import graft.sources.HadoopFs
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** N5 volume <-> 2-D TIFF slice series, the reference's ingest/export pair
-  * (`tif_to_n5.py:15-60`, `n5_to_tif.py:32-51`), Spark-native:
+  * (`tif_to_n5.py:15-60`, `n5_to_tif.py:32-51`), Spark-native. Both
+  * directions go through one shared piece each:
   *
-  * Export: element view → regroup by z (one shuffle) → each task encodes
-  * and writes its slices directly (data never returns to the driver — same
-  * worker-writes discipline as Dask's `store(lock=False)`).
+  * Export: [[pages]], the block-to-page assembler — native-typed block
+  * read pruned to the box's grid range → per-z plane fragments clipped to
+  * the box and safe-cast to TIFF samples → one shuffle pasting one page
+  * per z. `exportSlices` writes each page in its task (data never returns
+  * to the driver — same worker-writes discipline as Dask's
+  * `store(lock=False)`); `exportBox` collects the box's pages into one
+  * multi-page file.
   *
   * Ingest: `binaryFile` scan (one task per slice file) → executor-side
-  * decode → element view → block regroup → N5 DSv2 writer. The slab loop
-  * of `tif_to_n5.py:53-58` becomes ordinary bounded partitions.
+  * decode to native Int planes → [[graft.n5.Regroup.writeSlices]], the
+  * plane-to-block writer every TIFF ingest shares. The slab loop of
+  * `tif_to_n5.py:53-58` becomes ordinary bounded partitions.
   */
 object TiffVolume {
 
@@ -31,18 +37,82 @@ object TiffVolume {
     try out.write(bytes) finally out.close()
   }
 
+  /** The block-to-page assembler shared by both exports: one (z, page)
+    * row per z of the box [start, end) that holds any stored voxel, the
+    * page a w×h x-fastest array of `bits`-bit samples. Absent blocks
+    * leave zeros (zarr fill-value parity); a z with no stored block in
+    * the box has no row, and callers fill it with a zero page.
+    *
+    * Scale formulation: one PLANE FRAGMENT row per (block, local z) —
+    * primitive pixel arrays, not per-voxel struct rows — shuffled to a
+    * per-z paste. Peak memory per task is one page, the floor any
+    * whole-page TIFF encoder needs. The safe cast fails loudly on values
+    * outside [0, 2^bits) (the unsigned TIFF sample would silently wrap
+    * them) and on non-integral float voxels (numpy casting='safe'
+    * refuses float->int; a plain cast would truncate 3.7 to 3).
+    */
+  private def pages(
+      spark: SparkSession, root: String, dataset: String,
+      attrs: DatasetAttributes, start: Array[Long], end: Array[Long],
+      bits: Int): Dataset[(Long, Array[Int])] = {
+    import spark.implicits._
+    val limit = (1L << bits) - 1
+    val isFloat = attrs.dataType.isFloat
+    val (w, h) = ((end(0) - start(0)).toInt, (end(1) - start(1)).toInt)
+    val bs = attrs.blockSize
+    val inGrid = Seq("gx", "gy", "gz").zipWithIndex.map { case (g, i) =>
+      col(g) >= start(i) / bs(i) && col(g) <= (end(i) - 1) / bs(i)
+    }.reduce(_ && _)
+    val blocks = Regroup.typedLongBlocks(
+      N5.read(spark, root, dataset).filter(inGrid), attrs.dataType,
+      Seq("x0", "y0", "z0"))
+    blocks.flatMap { case (x0, y0, z0, shape, data) =>
+      val Array(sx, sy, sz) = shape
+      val (ix0, ix1) = (math.max(x0, start(0)), math.min(x0 + sx, end(0)))
+      val (iy0, iy1) = (math.max(y0, start(1)), math.min(y0 + sy, end(1)))
+      val (fw, fh) = ((ix1 - ix0).toInt, (iy1 - iy0).toInt)
+      (math.max(z0, start(2)) until math.min(z0 + sz, end(2))).iterator.map { z =>
+        val plane = new Array[Int](fw * fh)
+        var y = 0
+        while (y < fh) {
+          val src = ((ix0 - x0) + (iy0 - y0 + y) * sx + (z - z0) * sx * sy).toInt
+          var x = 0
+          while (x < fw) {
+            val raw = data(src + x)
+            val v = if (!isFloat) raw else {
+              val d = java.lang.Double.longBitsToDouble(raw)
+              if (!(d == math.floor(d))) throw new IllegalArgumentException(
+                s"non-integral voxel $d at z=$z cannot become a $bits-bit TIFF sample")
+              d.toLong
+            }
+            if (v < 0 || v > limit) throw new IllegalArgumentException(
+              s"safe cast violation: voxel $v outside [0, $limit] for $bits-bit TIFF")
+            plane(x + y * fw) = v.toInt
+            x += 1
+          }
+          y += 1
+        }
+        (z, (ix0 - start(0)).toInt, (iy0 - start(1)).toInt, fw, fh, plane)
+      }
+    }.groupByKey(_._1).mapGroups { (z, it) =>
+      val px = new Array[Int](w * h)
+      it.foreach { case (_, fx0, fy0, fw, fh, plane) =>
+        var row = 0
+        while (row < fh) {
+          System.arraycopy(plane, row * fw, px, fx0 + (fy0 + row) * w, fw)
+          row += 1
+        }
+      }
+      (z, px)
+    }
+  }
+
   /** Export every z-slice of a dataset as `prefix%05d.tif` under outDir.
     * Sparse volumes export densely (zarr fill-value parity): voxels of
     * absent blocks come out as zeros, and fully-absent z-slabs still
     * produce (all-zero) slice files — the series never has numbering
     * gaps. Returns the number of slices written (= the volume depth).
-    *
-    * Scale formulation: one PLANE FRAGMENT row per (block, local z) —
-    * primitive pixel arrays, not per-voxel struct rows — shuffled to a
-    * per-z assembly that pastes fragments into the page and writes it in
-    * the same task. Peak memory per task is one w×h page, the floor any
-    * whole-page TIFF encoder needs. Signed dtypes with negative voxels
-    * fail loudly (the unsigned TIFF sample would silently wrap them).
+    * Signed dtypes with negative voxels fail loudly.
     */
   def exportSlices(
       spark: SparkSession, root: String, dataset: String,
@@ -55,41 +125,10 @@ object TiffVolume {
       case d => throw new IllegalArgumentException(
         s"TIFF export supports 8/16-bit integer volumes, got ${d.name}")
     }
-    val limit = (1 << bits) - 1
     import spark.implicits._
-    val typed = N5.read(spark, root, dataset)
-      .select(col("x0"), col("y0"), col("z0"), col("shape"),
-        col("data").cast("array<bigint>"))
-      .as[(Long, Long, Long, Array[Int], Array[Long])]
-    val frags = typed.flatMap { case (x0, y0, z0, shape, data) =>
-      val Array(sx, sy, sz) = shape
-      (0 until sz).iterator.map { lz =>
-        val plane = new Array[Int](sx * sy)
-        val base = lz * sx * sy
-        var i = 0
-        while (i < sx * sy) {
-          val v = data(base + i)
-          require(v >= 0 && v <= limit,
-            s"safe cast violation: voxel $v outside [0, $limit] for $bits-bit TIFF")
-          plane(i) = v.toInt
-          i += 1
-        }
-        (z0 + lz, x0.toInt, y0.toInt, sx, sy, plane)
-      }
-    }
-    val written = frags.groupByKey(_._1)
-      .mapGroups { (z, it) =>
-        val px = new Array[Int](w * h)
-        it.foreach { case (_, fx0, fy0, sx, sy, plane) =>
-          var row = 0
-          while (row < sy) {
-            System.arraycopy(plane, row * sx, px, fx0 + (fy0 + row) * w, sx)
-            row += 1
-          }
-        }
-        writePage(outDir, prefix, z.toInt, w, h, px, bits)
-        z
-      }
+    val written = pages(spark, root, dataset, attrs,
+      Array(0L, 0L, 0L), attrs.dimensions, bits)
+      .map { case (z, px) => writePage(outDir, prefix, z.toInt, w, h, px, bits); z }
     // fully-absent z-slabs still produce (all-zero) files; the written-z
     // set stays distributed (an anti-join against the dense z range —
     // collecting it was a depth-sized driver set), and page writes are
@@ -105,38 +144,31 @@ object TiffVolume {
   /** Export one sub-box [start,end) as a single multi-page TIFF (one page
     * per z) — reference `n5_block_to_tif` (`n5_to_tif.py:20-29`), with the
     * same safe-cast discipline: an 8-bit target errors if any voxel
-    * overflows (ANSI cast), mirroring numpy `casting='safe'`.
+    * overflows, mirroring numpy `casting='safe'`. The box must lie inside
+    * the dataset's dims.
     */
   def exportBox(
       spark: SparkSession, root: String, dataset: String, outFile: String,
       start: Array[Long], end: Array[Long], bitsOverride: Int = 0): Unit = {
     val attrs = N5Meta.datasetAttributes(root, dataset)
+    require(start.length == 3 && end.length == 3 &&
+      (0 until 3).forall(i => start(i) >= 0 && start(i) < end(i) &&
+        end(i) <= attrs.dimensions(i)),
+      s"exportBox: box [${start.mkString(",")}, ${end.mkString(",")}) is " +
+        s"empty or outside dims ${attrs.dimensions.mkString("x")}")
     val bits = if (bitsOverride > 0) bitsOverride else attrs.dataType match {
       case Dtype.UInt8 | Dtype.Int8 => 8
       case _ => 16
     }
-    val limit = (1 << bits) - 1
     val (w, h) = ((end(0) - start(0)).toInt, (end(1) - start(1)).toInt)
-    // the collect below is bounded by the REQUESTED box (this entry point
+    // the collect is bounded by the REQUESTED box (this entry point
     // produces one driver-assembled TIFF file by contract — the
     // whole-volume path is exportSlices, which writes from tasks)
-    val pages = N5.readBox(spark, root, dataset, start, end)
-      .select(col("z"),
-        ((col("x") - start(0)) + (col("y") - start(1)) * w).cast("int").as("idx"),
-        // reject non-integral float voxels (numpy casting='safe' refuses
-        // float->int; ANSI cast would truncate 3.7 -> 3 silently)
-        N5.integralOrRaise(col("v"), "exportBox").cast("int").as("v"))
-      .groupBy(col("z"))
-      .agg(array_sort(collect_list(struct(col("idx"), col("v")))).as("cells"))
-      .orderBy(col("z"))
-      .select(transform(col("cells"), c => c.getField("v")).as("px"))
-      .collect()
-    val imgs = pages.map { r =>
-      val px = r.getSeq[Int](0).toArray
-      require(px.forall(v => v >= 0 && v <= limit),
-        s"safe cast violation: voxel outside [0, $limit] for $bits-bit TIFF")
-      TiffIO.buildImage(w, h, px, bits)
-    }
+    val stored = pages(spark, root, dataset, attrs, start, end, bits)
+      .collect().toMap
+    val blank = new Array[Int](w * h)
+    val imgs = (start(2) until end(2)).map(z =>
+      TiffIO.buildImage(w, h, stored.getOrElse(z, blank), bits))
     val p = new HPath(outFile)
     val fs = HadoopFs.fs(p)
     fs.mkdirs(p.getParent)
@@ -188,7 +220,6 @@ object TiffVolume {
     require(bad.isEmpty,
       s"$inDir contains .tif files without a numeric suffix: " +
         bad.map(_.getString(0)).mkString(", "))
-    require(!order.isEmpty, s"no .tif files found in $inDir")
     val ranked = order.sort(col("zraw").asc, col("path").asc)
       .select(col("path")).as[String].rdd
       .zipWithIndex().toDF("path", "z")
@@ -214,41 +245,9 @@ object TiffVolume {
       dstRoot: String, dstDataset: String,
       blockSize: Array[Int],
       dtype: Dtype = Dtype.UInt8,
-      compression: Compression = Compression("gzip")): DatasetAttributes = {
-    import spark.implicits._
-    val (loVal, hiVal) =
-      dtype.integerRange.getOrElse((Long.MinValue, Long.MaxValue))
-    val decoded = rankedSlices(spark, inDir).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (z, bytes) =>
-        val s = TiffIO.decode(bytes)
-        (z, s.width, s.height, s.pixels)
-      }).toDF("z", "w", "h", "px")
-      // three actions follow (geometry agg, size check, write): cache the
-      // decoded slices instead of re-reading + re-decoding every TIFF
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val Row(w: Int, h: Int, nz: Long) = decoded
-        .agg(max(col("w")), max(col("h")), count(lit(1))).collect()(0)
-      val bad = decoded.filter(col("w") =!= w || col("h") =!= h).count()
-      require(bad == 0, s"$bad slices differ from the ${w}x$h plane size")
-      val attrs = DatasetAttributes(
-        Array(w.toLong, h.toLong, nz), blockSize, dtype, compression)
-      // fragment path: shuffle rows are (slice ∩ block-column) rectangles,
-      // not pixels — same bytes, ~blockSize² fewer rows
-      val slices = decoded.select(col("z"), col("px").cast("array<bigint>"))
-        .as[(Long, Array[Long])]
-        .map { case (z, px) =>
-          // safe cast (numpy casting='safe' analogue): fail, don't wrap
-          require(px.forall(v => v >= loVal && v <= hiVal),
-            s"slice $z has values outside ${dtype.name} range [$loVal, $hiVal]")
-          (z, px)
-        }
-      graft.n5.Regroup.writeAssembled(
-        graft.n5.Regroup.slicesToBlocks(slices, attrs),
-        dstRoot, dstDataset, attrs)
-      attrs
-    } finally decoded.unpersist()
-  }
+      compression: Compression = Compression("gzip")): DatasetAttributes =
+    ingest(spark, inDir, dstRoot, blockSize, dtype, compression,
+      bytes => Seq(TiffIO.decode(bytes)), _ => dstDataset)._2
 
   /** Ingest an RGB / multi-band TIFF slice series into PER-CHANNEL N5
     * datasets `c{b}/<dstDataset>` — the reference's channel-as-sibling-
@@ -262,42 +261,50 @@ object TiffVolume {
       dstRoot: String, dstDataset: String,
       blockSize: Array[Int],
       dtype: Dtype = Dtype.UInt8,
-      compression: Compression = Compression("gzip")): (Int, DatasetAttributes) = {
+      compression: Compression = Compression("gzip")): (Int, DatasetAttributes) =
+    ingest(spark, inDir, dstRoot, blockSize, dtype, compression,
+      TiffIO.decodeBands, b => s"c$b/$dstDataset")
+
+  /** The one slice-series ingest body: decode every file into its band
+    * planes, check the geometry with ONE aggregate (plane size, band
+    * count, slice count), then write each band's planes through
+    * [[graft.n5.Regroup.writeSlices]] to `dstRoot`/`dataset(band)`.
+    * Returns (band count, attrs shared by every band's dataset).
+    */
+  private def ingest(
+      spark: SparkSession, inDir: String, dstRoot: String,
+      blockSize: Array[Int], dtype: Dtype, compression: Compression,
+      decode: Array[Byte] => Seq[TiffIO.Slice],
+      dataset: Int => String): (Int, DatasetAttributes) = {
     import spark.implicits._
-    val (loVal, hiVal) =
-      dtype.integerRange.getOrElse((Long.MinValue, Long.MaxValue))
     val decoded = rankedSlices(spark, inDir).as[(Long, Array[Byte])]
       .flatMap { case (z, bytes) =>
-        TiffIO.decodeBands(bytes).zipWithIndex.map { case (s, b) =>
+        decode(bytes).zipWithIndex.map { case (s, b) =>
           (z, b, s.width, s.height, s.pixels)
         }
       }.toDF("z", "band", "w", "h", "px")
-      // one decode per file feeds every channel's write (plus the
-      // geometry checks) — cache instead of re-decoding per channel
+      // one decode per file feeds the geometry aggregate and every band's
+      // write — cache instead of re-reading + re-decoding every TIFF
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val Row(w: Int, h: Int, bands: Int, nz: Long, rows: Long) = decoded
-        .agg(max(col("w")), max(col("h")), max(col("band")).cast("int") + 1,
-          countDistinct(col("z")), count(lit(1))).collect()(0)
-      val bad = decoded.filter(col("w") =!= w || col("h") =!= h).count()
-      require(bad == 0, s"$bad bands differ from the ${w}x$h plane size")
+      val g = decoded.agg(count(lit(1)), min(col("w")), max(col("w")),
+        min(col("h")), max(col("h")), max(col("band")) + 1,
+        max(col("z")) + 1).head()
+      val rows = g.getLong(0)
+      require(rows > 0, s"no .tif files found in $inDir")
+      val Seq(minW, w, minH, h, bands) = (1 to 5).map(g.getInt)
+      val nz = g.getLong(6)
+      require(minW == w && minH == h,
+        s"slice planes differ in size: widths $minW..$w, heights $minH..$h")
       require(rows == nz * bands,
         s"ragged band counts: $rows (z, band) planes from $nz slices × $bands bands")
       val attrs = DatasetAttributes(
         Array(w.toLong, h.toLong, nz), blockSize, dtype, compression)
-      for (b <- 0 until bands) {
-        val slices = decoded.filter(col("band") === b)
-          .select(col("z"), col("px").cast("array<bigint>"))
-          .as[(Long, Array[Long])]
-          .map { case (z, px) =>
-            require(px.forall(v => v >= loVal && v <= hiVal),
-              s"slice $z has values outside ${dtype.name} range [$loVal, $hiVal]")
-            (z, px)
-          }
-        graft.n5.Regroup.writeAssembled(
-          graft.n5.Regroup.slicesToBlocks(slices, attrs),
-          dstRoot, s"c$b/$dstDataset", attrs)
-      }
+      for (b <- 0 until bands)
+        Regroup.writeSlices(
+          decoded.filter(col("band") === b).select(col("z"), col("px"))
+            .as[(Long, Array[Int])],
+          attrs, dstRoot, dataset(b))
       (bands, attrs)
     } finally decoded.unpersist()
   }

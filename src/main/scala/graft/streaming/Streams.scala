@@ -531,17 +531,12 @@ object Streams {
             val s = graft.sources.tiff.TiffIO.decode(bytes)
             // a wrong-sized slice would otherwise scatter with the wrong
             // stride (silent corruption when wider, opaque AIOOBE when
-            // narrower); uint8 range enforced like the batch ingest
+            // narrower); the uint8 range check is the plane writer's
             require(s.width == width && s.height == height,
               s"slice $path is ${s.width}x${s.height}, expected ${width}x$height")
-            require(s.pixels.forall(v => v >= 0 && v <= 255),
-              s"slice $path has values outside uint8 range [0, 255]")
-            (z.toLong, s.pixels.map(_.toLong))
+            (z.toLong, s.pixels)
           })
-        graft.n5.Regroup.writeAssembled(
-          graft.n5.Regroup.slicesToBlocks(slices, attrs),
-          dstRoot, dstDataset, attrs)
-        ()
+        graft.n5.Regroup.writeSlices(slices, attrs, dstRoot, dstDataset)
       }
       .start()
   }

@@ -54,4 +54,20 @@ class SourceLintSpec extends AnyFunSuite {
       assert(n <= max, s"$f has $n `case Dtype.UInt8` matches; at most $max")
     }
   }
+
+  test("TIFF planes reach blocks only through Regroup's plane writer") {
+    def matches(files: Seq[Path], needle: String): Seq[String] = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains(needle)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    val tiff = matches(
+      sources.filter(_.startsWith(mainRoot.resolve("graft/sources/tiff"))),
+      "array<bigint>")
+    assert(tiff.isEmpty, s"Catalyst widening in the TIFF sources:\n${tiff.mkString("\n")}")
+    val regroup = mainRoot.resolve("graft/n5/Regroup.scala")
+    val outside = matches(sources.filter(_ != regroup), "slicesToBlocks(")
+    assert(outside.isEmpty,
+      s"slice fragmenting outside Regroup.writeSlices:\n${outside.mkString("\n")}")
+  }
 }

@@ -330,4 +330,32 @@ class ZarrSpec extends SparkSpec {
     assert(err.getMessage.contains("NGFF"),
       s"loud no-discovery message must name the NGFF fallback: $err")
   }
+
+  test("rechunk keeps a big-endian zarr v2 dataset big-endian") {
+    val dir = java.nio.file.Files.createTempDirectory("zarrbe").toString
+    val dims = Array(12L, 10L, 6L)
+    val elems = N5.boxGrid(spark, Array(0L, 0L, 0L), dims)
+      .select(col("x"), col("y"), col("z"),
+        ((col("x") * 1000 + col("y") * 77 + col("z") * 5001) % 65536).cast("int").as("v"))
+    val attrs = DatasetAttributes(dims, Array(4, 4, 3), Dtype.UInt16, Compression("zlib", 6))
+    N5.blocksFromElements(elems, attrs, org.apache.spark.sql.types.IntegerType)
+      .write.format("n5").option("dataset", "be").option("format", "zarr")
+      .option("zarrLittleEndian", "false")
+      .option("dimensions", dims.mkString(",")).option("blockSize", "4,4,3")
+      .option("dataType", "uint16").option("compression", "zlib")
+      .mode("append").save(dir)
+    def zarrDtype(ds: String): String = {
+      val json = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, ds, ".zarray")))
+      "\"dtype\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(json).map(_.group(1)).get
+    }
+    assert(zarrDtype("be") == ">u2")
+    N5.rechunk(spark, dir, "be", dir, "r", Array(8, 8, 4))
+    assert(zarrDtype("r") == ">u2", "rechunk must keep the declared byte order")
+    def voxels(ds: String) = N5.elementsScan(spark, dir, ds).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getInt(3)).toMap
+    val expected = voxels("be")
+    assert(expected.size == dims.product)
+    assert(voxels("r") == expected)
+  }
 }

@@ -159,4 +159,29 @@ class N5StreamReadSpec extends SparkSpec {
     assert(rows.length == 2, s"expected the 2 gx=0,gz=0 blocks: ${rows.length}")
     assert(rows.forall(r => r.getAs[Int]("gz") == 0 && r.getAs[Int]("gx") == 0))
   }
+
+  test("zarr v2 '.'-keyed and zarr v3 datasets stream the batch scan's blocks") {
+    for ((fmt, sep) <- Seq(("zarr", "."), ("zarr3", "/"))) {
+      val tmp = Files.createTempDirectory(s"n5stream$fmt").toString
+      val root = s"$tmp/z"
+      val za = DatasetAttributes(Array(24L, 20L, 16L), Array(8, 8, 8),
+        Dtype.UInt8, Compression("gzip"), format = fmt, zarrSeparator = sep)
+      val elems = N5.boxGrid(spark, Array(0L, 0L, 0L), za.dimensions)
+        .select(col("x"), col("y"), col("z"),
+          ((col("x") + col("y") * 2 + col("z") * 3) % 256).as("v"))
+      N5.write(N5.blocksFromElements(elems, za,
+        org.apache.spark.sql.types.ShortType), root, "vol/s0", za)
+      runOnce(root, s"$tmp/ckpt", s"$tmp/out")
+      val streamed = spark.read.parquet(s"$tmp/out").collect()
+        .map(r => (r.getAs[Int]("gx"), r.getAs[Int]("gy"), r.getAs[Int]("gz")) ->
+          r.getAs[Long]("s")).toMap
+      val batch = N5.read(spark, root, "vol/s0")
+        .select(col("gx"), col("gy"), col("gz"),
+          aggregate(col("data"), lit(0L), (a, x) => a + x).as("s"))
+        .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getLong(3))
+        .toMap
+      assert(batch.size == 3 * 3 * 2, s"$fmt batch scan: ${batch.size} blocks")
+      assert(streamed == batch, s"$fmt stream delivered ${streamed.size} blocks")
+    }
+  }
 }
