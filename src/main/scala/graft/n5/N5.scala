@@ -200,9 +200,11 @@ object N5 {
     * filled directly from the decoded block payload: no posexplode
     * generator, no per-row boxing, and whole-stage codegen consumes the
     * vectors through the standard ColumnarToRow bridge. x/y/z range
-    * predicates push into the scan and prune block FILES (conservative
-    * per-axis block-range test) — the source-side equivalent of what the
-    * N5BoxPruning rule does for the lazy posexplode view. Prefer this for
+    * predicates push into the scan, which prunes block FILES and trims
+    * every block to the box exactly (no row filter remains above it) —
+    * the source-side equivalent of what the N5BoxPruning rule does for
+    * the lazy posexplode view. count/sum/min/max of `v` over such a scan
+    * are computed per block (see `graft.sources.n5.N5Aggregate`). Prefer this for
     * scans that start from a stored dataset; `elements(blocks)` remains
     * for element views over in-flight block DataFrames.
     */
@@ -226,16 +228,17 @@ object N5 {
   }
 
   /** Ranged box scan [start, end) — reference `read_n5_block`
-    * (`n5_utils.py:6-18`). Grid predicates prune block FILES via the DSv2
-    * filter pushdown before any I/O; element predicates trim block edges.
+    * (`n5_utils.py:6-18`). One element scan: the box predicates push into
+    * the source, which prunes block FILES before any I/O and trims every
+    * block to the box, so no row filter remains above the scan and
+    * count/sum/min/max over the box can be answered per block.
     *
     * `fillMissing=true` (default) reproduces zarr fill-value semantics on
     * sparse volumes: voxels of the box whose block file is absent come
     * back as zeros, so the result is always a dense box — what
-    * `da.from_zarr(...)[slices]` returns. The missing-grid check is a
-    * metadata-only scan (no payload decode) over just the box's grid
-    * range, and zero rows are generated only for the absent blocks'
-    * intersection with the box. `fillMissing=false` returns only stored
+    * `da.from_zarr(...)[slices]` returns. The scan's own grid listing
+    * finds the absent blocks, and its reader emits their intersection
+    * with the box as zero rows. `fillMissing=false` returns only stored
     * voxels (the sparse block-table view).
     */
   def readBox(
@@ -243,66 +246,13 @@ object N5 {
       start: Array[Long], end: Array[Long],
       fillMissing: Boolean = true): DataFrame = {
     val attrs = N5Meta.datasetAttributes(root, dataset)
-    val bs = attrs.blockSize
-    val g0 = Array.tabulate(3)(i => (start(i) / bs(i)).toInt)
-    val g1 = Array.tabulate(3)(i => ((end(i) - 1) / bs(i)).toInt)
-    // columnar element scan; the box predicates push into the source and
-    // prune to exactly the g0..g1 grid range the old explicit block-table
-    // filter selected
-    val inBox = (df: DataFrame) => df
+    // the known element schema spares inferSchema another attributes read
+    elementsReader(spark, dataset)
+      .option("fillMissing", fillMissing)
+      .schema(graft.sources.n5.N5Schema.elementSchema(attrs.dataType)).load(root)
       .filter(col("x") >= start(0) && col("x") < end(0)
         && col("y") >= start(1) && col("y") < end(1)
         && col("z") >= start(2) && col("z") < end(2))
-    // the known element schema spares inferSchema another attributes read
-    val stored = inBox(elementsReader(spark, dataset)
-      .schema(graft.sources.n5.N5Schema.elementSchema(attrs.dataType)).load(root))
-    if (!fillMissing) return stored
-    // Which of the box's grid positions exist on disk? Pure driver-side
-    // directory walk bounded to the box's grid range (one listStatus per
-    // surviving directory) — no Spark job at plan-construction time.
-    val dsPath = new org.apache.hadoop.fs.Path(root, dataset)
-    val fs = graft.sources.HadoopFs.fs(dsPath)
-    val present = graft.sources.n5.N5GridWalk
-      .listChunks(fs, dsPath, attrs, (axis, v) => v >= g0(axis) && v <= g1(axis))
-      .map { case (g, _) => (g(0), g(1), g(2)) }.toSet
-    // intersection boxes of the absent blocks with [start, end)
-    val missingBoxes: Seq[(Long, Long, Long, Long, Long, Long)] = (for {
-      gx <- g0(0) to g1(0); gy <- g0(1) to g1(1); gz <- g0(2) to g1(2)
-      if !present((gx, gy, gz))
-    } yield {
-      val lo = Array(math.max(start(0), gx.toLong * bs(0)),
-        math.max(start(1), gy.toLong * bs(1)),
-        math.max(start(2), gz.toLong * bs(2)))
-      val hi = Array(
-        math.min(end(0), math.min((gx + 1).toLong * bs(0), attrs.dimensions(0))),
-        math.min(end(1), math.min((gy + 1).toLong * bs(1), attrs.dimensions(1))),
-        math.min(end(2), math.min((gz + 1).toLong * bs(2), attrs.dimensions(2))))
-      (lo(0), lo(1), lo(2), hi(0), hi(1), hi(2))
-    }).filter(b => b._4 > b._1 && b._5 > b._2 && b._6 > b._3)
-    if (missingBoxes.isEmpty) return stored
-    // ONE dataset of small box descriptors; zero rows stream lazily from
-    // per-box iterators on the executors — a box over thousands of absent
-    // blocks stays a single flat relation, not a union tower.
-    val elemT = graft.sources.n5.N5Schema.elementType(attrs.dataType)
-    import spark.implicits._
-    val par = math.max(1, math.min(missingBoxes.size,
-      spark.sparkContext.defaultParallelism))
-    val zeros = spark.createDataset(missingBoxes).repartition(par)
-      .flatMap { case (l0, l1, l2, h0, h1, h2) =>
-        val dx = h0 - l0; val dy = h1 - l1
-        val n = dx * dy * (h2 - l2)
-        new Iterator[(Long, Long, Long)] {
-          private var i = 0L
-          override def hasNext: Boolean = i < n
-          override def next(): (Long, Long, Long) = {
-            val t = (l0 + i % dx, l1 + (i / dx) % dy, l2 + i / (dx * dy))
-            i += 1; t
-          }
-        }
-      }
-      .toDF("x", "y", "z")
-      .withColumn("v", lit(0).cast(elemT))
-    stored.union(zeros)
   }
 
   /** Ranged box write [start, end): upsert an element table (x,y,z,v)

@@ -206,16 +206,6 @@ object Streams {
       .transformWithState(processor, TimeMode.None(), OutputMode.Update())
   }
 
-  /** Streaming TIFF-slab ingest (reference `tif_to_n5.py:53-58` semantics):
-    * slice files arriving in a directory are decoded per micro-batch on
-    * the executors and written as complete N5 blocks (blockSize z = slab
-    * depth 1 keeps every batch block-aligned → idempotent commits).
-    *
-    * The default Trigger.AvailableNow drains what is present and
-    * TERMINATES — correct for catch-up/backfill runs; a live acquisition
-    * that keeps producing files needs a processing-time trigger, e.g.
-    * `trigger = Trigger.ProcessingTime("10 seconds")`.
-    */
   /** Streaming ANN serving over the persisted AnnIndex catalog — the way
     * a serving pipeline actually exercises the index: probe vectors
     * arrive as a stream, each micro-batch runs the PROBE-ONLY IVF-PQ +
@@ -495,10 +485,24 @@ object Streams {
       .start()
   }
 
+  /** Streaming TIFF-slab ingest (reference `tif_to_n5.py:53-58` semantics):
+    * slice files arriving in a directory are decoded per micro-batch on
+    * the executors and written as complete N5 blocks (blockSize z = slab
+    * depth 1 keeps every batch block-aligned → idempotent commits).
+    *
+    * The default Trigger.AvailableNow drains what is present and
+    * TERMINATES — correct for catch-up/backfill runs; a live acquisition
+    * that keeps producing files needs a processing-time trigger, e.g.
+    * `trigger = Trigger.ProcessingTime("10 seconds")`. With a
+    * `checkpoint` location a restarted ingest skips the slices it has
+    * already written; without one Spark uses a temporary checkpoint and
+    * every run re-ingests the whole directory.
+    */
   def tiffSlabIngest(
       spark: SparkSession, inDir: String, dstRoot: String, dstDataset: String,
       width: Int, height: Int, depth: Int,
-      trigger: Trigger = Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow(),
+      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
     import spark.implicits._
     val attrs = graft.n5.DatasetAttributes(
       Array(width.toLong, height.toLong, depth.toLong),
@@ -508,9 +512,11 @@ object Streams {
       .option("pathGlobFilter", "*.tif")
       .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
       .load(inDir)
-    stream.writeStream
+    val writer = stream.writeStream
       .trigger(trigger)
       .outputMode(OutputMode.Append())
+    checkpoint.foreach(writer.option("checkpointLocation", _))
+    writer
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // The filename digits are the ABSOLUTE 0-based z coordinate (this
         // streaming path has no global view for dense ranking, unlike

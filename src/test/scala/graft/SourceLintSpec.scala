@@ -19,6 +19,9 @@ import scala.jdk.CollectionConverters._
   *    conversion `N5Schema.sparkValues` in the connector. A new
   *    `case Dtype.UInt8` loop set elsewhere in those files is the
   *    scattered sign handling the single codec exists to prevent.
+  *  - `N5.readBox` is one element scan: the scan lists the grid and
+  *    densifies absent blocks itself, so the body needs no driver-side
+  *    `listChunks` walk and no `union` of generated zero rows.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -69,5 +72,15 @@ class SourceLintSpec extends AnyFunSuite {
     val outside = matches(sources.filter(_ != regroup), "slicesToBlocks(")
     assert(outside.isEmpty,
       s"slice fragmenting outside Regroup.writeSlices:\n${outside.mkString("\n")}")
+  }
+
+  test("N5.readBox is one scan: no driver-side listing, no union") {
+    val src = new String(Files.readAllBytes(mainRoot.resolve("graft/n5/N5.scala")))
+    val start = src.indexOf("  def readBox(")
+    assert(start >= 0, "N5.readBox not found")
+    val next = "\n  (def |/\\*\\*|private )".r.findFirstMatchIn(src.substring(start + 1))
+    val body = src.substring(start, next.map(start + 1 + _.start).getOrElse(src.length))
+    for (needle <- Seq("union(", "listChunks("))
+      assert(!body.contains(needle), s"N5.readBox calls $needle")
   }
 }

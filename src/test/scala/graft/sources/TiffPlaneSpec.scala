@@ -197,4 +197,34 @@ class TiffPlaneSpec extends SparkSpec {
     assert(streamed.size == w * h * nz)
     assert(streamed == voxels(s"$tmp/batch.n5", "v"))
   }
+
+  test("a checkpointed slab ingest restarts without rewriting a block") {
+    val tmp = Files.createTempDirectory("planeckpt").toString
+    val (w, h, nz) = (8, 6, 4)
+    Files.createDirectories(new File(s"$tmp/tif").toPath)
+    for (z <- 0 until nz)
+      Files.write(new File(f"$tmp/tif/slice_$z%05d.tif").toPath,
+        TiffIO.encode(w, h, Array.tabulate(w * h)(i => (i * 5 + z * 11) % 256), 8))
+    def ingest() = {
+      val q = Streams.tiffSlabIngest(spark, s"$tmp/tif", s"$tmp/s.n5", "v",
+        w, h, nz, checkpoint = Some(s"$tmp/ckpt"))
+      q.awaitTermination()
+      q
+    }
+    def blockTimes(): Map[String, Long] = {
+      val s = Files.walk(new File(s"$tmp/s.n5/v").toPath)
+      try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(p => Files.isRegularFile(p) && p.getFileName.toString.forall(_.isDigit))
+        .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
+      finally s.close()
+    }
+    ingest()
+    val first = blockTimes()
+    assert(first.size == nz)
+    Thread.sleep(50) // a rewrite would stamp a later mtime
+    val again = ingest()
+    assert(again.recentProgress.map(_.numInputRows).sum == 0L,
+      "the restarted ingest re-read slices its checkpoint records")
+    assert(blockTimes() == first, "the restarted ingest rewrote blocks")
+  }
 }
