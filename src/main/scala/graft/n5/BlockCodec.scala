@@ -4,21 +4,22 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
-/** One decoded N5 block: actual (edge-trimmed) shape in x,y,z order, and
-  * the element payload widened to Long (integer dtypes) or Double (float
-  * dtypes), in x-fastest flat order.
+/** One decoded block: actual (edge-trimmed) shape in x,y,z order, its
+  * dtype, and its elements as big-endian bytes of that dtype (N5's own
+  * byte order), in x-fastest flat order. [[longs]] and [[doubles]] are
+  * derived widening views for consumers that compute on values.
   */
-final case class DecodedBlock(
-    shape: Array[Int],
-    longs: Array[Long],    // null for float dtypes
-    doubles: Array[Double] // null for integer dtypes
-) {
+final case class DecodedBlock(shape: Array[Int], dtype: Dtype, bytes: Array[Byte]) {
   def numElements: Int = shape.product
   /** Elements actually decoded — equals [[numElements]] for default-mode
     * blocks; a varlength (mode-1) block carries its own count.
     */
-  def elementCount: Int = if (longs != null) longs.length else doubles.length
-  def isFloat: Boolean = doubles != null
+  def elementCount: Int = bytes.length / dtype.bytesPerElement
+  private lazy val widened = BlockCodec.widen(bytes, dtype)
+  /** Integer elements as Long, unsigned zero-extended; null for floats. */
+  def longs: Array[Long] = widened._1
+  /** Float elements as Double; null for integer dtypes. */
+  def doubles: Array[Double] = widened._2
 }
 
 /** N5 block binary codec.
@@ -30,11 +31,14 @@ final case class DecodedBlock(
   * element payload. Element order is x-fastest C-order of the z,y,x view —
   * i.e. flat index = x + y*sx + z*sx*sy with the LOCAL block shape.
   *
-  * [[widen]] and [[narrow]] are the single dtype codec between element
-  * bytes and the Long/Double payload: unsigned dtypes are zero-extended on
-  * read, and every write range-checks there (SURVEY §7 flags scattered
-  * sign handling as the main correctness hazard here). N5 and zarr differ
-  * only in the header, the byte order and zarr's edge padding.
+  * The payload IS the block's element bytes: decoding is header parse plus
+  * decompress, encoding is header plus compress. Big-endian is the one
+  * byte order inside the engine, so zarr's little-endian chunks swap at
+  * this edge in one pass. [[widen]] and [[narrow]] are the single dtype
+  * codec between element bytes and Long/Double values: unsigned dtypes
+  * are zero-extended on read, and [[narrow]] holds the one range check
+  * for values that come from a wider type (SURVEY §7 flags scattered sign
+  * handling as the main correctness hazard here).
   */
 object BlockCodec {
 
@@ -54,10 +58,7 @@ object BlockCodec {
     val n = if (mode == 1) hdr.getInt() else shape.product
     val headerLen = 4 + 4 * ndim + (if (mode == 1) 4 else 0)
     val payload = decompress(raw, headerLen, comp, n * dtype.bytesPerElement)
-    require(payload.length >= n * dtype.bytesPerElement,
-      s"N5 block: ${payload.length} payload bytes < " +
-        s"$n x ${dtype.bytesPerElement} expected")
-    widen(shape, payload, ByteOrder.BIG_ENDIAN, dtype, n)
+    DecodedBlock(shape, dtype, exact(payload, n * dtype.bytesPerElement, "N5 block"))
   }
 
   /** Decode one zarr v2 chunk into the N5 block shape contract. A zarr
@@ -74,37 +75,42 @@ object BlockCodec {
       chunkShape: Array[Int], trimmedShape: Array[Int],
       littleEndian: Boolean): DecodedBlock = {
     val es = dtype.bytesPerElement
-    val full = chunkShape.product
-    val payload = decompress(raw, 0, comp, full * es)
-    require(payload.length >= full * es,
-      s"zarr chunk: ${payload.length} payload bytes < $full x $es expected")
-    val n = trimmedShape.product
+    val payload = exact(
+      decompress(raw, 0, comp, chunkShape.product * es), chunkShape.product * es,
+      "zarr chunk")
     val elems =
       if (java.util.Arrays.equals(chunkShape, trimmedShape)) payload
       else {
-        val t = new Array[Byte](n * es)
-        copyRows(payload, t, trimmedShape, chunkShape, es, pad = false)
+        val t = new Array[Byte](trimmedShape.product * es)
+        val at = new Array[Int](trimmedShape.length)
+        copyBox(payload, chunkShape, at, t, trimmedShape, at, trimmedShape, es)
         t
       }
-    widen(trimmedShape, elems, zarrOrder(littleEndian), dtype, n)
+    if (littleEndian) swap(elems, es)
+    DecodedBlock(trimmedShape, dtype, elems)
   }
 
-  /** Encode a block to the N5 binary layout. Exactly one of longs/doubles
-    * must be non-null, length == shape.product. `varlength` emits the
-    * mode-1 header (an extra uint32 element count after the dims —
-    * n5-java DefaultBlockWriter's varlength layout) with the full
-    * count, so a mode-1 label volume round-trips through the engine
+  /** The first `n` bytes of a decompressed payload, which must hold them. */
+  private def exact(payload: Array[Byte], n: Int, what: String): Array[Byte] = {
+    require(payload.length >= n, s"$what: ${payload.length} payload bytes < $n expected")
+    if (payload.length == n) payload else java.util.Arrays.copyOf(payload, n)
+  }
+
+  /** Encode big-endian element bytes (`shape.product` elements of `dtype`)
+    * to the N5 binary layout. `varlength` emits the mode-1 header (an
+    * extra uint32 element count after the dims — n5-java
+    * DefaultBlockWriter's varlength layout) with the full count, so a
+    * mode-1 label volume round-trips through the engine
     * mode-byte-compatibly instead of being re-encoded dense mode-0.
     */
   def encode(
-      shape: Array[Int],
-      longs: Array[Long],
-      doubles: Array[Double],
-      dtype: Dtype,
-      comp: Compression,
-      varlength: Boolean = false): Array[Byte] = {
+      shape: Array[Int], elems: Array[Byte], dtype: Dtype, comp: Compression,
+      varlength: Boolean): Array[Byte] = {
     val n = shape.product
-    val body = compress(narrow(longs, doubles, n, dtype, ByteOrder.BIG_ENDIAN), comp)
+    require(elems.length == n * dtype.bytesPerElement,
+      s"block of ${elems.length} bytes, shape ${shape.mkString("x")} of " +
+        s"${dtype.name} needs ${n * dtype.bytesPerElement}")
+    val body = compress(elems, comp)
     val headerLen = 4 + 4 * shape.length + (if (varlength) 4 else 0)
     val out = ByteBuffer.allocate(headerLen + body.length)
       .order(ByteOrder.BIG_ENDIAN)
@@ -116,28 +122,35 @@ object BlockCodec {
     out.array()
   }
 
+  /** Encode Long/Double values: [[narrow]] (exactly one of longs/doubles
+    * non-null, length >= shape.product), then the mode-0 [[encode]].
+    */
+  def encode(
+      shape: Array[Int], longs: Array[Long], doubles: Array[Double],
+      dtype: Dtype, comp: Compression): Array[Byte] =
+    encode(shape, narrow(longs, doubles, shape.product, dtype), dtype, comp,
+      varlength = false)
+
   /** Encode one block as a zarr v2 chunk (r14, write support) — the
-    * inverse of [[decodeZarr]]: the trimmed block payload is padded into
-    * a FULL fill-0 chunk buffer (zarr edge chunks are fill-padded, never
-    * trimmed), elements little-endian by default in C order of the
-    * reversed axes (= the engine's x-fastest order), compressed whole
-    * with no header. Same loud range check as the N5 [[encode]] path.
+    * inverse of [[decodeZarr]]: the trimmed block's big-endian element
+    * bytes are padded into a FULL fill-0 chunk buffer (zarr edge chunks
+    * are fill-padded, never trimmed), little-endian by default in C order
+    * of the reversed axes (= the engine's x-fastest order), compressed
+    * whole with no header.
     */
   def encodeZarr(
-      trimmedShape: Array[Int], chunkShape: Array[Int],
-      longs: Array[Long], doubles: Array[Double],
-      dtype: Dtype, comp: Compression,
-      littleEndian: Boolean = true): Array[Byte] = {
+      trimmedShape: Array[Int], chunkShape: Array[Int], elems: Array[Byte],
+      dtype: Dtype, comp: Compression, littleEndian: Boolean): Array[Byte] = {
     val es = dtype.bytesPerElement
-    val elems = narrow(longs, doubles, trimmedShape.product, dtype,
-      zarrOrder(littleEndian))
     val payload =
-      if (java.util.Arrays.equals(chunkShape, trimmedShape)) elems
-      else {
+      if (!java.util.Arrays.equals(chunkShape, trimmedShape)) {
         val p = new Array[Byte](chunkShape.product * es)
-        copyRows(elems, p, trimmedShape, chunkShape, es, pad = true)
+        val at = new Array[Int](trimmedShape.length)
+        copyBox(elems, trimmedShape, at, p, chunkShape, at, trimmedShape, es)
         p
-      }
+      } else if (littleEndian) elems.clone()
+      else elems
+    if (littleEndian) swap(payload, es)
     comp.codec match {
       case "raw" | "zlib" | "gzip" | "blosc" => ()
       case other => throw new IllegalArgumentException(
@@ -146,17 +159,26 @@ object BlockCodec {
     compress(payload, comp)
   }
 
-  private def zarrOrder(littleEndian: Boolean): ByteOrder =
-    if (littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
+  /** Reverse the byte order of every `es`-byte element in place. */
+  private def swap(b: Array[Byte], es: Int): Unit = if (es > 1) {
+    var i = 0
+    while (i < b.length) {
+      var (lo, hi) = (i, i + es - 1)
+      while (lo < hi) {
+        val t = b(lo); b(lo) = b(hi); b(hi) = t
+        lo += 1; hi -= 1
+      }
+      i += es
+    }
+  }
 
-  /** The dtype codec, read direction: the first `n` `dtype` elements of
-    * `bytes` (in `order`) as the payload — Long for integer dtypes, with
-    * unsigned values zero-extended, Double for float dtypes.
+  /** The dtype codec, read direction: big-endian element bytes as values
+    * — Long for integer dtypes, with unsigned values zero-extended, Double
+    * for float dtypes (the other array is null).
     */
-  private def widen(
-      shape: Array[Int], bytes: Array[Byte], order: ByteOrder, dtype: Dtype,
-      n: Int): DecodedBlock = {
-    val buf = ByteBuffer.wrap(bytes).order(order)
+  private[n5] def widen(bytes: Array[Byte], dtype: Dtype): (Array[Long], Array[Double]) = {
+    val n = bytes.length / dtype.bytesPerElement
+    val buf = ByteBuffer.wrap(bytes)
     val longs = if (dtype.isFloat) null else new Array[Long](n)
     val doubles = if (dtype.isFloat) new Array[Double](n) else null
     var i = 0
@@ -172,28 +194,29 @@ object BlockCodec {
       case Dtype.Float32 => while (i < n) { doubles(i) = buf.getFloat(); i += 1 }
       case Dtype.Float64 => buf.asDoubleBuffer().get(doubles)
     }
-    DecodedBlock(shape, longs, doubles)
+    (longs, doubles)
   }
 
-  /** The dtype codec, write direction: the first `n` payload values as
-    * `dtype` element bytes in `order`. Holds the only range check: an
-    * integer outside a bounded dtype fails loudly instead of wrapping
-    * (the raw block-table write path has no upstream check, unlike
-    * ingest and writeBox).
+  /** The dtype codec, write direction: the first `n` values (exactly one
+    * of longs/doubles non-null) as big-endian `dtype` element bytes. Holds
+    * the only range check: an integer outside a bounded dtype fails loudly
+    * instead of wrapping. Every path whose values come from a wider type —
+    * TIFF planes, writeBox, blocksFromElements, typed block-table writes —
+    * narrows here; `context` names the source in the error.
     */
-  private def narrow(
+  def narrow(
       longs: Array[Long], doubles: Array[Double], n: Int, dtype: Dtype,
-      order: ByteOrder): Array[Byte] = {
+      context: String = "block"): Array[Byte] = {
     dtype.integerRange.foreach { case (lo, hi) =>
       var j = 0
       while (j < n) {
         if (longs(j) < lo || longs(j) > hi)
           throw new IllegalArgumentException(
-            s"block value ${longs(j)} outside ${dtype.name} range [$lo, $hi]")
+            s"$context value ${longs(j)} outside ${dtype.name} range [$lo, $hi]")
         j += 1
       }
     }
-    val buf = ByteBuffer.allocate(n * dtype.bytesPerElement).order(order)
+    val buf = ByteBuffer.allocate(n * dtype.bytesPerElement)
     var i = 0
     dtype match {
       case Dtype.UInt8 | Dtype.Int8 => while (i < n) { buf.put(longs(i).toByte); i += 1 }
@@ -206,28 +229,30 @@ object BlockCodec {
     buf.array()
   }
 
-  /** Zarr's edge handling over contiguous element bytes (`es` each), any
-    * ndim, x fastest: `pad = false` trims a padded `full` chunk to the
-    * `trimmed` block, `pad = true` places the block in a zeroed chunk.
-    * One arraycopy per trimmed row.
+  /** The one strided copy of element bytes (`es` each), any ndim, x
+    * fastest: the box `extent` at `srcAt` of an array of shape `srcShape`
+    * goes to `dstAt` of an array of shape `dstShape`, one arraycopy per
+    * row. Serves zarr's edge trim and pad, the fragment cut and paste of
+    * every regroup, and the TIFF page paste.
     */
-  private def copyRows(
-      src: Array[Byte], dst: Array[Byte], trimmed: Array[Int],
-      full: Array[Int], es: Int, pad: Boolean): Unit = {
-    val rowBytes = trimmed(0) * es
-    val rows = trimmed.drop(1).product
+  def copyBox(
+      src: Array[Byte], srcShape: Array[Int], srcAt: Array[Int],
+      dst: Array[Byte], dstShape: Array[Int], dstAt: Array[Int],
+      extent: Array[Int], es: Int): Unit = {
+    val rows = extent.drop(1).product
     var r = 0
     while (r < rows) {
-      // chunk offset of row r: unravel r over the trimmed y,z,... extents
-      var rem = r; var stride = full(0); var off = 0; var d = 1
-      while (d < trimmed.length) {
-        off += (rem % trimmed(d)) * stride
-        rem /= trimmed(d)
-        stride *= full(d)
+      // unravel row r over the extent's y,z,... axes
+      var rem = r; var so = srcAt(0).toLong; var dO = dstAt(0).toLong
+      var ss = srcShape(0).toLong; var ds = dstShape(0).toLong; var d = 1
+      while (d < extent.length) {
+        val i = rem % extent(d)
+        rem /= extent(d)
+        so += (srcAt(d) + i) * ss; dO += (dstAt(d) + i) * ds
+        ss *= srcShape(d); ds *= dstShape(d)
         d += 1
       }
-      if (pad) System.arraycopy(src, r * rowBytes, dst, off * es, rowBytes)
-      else System.arraycopy(src, off * es, dst, r * rowBytes, rowBytes)
+      System.arraycopy(src, (so * es).toInt, dst, (dO * es).toInt, extent(0) * es)
       r += 1
     }
   }
@@ -244,7 +269,7 @@ object BlockCodec {
       try in.readNBytes(expected) finally in.close()
     val bis = new ByteArrayInputStream(raw, off, raw.length - off)
     comp.codec match {
-      case "raw" => java.util.Arrays.copyOfRange(raw, off, raw.length)
+      case "raw" => java.util.Arrays.copyOfRange(raw, off, math.min(raw.length, off + expected))
       case "gzip" => drain(new GZIPInputStream(bis))
       // n5-java "gzip" with useZlib=true: raw zlib deflate, no gzip wrapper
       case "zlib" => drain(new java.util.zip.InflaterInputStream(bis))

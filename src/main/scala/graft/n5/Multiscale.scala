@@ -133,7 +133,9 @@ object Multiscale {
     * output block (g div f) at offset ((g mod f) * blockSize/f) — one
     * fragment per source block, assembled with the Regroup machinery.
     * Narrow mean computation; the shuffle carries 1/(fx·fy·fz) of the
-    * data as fragment rows, not element rows.
+    * data as fragment rows of element bytes, not element rows. Means sum
+    * in a double in window order (numpy's float accumulator), so a window
+    * of 64-bit integers cannot wrap.
     */
   def downsampleLevelBlockLocal(
       spark: SparkSession, root: String, group: String, level: Int,
@@ -154,16 +156,12 @@ object Multiscale {
       // shards but writes the plain v3 profile); no-op otherwise
       shard = None)
     val Array(bx, by, bz) = src.blockSize
-    val isFloat = src.dataType.isFloat
+    val dtype = src.dataType
     import spark.implicits._
-    // native-typed read; float payloads travel as raw Double bits in the
-    // Long array (the typed-pipeline convention shared with Regroup),
-    // converted back at the write boundary
-    val typed = Regroup.typedLongBlocks(
-      N5.read(spark, root, s"$group/s${level - 1}"), src.dataType,
-      Seq("gx", "gy", "gz"))
-    val frags = typed.map { case (gxL, gyL, gzL, sshape, data) =>
-      val (gx, gy, gz) = (gxL.toInt, gyL.toInt, gzL.toInt)
+    val blocks = N5.readBytes(spark, root, s"$group/s${level - 1}")
+      .select(col("gx"), col("gy"), col("gz"), col("shape"), col("data"))
+      .as[(Int, Int, Int, Array[Int], Array[Byte])]
+    val frags = blocks.map { case (gx, gy, gz, sshape, data) =>
       val Array(sx, sy, sz) = sshape
       // output extent from this block, trimmed to the global floor(D/f)
       def ext(g: Int, b: Int, s: Int, f: Int, dOut: Long): Int = {
@@ -172,7 +170,13 @@ object Multiscale {
       }
       val (ox, oy, oz) = (ext(gx, bx, sx, fx, dstDims(0)),
         ext(gy, by, sy, fy, dstDims(1)), ext(gz, bz, sz, fz, dstDims(2)))
-      val out = new Array[Long](math.max(0, ox * oy * oz))
+      val n = math.max(0, ox * oy * oz)
+      // the block's values through the codec's widening view; the kernel
+      // writes Long (integer) or Double (float) results, narrowed back
+      val dec = DecodedBlock(sshape, dtype, data)
+      val (longs, doubles) = (dec.longs, dec.doubles)
+      val outL = if (dtype.isFloat) null else new Array[Long](n)
+      val outD = if (dtype.isFloat) new Array[Double](n) else null
       val win = fx.toLong * fy * fz
       var z = 0
       while (z < oz) {
@@ -180,10 +184,9 @@ object Multiscale {
         while (y < oy) {
           var x = 0
           while (x < ox) {
-            // integer dtypes: exact Long sum (mean) or running extreme;
-            // float dtypes: double accumulator over the bit-decoded values
-            var sl = if (isMean) 0L
-              else if (isMin) Long.MaxValue else Long.MinValue
+            // the double mean sum is exact for integer dtypes up to 32
+            // bits; extremes keep a Long (integer) or double accumulator
+            var sl = if (isMin) Long.MaxValue else Long.MinValue
             var sd = if (isMean) 0.0
               else if (isMin) Double.PositiveInfinity else Double.NegativeInfinity
             var dz = 0
@@ -194,14 +197,14 @@ object Multiscale {
                 val base = (x * fx) + (y * fy + dy) * sx +
                   (z * fz + dz) * sx * sy
                 while (dx < fx) {
-                  if (isFloat) {
-                    val v = java.lang.Double.longBitsToDouble(data(base + dx))
-                    sd = if (isMean) sd + v
-                      else if (isMin) math.min(sd, v) else math.max(sd, v)
+                  if (isMean)
+                    sd += (if (doubles != null) doubles(base + dx) else longs(base + dx).toDouble)
+                  else if (doubles != null) {
+                    val v = doubles(base + dx)
+                    sd = if (isMin) math.min(sd, v) else math.max(sd, v)
                   } else {
-                    val v = data(base + dx)
-                    sl = if (isMean) sl + v
-                      else if (isMin) math.min(sl, v) else math.max(sl, v)
+                    val v = longs(base + dx)
+                    sl = if (isMin) math.min(sl, v) else math.max(sl, v)
                   }
                   dx += 1
                 }
@@ -209,12 +212,10 @@ object Multiscale {
               }
               dz += 1
             }
-            out(x + y * ox + z * ox * oy) =
-              if (isFloat) java.lang.Double.doubleToRawLongBits(
-                if (isMean) sd / win else sd)
-              // numpy astype semantics: truncate toward zero
-              else if (isMean) (sl.toDouble / win).toLong
-              else sl
+            val i = x + y * ox + z * ox * oy
+            if (doubles != null) outD(i) = if (isMean) sd / win else sd
+            // numpy astype semantics: truncate toward zero
+            else outL(i) = if (isMean) (sd / win).toLong else sl
             x += 1
           }
           y += 1
@@ -223,10 +224,9 @@ object Multiscale {
       }
       Regroup.Frag(gx / fx, gy / fy, gz / fz,
         (gx % fx) * (bx / fx), (gy % fy) * (by / fy), (gz % fz) * (bz / fz),
-        ox, oy, oz, out)
+        ox, oy, oz, BlockCodec.narrow(outL, outD, n, dtype))
     }.filter(_.data.nonEmpty)
-    Regroup.writeAssembledAs(Regroup.assemble(frags, dst),
-      root, s"$group/s$level", dst, isFloat)
+    N5.write(Regroup.assemble(frags, dst).toDF(), root, s"$group/s$level", dst)
     dst
   }
 

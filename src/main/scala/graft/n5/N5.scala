@@ -23,6 +23,13 @@ object N5 {
   def read(spark: SparkSession, root: String, dataset: String): DataFrame =
     spark.read.format("n5").option("dataset", dataset).load(root)
 
+  /** The block table with `data` as the blocks' big-endian element bytes
+    * (N5Schema.blockBytesSchema): the read every internal pipeline uses.
+    */
+  private[graft] def readBytes(spark: SparkSession, root: String, dataset: String): DataFrame =
+    spark.read.format("n5").option("dataset", dataset)
+      .schema(graft.sources.n5.N5Schema.blockBytesSchema).load(root)
+
   /** Group block table (SURVEY §1.4): one row per block across every
     * channel/level dataset of an N5 group — the reference's `c{c}/{s{l}}`
     * sibling-path layout (`ometif_to_n5.py:111-116`, fixture `mri/c0/s0`)
@@ -183,17 +190,6 @@ object N5 {
     write(df, root, dataset,
       attrs.copy(format = "zarr", zarrSeparator = separator), extraAttrs)
 
-  /** Per-element view (x,y,z,v) of a block table. Lazy posexplode +
-    * integer index math — only queries that genuinely need per-voxel rows
-    * pay for the explosion (SURVEY §1.4). Flat index is x-fastest within
-    * the local (trimmed) block shape.
-    *
-    * The coordinate columns carry axis metadata so the
-    * [[graft.plans.N5BoxPruning]] analyzer rule can convert range
-    * predicates on x/y/z into gx/gy/gz block-grid predicates that the DSv2
-    * scan prunes on — an ad-hoc `elements(...).filter(x between a and b)`
-    * then reads only intersecting block FILES, like `readBox`.
-    */
   /** COLUMNAR per-element scan (x,y,z,v) straight from the DSv2 source —
     * the same rows (and order within a block) as `elements(read(...))`,
     * but the reader emits ColumnarBatches whose primitive vectors are
@@ -214,6 +210,17 @@ object N5 {
   private def elementsReader(spark: SparkSession, dataset: String) =
     spark.read.format("n5").option("dataset", dataset).option("view", "elements")
 
+  /** Per-element view (x,y,z,v) of a block table. Lazy posexplode +
+    * integer index math — only queries that genuinely need per-voxel rows
+    * pay for the explosion (SURVEY §1.4). Flat index is x-fastest within
+    * the local (trimmed) block shape.
+    *
+    * The coordinate columns carry axis metadata so the
+    * [[graft.plans.N5BoxPruning]] analyzer rule can convert range
+    * predicates on x/y/z into gx/gy/gz block-grid predicates that the DSv2
+    * scan prunes on — an ad-hoc `elements(...).filter(x between a and b)`
+    * then reads only intersecting block FILES, like `readBox`.
+    */
   def elements(blocks: DataFrame): DataFrame = {
     def axisMeta(i: Int) = new org.apache.spark.sql.types.MetadataBuilder()
       .putLong(graft.plans.N5BoxPruning.AxisKey, i.toLong).build()
@@ -287,64 +294,30 @@ object N5 {
     require(start.forall(_ >= 0) &&
       end.zip(attrs.dimensions).forall { case (e, d) => e <= d },
       s"box exceeds dims ${attrs.dimensions.mkString("x")}")
-    val Array(bx, by, bz) = attrs.blockSize
-    val isFloat = attrs.dataType.isFloat
     import spark.implicits._
     val inBox = elems.filter(
       col("x") >= start(0) && col("x") < end(0)
         && col("y") >= start(1) && col("y") < end(1)
         && col("z") >= start(2) && col("z") < end(2))
-    // one typed pipeline for all dtypes: floats travel as raw Double bits
-    val typed: org.apache.spark.sql.Dataset[(Long, Long, Long, Long)] =
-      if (isFloat)
-        inBox.select(col("x"), col("y"), col("z"), col("v").cast("double"))
-          .as[(Long, Long, Long, Double)]
-          .map { case (x, y, z, v) =>
-            (x, y, z, java.lang.Double.doubleToRawLongBits(v))
-          }
-      else
-        inBox.select(col("x"), col("y"), col("z"),
-          integralOrRaise(col("v"), s"writeBox (${attrs.dataType.name})").as("v"))
-          .as[(Long, Long, Long, Long)]
-    // safe-cast discipline: integer dtypes fail loudly on out-of-range
-    // input instead of silently wrapping in the codec
-    val valueRange = attrs.dataType.integerRange
-    val dtypeName = attrs.dataType.name
-    val assembled = typed
-      .groupByKey { case (x, y, z, _) =>
-        ((x / bx).toInt, (y / by).toInt, (z / bz).toInt)
-      }
+    val es = attrs.dataType.bytesPerElement
+    val blocks = patches(inBox, attrs, s"writeBox (${attrs.dataType.name})")
+      .groupByKey(p => (p._1, p._2, p._3))
       .mapGroups { (g, it) =>
         val grid = Array(g._1, g._2, g._3)
         val shape = attrs.blockShape(grid)
-        val Array(sx, sy, _) = shape
         val vol = shape.product
-        val ox = g._1.toLong * bx
-        val oy = g._2.toLong * by
-        val oz = g._3.toLong * bz
         // materialize the patch first: a group covering the whole block
         // (unique-voxel precondition) needs no read at all
-        val idxs = new Array[Int](vol)
-        val vals = new Array[Long](vol)
+        val ps = it.map(p => (p._4, p._5)).toArray
+        if (ps.map(_._1.length.toLong).sum > vol) throw new IllegalArgumentException(
+          s"writeBox: more input rows than voxels in block " +
+            s"(${grid.mkString(",")}) — duplicate (x,y,z) coordinates")
         val covered = new java.util.BitSet(vol)
-        var m = 0
-        it.foreach { case (x, y, z, v) =>
-          valueRange.foreach { case (lo, hi) =>
-            if (v < lo || v > hi) throw new IllegalArgumentException(
-              s"writeBox: value $v at ($x,$y,$z) outside $dtypeName range [$lo, $hi]")
-          }
-          if (m >= vol) throw new IllegalArgumentException(
-            s"writeBox: more input rows than voxels in block " +
-              s"(${grid.mkString(",")}) — duplicate (x,y,z) coordinates")
-          idxs(m) = ((x - ox) + (y - oy) * sx + (z - oz) * sx * sy).toInt
-          covered.set(idxs(m))
-          vals(m) = v
-          m += 1
-        }
-        val base = new Array[Long](vol)
+        ps.foreach(_._1.foreach(covered.set))
         // "fully covered, skip the read" requires every DISTINCT voxel hit:
         // a row count of vol with duplicates would leave uncovered voxels
-        // silently zeroed if we trusted m alone
+        // silently zeroed if we trusted the count alone
+        val base = new Array[Byte](vol * es)
         if (covered.cardinality() < vol) {
           // partial cover: start from the stored block (zeros when absent)
           val path = new org.apache.hadoop.fs.Path(
@@ -361,69 +334,49 @@ object N5 {
               s"writeBox: block ${grid.mkString("/")} decodes " +
                 s"${dec.elementCount} elements, expected $vol — " +
                 "truncated varlength (mode-1) block")
-            if (dec.isFloat) {
-              var i = 0
-              while (i < vol) {
-                base(i) = java.lang.Double.doubleToRawLongBits(dec.doubles(i)); i += 1
-              }
-            } else System.arraycopy(dec.longs, 0, base, 0, vol)
+            System.arraycopy(dec.bytes, 0, base, 0, vol * es)
           }
         }
-        var i = 0
-        while (i < m) { base(idxs(i)) = vals(i); i += 1 }
+        ps.foreach { case (is, bytes) => scatter(is, bytes, base, es) }
         Regroup.OutBlock(g._1, g._2, g._3, shape, base)
       }
-    val elemT = graft.sources.n5.N5Schema.elementType(attrs.dataType)
-    write(Regroup.blocksDF(assembled, elemT, isFloat), root, dataset, attrs)
+    write(blocks.toDF(), root, dataset, attrs)
   }
 
-  /** Reassemble an element table (x,y,z,v) into the (gx,gy,gz,shape,data)
-    * block layout of `target`, ready for `write`. One shuffle keyed by grid
-    * position — the rechunk Exchange of `tif_to_n5.py:22` /
-    * `n5_to_tif.py:50`.
-    *
-    * Scale formulation: a map-side PATCH COMBINE. Each input partition
-    * packs its voxels into one (grid → idx[], bits[]) patch row per block
-    * it touches, so the shuffle carries ~12 bytes/voxel in a handful of
-    * rows per partition instead of one ~40-byte UnsafeRow per voxel, and
-    * assembly is a primitive scatter instead of a groupBy-sort over boxed
-    * structs. Blocks with any row must be DENSE (every voxel present) —
-    * enforced with a coverage bitset; wholly absent blocks stay absent
-    * (sparse volumes). Float payloads travel as raw Double bits (exact).
+  /** Elements (x,y,z,v) as BIGINT coordinates and a value the dtype codec
+    * narrows: DOUBLE for float dtypes, an integral BIGINT otherwise.
     */
-  def blocksFromElements(
-      elems: DataFrame, target: DatasetAttributes,
-      elemSparkType: DataType): DataFrame = {
-    val spark = elems.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.types.{DoubleType, FloatType}
-    val isFloat = elemSparkType == FloatType || elemSparkType == DoubleType
+  private def typedElements(elems: DataFrame, dtype: Dtype, what: String): DataFrame =
+    elems.select(col("x").cast("bigint"), col("y").cast("bigint"),
+      col("z").cast("bigint"),
+      (if (dtype.isFloat) col("v").cast("double") else integralOrRaise(col("v"), what))
+        .as("v"))
+
+  /** Map-side PATCH COMBINE shared by writeBox and blocksFromElements:
+    * each input partition packs its voxels into one (gx, gy, gz, idx[],
+    * element bytes) row per block of `target` it touches — the values
+    * narrowed (range-checked) to the dtype's bytes by the one dtype codec —
+    * so the shuffle carries one index and the stored element per voxel in
+    * a handful of rows per partition instead of one row per voxel. The
+    * block-local shape is computed once per block, not per voxel.
+    */
+  private def patches(
+      elems: DataFrame, target: DatasetAttributes, what: String)
+      : org.apache.spark.sql.Dataset[(Int, Int, Int, Array[Int], Array[Byte])] = {
+    import elems.sparkSession.implicits._
     val Array(bx, by, bz) = target.blockSize
     val dims = target.dimensions
-    val typed: org.apache.spark.sql.Dataset[(Long, Long, Long, Long)] =
-      if (isFloat)
-        elems.select(col("x").cast("bigint"), col("y").cast("bigint"),
-          col("z").cast("bigint"), col("v").cast("double"))
-          .as[(Long, Long, Long, Double)]
-          .map { case (x, y, z, v) =>
-            (x, y, z, java.lang.Double.doubleToRawLongBits(v))
-          }
-      else
-        elems.select(col("x").cast("bigint"), col("y").cast("bigint"),
-          col("z").cast("bigint"),
-          integralOrRaise(col("v"),
-            s"blocksFromElements (${elemSparkType.catalogString})").as("v"))
-          .as[(Long, Long, Long, Long)]
-    // partition-local combine: one patch row per (partition, touched block);
-    // the block-local shape is computed once per block, not per voxel
+    val dtype = target.dataType
     final case class Patch(
         sx: Int, sy: Int,
         is: scala.collection.mutable.ArrayBuilder.ofInt,
-        vs: scala.collection.mutable.ArrayBuilder.ofLong)
-    val patches = typed.mapPartitions { it =>
+        ls: scala.collection.mutable.ArrayBuilder.ofLong,
+        ds: scala.collection.mutable.ArrayBuilder.ofDouble)
+    typedElements(elems, dtype, what).mapPartitions { it =>
       val acc = scala.collection.mutable.LinkedHashMap
         .empty[(Int, Int, Int), Patch]
-      it.foreach { case (x, y, z, v) =>
+      it.foreach { r =>
+        val (x, y, z) = (r.getLong(0), r.getLong(1), r.getLong(2))
         require(x >= 0 && x < dims(0) && y >= 0 && y < dims(1)
           && z >= 0 && z < dims(2),
           s"element ($x,$y,$z) outside dims ${dims.mkString("x")}")
@@ -432,29 +385,58 @@ object N5 {
           math.min(bx.toLong, dims(0) - g._1.toLong * bx).toInt,
           math.min(by.toLong, dims(1) - g._2.toLong * by).toInt,
           new scala.collection.mutable.ArrayBuilder.ofInt,
-          new scala.collection.mutable.ArrayBuilder.ofLong))
+          new scala.collection.mutable.ArrayBuilder.ofLong,
+          new scala.collection.mutable.ArrayBuilder.ofDouble))
         p.is += ((x - g._1.toLong * bx) + (y - g._2.toLong * by) * p.sx
           + (z - g._3.toLong * bz) * p.sx * p.sy).toInt
-        p.vs += v
+        if (dtype.isFloat) p.ds += r.getDouble(3) else p.ls += r.getLong(3)
       }
       acc.iterator.map { case ((gx, gy, gz), p) =>
-        (gx, gy, gz, p.is.result(), p.vs.result())
+        val is = p.is.result()
+        (gx, gy, gz, is,
+          BlockCodec.narrow(p.ls.result(), p.ds.result(), is.length, dtype, what))
       }
     }
-    val assembled = patches
+  }
+
+  /** Element i of `bytes` to element `is(i)` of `out` (`es` bytes each). */
+  private def scatter(is: Array[Int], bytes: Array[Byte], out: Array[Byte], es: Int): Unit = {
+    var i = 0
+    while (i < is.length) {
+      System.arraycopy(bytes, i * es, out, is(i) * es, es)
+      i += 1
+    }
+  }
+
+  /** Reassemble an element table (x,y,z,v) into the (gx,gy,gz,shape,data)
+    * block layout of `target`, ready for `write`: `data` holds each
+    * block's big-endian element bytes of `target.dataType`, whose Spark
+    * element type `elemSparkType` is. One shuffle keyed by grid position —
+    * the rechunk Exchange of `tif_to_n5.py:22` / `n5_to_tif.py:50`.
+    *
+    * Scale formulation: the map-side patch combine of [[patches]], then a
+    * primitive scatter per block instead of a groupBy-sort over boxed
+    * structs. Blocks with any row must be DENSE (every voxel present) —
+    * enforced with a coverage bitset; wholly absent blocks stay absent
+    * (sparse volumes).
+    */
+  def blocksFromElements(
+      elems: DataFrame, target: DatasetAttributes,
+      elemSparkType: DataType): DataFrame = {
+    import elems.sparkSession.implicits._
+    val es = target.dataType.bytesPerElement
+    patches(elems, target, s"blocksFromElements (${elemSparkType.catalogString})")
       .groupByKey(p => (p._1, p._2, p._3))
       .mapGroups { (g, it) =>
         val grid = Array(g._1, g._2, g._3)
         val shape = target.blockShape(grid)
         val vol = shape.product
-        val out = new Array[Long](vol)
+        val out = new Array[Byte](vol * es)
         val covered = new java.util.BitSet(vol)
         var rows = 0L
-        it.foreach { case (_, _, _, is, vs) =>
-          var i = 0
-          while (i < is.length) {
-            out(is(i)) = vs(i); covered.set(is(i)); i += 1
-          }
+        it.foreach { case (_, _, _, is, bytes) =>
+          scatter(is, bytes, out, es)
+          is.foreach(covered.set)
           rows += is.length
         }
         require(covered.cardinality() == vol,
@@ -467,7 +449,7 @@ object N5 {
             "duplicate (x,y,z) coordinates")
         Regroup.OutBlock(g._1, g._2, g._3, shape, out)
       }
-    Regroup.blocksDF(assembled, elemSparkType, isFloat)
+      .toDF()
   }
 
   /** DDL-from-template (reference `create_dataset`, `create_n5.py:7-37`):

@@ -1,7 +1,6 @@
 package graft.n5
 
-import graft.sources.n5.N5Schema
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Block-fragment regroup: the scale-safe rechunk (SURVEY §7 "hard parts").
@@ -14,99 +13,54 @@ import org.apache.spark.sql.functions._
   * assembly is primitive array pastes instead of a groupBy-sort over
   * voxels. Equivalence with the element path is property-tested.
   *
-  * Float payloads travel as raw Double bits inside the Long array (exact),
-  * so one typed pipeline serves every dtype.
+  * Fragments and assembled blocks carry the dtype's big-endian element
+  * bytes — what the codec decodes and encodes — so one byte pipeline
+  * serves every dtype and moves each voxel at its stored width.
   */
 object Regroup {
 
   /** One source-block slice destined for output block (tgx,tgy,tgz):
-    * placed at offset (ox,oy,oz) with shape (sx,sy,sz), x-fastest payload.
+    * placed at offset (ox,oy,oz) with shape (sx,sy,sz), x-fastest element
+    * bytes.
     */
   final case class Frag(
       tgx: Int, tgy: Int, tgz: Int,
       ox: Int, oy: Int, oz: Int,
       sx: Int, sy: Int, sz: Int,
-      data: Array[Long])
+      data: Array[Byte])
 
   final case class OutBlock(
-      gx: Int, gy: Int, gz: Int, shape: Array[Int], data: Array[Long])
+      gx: Int, gy: Int, gz: Int, shape: Array[Int], data: Array[Byte])
 
-  /** Block rows as a typed Dataset with the payload widened to Long,
-    * keyed by the three `keys` columns cast to LONG. Integer dtypes go
-    * through the NATIVE-typed encoder plus a primitive widening loop — a
-    * `cast("array<bigint>")` would pay a per-element Catalyst cast and an
-    * intermediate array per block (~30% slower block reads, measured on
-    * the q85 volume). Float dtypes travel as raw Double bits (exact; the
-    * convention of every typed pipeline here).
+  /** The box `extent` at `at` of a block of shape `shape` as dense
+    * element bytes.
     */
-  private[graft] def typedLongBlocks(
-      blocks: DataFrame, dtype: Dtype, keys: Seq[String])
-      : org.apache.spark.sql.Dataset[(Long, Long, Long, Array[Int], Array[Long])] = {
-    import blocks.sparkSession.implicits._
-    import org.apache.spark.sql.types._
-    val base = blocks.select(
-      col(keys(0)).cast("long"), col(keys(1)).cast("long"),
-      col(keys(2)).cast("long"), col("shape"), col("data"))
-    def widen[T](f: T => Long)(
-        t: (Long, Long, Long, Array[Int], Array[T])): (Long, Long, Long, Array[Int], Array[Long]) = {
-      val d = t._5
-      val o = new Array[Long](d.length)
-      var i = 0
-      while (i < d.length) { o(i) = f(d(i)); i += 1 }
-      (t._1, t._2, t._3, t._4, o)
-    }
-    N5Schema.elementType(dtype) match {
-      case ShortType =>
-        base.as[(Long, Long, Long, Array[Int], Array[Short])]
-          .map(widen[Short](_.toLong))
-      // the encoder maps Array[Byte] to BINARY, not ARRAY<TINYINT>
-      case ByteType =>
-        base.withColumn("data", col("data").cast("array<smallint>"))
-          .as[(Long, Long, Long, Array[Int], Array[Short])]
-          .map(widen[Short](_.toLong))
-      case IntegerType =>
-        base.as[(Long, Long, Long, Array[Int], Array[Int])]
-          .map(widen[Int](_.toLong))
-      case LongType =>
-        base.as[(Long, Long, Long, Array[Int], Array[Long])]
-      case FloatType =>
-        base.as[(Long, Long, Long, Array[Int], Array[Float])]
-          .map(widen[Float](f => java.lang.Double.doubleToRawLongBits(f.toDouble)))
-      case DoubleType =>
-        base.as[(Long, Long, Long, Array[Int], Array[Double])]
-          .map(widen[Double](java.lang.Double.doubleToRawLongBits))
-      case other =>
-        throw new IllegalArgumentException(s"bad element type $other")
-    }
+  private def cut(
+      src: Array[Byte], es: Int, shape: Array[Int], at: Array[Int],
+      extent: Array[Int]): Array[Byte] = {
+    val out = new Array[Byte](extent.product * es)
+    BlockCodec.copyBox(src, shape, at, out, extent, new Array[Int](3), extent, es)
+    out
   }
 
   /** Shuffle fragments to their output blocks and paste (shared by
-    * rechunk and the slice-ingest path).
+    * rechunk, the block-local pyramid and the slice-ingest path).
     */
   def assemble(
       frags: org.apache.spark.sql.Dataset[Frag],
       dst: DatasetAttributes): org.apache.spark.sql.Dataset[OutBlock] = {
     import frags.sparkSession.implicits._
+    val es = dst.dataType.bytesPerElement
     frags
       .groupByKey(f => (f.tgx, f.tgy, f.tgz))
       .mapGroups { (key: (Int, Int, Int), it: Iterator[Frag]) =>
         val (tgx, tgy, tgz) = key
         val tshape = dst.blockShape(Array(tgx, tgy, tgz))
-        val Array(tsx, tsy, _) = tshape
-        val out = new Array[Long](tshape.product)
+        val out = new Array[Byte](tshape.product * es)
         it.foreach { f =>
-          var z = 0
-          while (z < f.sz) {
-            var y = 0
-            while (y < f.sy) {
-              val srcBase = (y + z * f.sy) * f.sx
-              val dstBase = (f.ox +
-                (f.oy + y) * tsx + (f.oz + z) * tsx.toLong * tsy).toInt
-              System.arraycopy(f.data, srcBase, out, dstBase, f.sx)
-              y += 1
-            }
-            z += 1
-          }
+          val ext = Array(f.sx, f.sy, f.sz)
+          BlockCodec.copyBox(f.data, ext, new Array[Int](3), out, tshape,
+            Array(f.ox, f.oy, f.oz), ext, es)
         }
         OutBlock(tgx, tgy, tgz, tshape, out)
       }
@@ -115,19 +69,20 @@ object Regroup {
   /** The one plane-to-block writer: every TIFF ingest (slice series,
     * per-channel series, OME page stacks, streaming slabs) hands its
     * decoders' native Int planes (z, x-fastest pixels of a w×h plane)
-    * here. Each plane is range-checked once against the dtype, widened
-    * while its block-column rectangles are cut, then assembled and
-    * written. Slices may arrive offset in z (streaming slabs pass
-    * absolute z).
+    * here. Each plane is narrowed once to the dtype's element bytes —
+    * the codec's range check, so a pixel outside the dtype fails loudly
+    * instead of wrapping — then cut into its block-column rectangles,
+    * assembled and written. Slices may arrive offset in z (streaming slabs
+    * pass absolute z).
     */
   def writeSlices(
       slices: org.apache.spark.sql.Dataset[(Long, Array[Int])],
       dst: DatasetAttributes, dstRoot: String, dstDataset: String): Unit =
-    writeAssembledAs(slicesToBlocks(slices, dst), dstRoot, dstDataset, dst,
-      isFloat = false)
+    N5.write(slicesToBlocks(slices, dst).toDF(), dstRoot, dstDataset, dst)
 
   /** Fragment full z-slices into the block-column rectangles they
-    * intersect: shuffle rows are fragments (blocks-per-slice), not pixels.
+    * intersect and assemble them: shuffle rows are fragments
+    * (blocks-per-slice), not pixels.
     */
   private def slicesToBlocks(
       slices: org.apache.spark.sql.Dataset[(Long, Array[Int])],
@@ -135,36 +90,23 @@ object Regroup {
     import slices.sparkSession.implicits._
     val Array(w, h, _) = dst.dimensions.map(_.toInt)
     val Array(nbx, nby, nbz) = dst.blockSize
-    val (lo, hi) = dst.dataType.integerRange.getOrElse((Long.MinValue, Long.MaxValue))
-    val dtypeName = dst.dataType.name
+    val dtype = dst.dataType
+    val es = dtype.bytesPerElement
     val frags = slices.flatMap { case (z, px) =>
       val gz = (z / nbz).toInt
       val oz = (z - gz.toLong * nbz).toInt
+      val plane =
+        if (dtype.isFloat) BlockCodec.narrow(null, px.map(_.toDouble), px.length, dtype)
+        else BlockCodec.narrow(px.map(_.toLong), null, px.length, dtype, s"slice z=$z: pixel")
       val fr = Seq.newBuilder[Frag]
       var tgy = 0
       while (tgy.toLong * nby < h) {
-        val y0 = tgy * nby
-        val fy = math.min(nby, h - y0)
+        val fy = math.min(nby, h - tgy * nby)
         var tgx = 0
         while (tgx.toLong * nbx < w) {
-          val x0 = tgx * nbx
-          val fx = math.min(nbx, w - x0)
-          val buf = new Array[Long](fx * fy)
-          var y = 0
-          while (y < fy) {
-            val src = x0 + (y0 + y) * w
-            var x = 0
-            while (x < fx) {
-              val v = px(src + x)
-              // safe cast (numpy casting='safe' analogue): fail, don't wrap
-              if (v < lo || v > hi) throw new IllegalArgumentException(
-                s"slice z=$z: pixel $v outside $dtypeName range [$lo, $hi]")
-              buf(y * fx + x) = v
-              x += 1
-            }
-            y += 1
-          }
-          fr += Frag(tgx, tgy, gz, 0, 0, oz, fx, fy, 1, buf)
+          val fx = math.min(nbx, w - tgx * nbx)
+          fr += Frag(tgx, tgy, gz, 0, 0, oz, fx, fy, 1,
+            cut(plane, es, Array(w, h, 1), Array(tgx * nbx, tgy * nby, 0), Array(fx, fy, 1)))
           tgx += 1
         }
         tgy += 1
@@ -174,41 +116,8 @@ object Regroup {
     assemble(frags, dst)
   }
 
-  /** Assembled blocks as a writer-ready DataFrame: the ONE place the
-    * typed pipeline's Long payloads become the dtype's Spark element type,
-    * decoding float values from their raw Double bits. Every element/
-    * fragment path (rechunk, multiscale, blocksFromElements, writeBox)
-    * ends here, so the bits convention cannot drift between them.
-    */
-  def blocksDF(
-      assembled: org.apache.spark.sql.Dataset[OutBlock],
-      elemT: org.apache.spark.sql.types.DataType,
-      isFloat: Boolean): DataFrame =
-    if (isFloat) {
-      import assembled.sparkSession.implicits._
-      assembled
-        .map(b => (b.gx, b.gy, b.gz, b.shape,
-          b.data.map(java.lang.Double.longBitsToDouble)))
-        .toDF("gx", "gy", "gz", "shape", "data")
-        .withColumn("data", col("data").cast(s"array<${elemT.catalogString}>"))
-    } else
-      assembled.toDF()
-        .select(col("gx"), col("gy"), col("gz"), col("shape"),
-          col("data").cast(s"array<${elemT.catalogString}>").as("data"))
-
-  /** Write assembled blocks with the dtype's Spark element type, decoding
-    * float payloads that travel as raw Double bits in the Long array (the
-    * typed-pipeline convention) when `isFloat`.
-    */
-  def writeAssembledAs(
-      assembled: org.apache.spark.sql.Dataset[OutBlock],
-      dstRoot: String, dstDataset: String, dst: DatasetAttributes,
-      isFloat: Boolean): Unit =
-    N5.write(blocksDF(assembled, N5Schema.elementType(dst.dataType), isFloat),
-      dstRoot, dstDataset, dst)
-
   /** Rechunk src dataset into dstRoot/dstDataset with a new block size.
-    * One fragment shuffle; no element explosion.
+    * One fragment shuffle of element bytes; no element explosion.
     */
   def rechunkBlocks(
       spark: SparkSession, srcRoot: String, srcDataset: String,
@@ -216,16 +125,15 @@ object Regroup {
       compression: Compression = Compression("gzip")): DatasetAttributes = {
     val src = N5Meta.datasetAttributes(srcRoot, srcDataset)
     val dst = src.copy(blockSize = newBlockSize, compression = compression)
-    val isFloat = src.dataType.isFloat
+    val es = src.dataType.bytesPerElement
 
     import spark.implicits._
-    // one typed pipeline for every dtype (native-typed read; floats as
-    // raw Double bits — see typedLongBlocks)
-    val typed = typedLongBlocks(
-      N5.read(spark, srcRoot, srcDataset), src.dataType, Seq("x0", "y0", "z0"))
+    val blocks = N5.readBytes(spark, srcRoot, srcDataset)
+      .select(col("x0"), col("y0"), col("z0"), col("shape"), col("data"))
+      .as[(Long, Long, Long, Array[Int], Array[Byte])]
 
     val Array(nbx, nby, nbz) = newBlockSize
-    val frags = typed.flatMap { case (x0, y0, z0, sshape, data) =>
+    val frags = blocks.flatMap { case (x0, y0, z0, sshape, data) =>
       val Array(ssx, ssy, ssz) = sshape
       val fr = Seq.newBuilder[Frag]
       var tgz = (z0 / nbz).toInt
@@ -242,22 +150,12 @@ object Regroup {
             val iz0 = math.max(z0, tgz.toLong * nbz)
             val iz1 = math.min(z0 + ssz, (tgz + 1).toLong * nbz)
             val (fx, fy, fz) = ((ix1 - ix0).toInt, (iy1 - iy0).toInt, (iz1 - iz0).toInt)
-            val buf = new Array[Long](fx * fy * fz)
-            var z = 0
-            while (z < fz) {
-              var y = 0
-              while (y < fy) {
-                val srcBase = ((ix0 - x0) +
-                  (iy0 - y0 + y) * ssx + (iz0 - z0 + z) * ssx.toLong * ssy).toInt
-                val dstBase = (y + z * fy) * fx
-                System.arraycopy(data, srcBase, buf, dstBase, fx)
-                y += 1
-              }
-              z += 1
-            }
             fr += Frag(tgx, tgy, tgz,
               (ix0 - tgx.toLong * nbx).toInt, (iy0 - tgy.toLong * nby).toInt,
-              (iz0 - tgz.toLong * nbz).toInt, fx, fy, fz, buf)
+              (iz0 - tgz.toLong * nbz).toInt, fx, fy, fz,
+              cut(data, es, sshape,
+                Array((ix0 - x0).toInt, (iy0 - y0).toInt, (iz0 - z0).toInt),
+                Array(fx, fy, fz)))
             tgx += 1
           }
           tgy += 1
@@ -267,7 +165,7 @@ object Regroup {
       fr.result()
     }
 
-    writeAssembledAs(assemble(frags, dst), dstRoot, dstDataset, dst, isFloat)
+    N5.write(assemble(frags, dst).toDF(), dstRoot, dstDataset, dst)
     dst
   }
 }

@@ -26,6 +26,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * yields one row per stored block:
   * (gx,gy,gz INT, x0,y0,z0 LONG, shape ARRAY<INT>, data ARRAY<elem>), with
   * unsigned dtypes widened (uint8→SHORT, uint16→INT, uint32→LONG).
+  * Internal pipelines declare `data` as BINARY in the schema they pass to
+  * `DataFrameReader.schema` and get the big-endian element bytes instead.
   *
   * Scale design:
   *  - one InputPartition per block file → a 1000-executor cluster reads a
@@ -39,7 +41,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    queries (block counts, grid scans).
   *
   * Write: `df.write.format("n5").option(...)` with rows
-  * (gx,gy,gz,shape,data). Blocks are write-disjoint by grid position
+  * (gx,gy,gz,shape,data), `data` either the typed array or BINARY
+  * big-endian element bytes. Blocks are write-disjoint by grid position
   * (Spark partitions never share a block), writes are idempotent blind
   * overwrites (task retry safe — same semantics as `ometif_to_n5.py:205`),
   * and attributes.json is committed AFTER the data by the driver, fixing
@@ -85,29 +88,42 @@ object N5Schema {
     case Dtype.Float64 => DoubleType
   }
 
-  /** The read conversion: a decoded block's values as the primitive array
-    * of [[elementType]], `numElements` long. The uint32/uint64/int64 Long
-    * and float64 Double payloads already are that array and pass through
-    * uncopied.
+  /** The read conversion, and the only place Spark's typed arrays are
+    * built from element bytes: a decoded block's big-endian elements as the
+    * primitive array of [[elementType]], unsigned dtypes zero-extended into
+    * the wider type; `numElements` long. int8 bytes pass through uncopied.
     */
   def sparkValues(dec: DecodedBlock, d: Dtype): AnyRef = {
+    val buf = java.nio.ByteBuffer.wrap(dec.bytes)
     val n = dec.numElements
     var i = 0
     d match {
-      case Dtype.UInt8 | Dtype.Int16 =>
-        val a = new Array[Short](n); while (i < n) { a(i) = dec.longs(i).toShort; i += 1 }; a
+      case Dtype.UInt8 =>
+        val a = new Array[Short](n); while (i < n) { a(i) = (dec.bytes(i) & 0xff).toShort; i += 1 }; a
       case Dtype.Int8 =>
-        val a = new Array[Byte](n); while (i < n) { a(i) = dec.longs(i).toByte; i += 1 }; a
-      case Dtype.UInt16 | Dtype.Int32 =>
-        val a = new Array[Int](n); while (i < n) { a(i) = dec.longs(i).toInt; i += 1 }; a
-      case Dtype.UInt32 | Dtype.UInt64 | Dtype.Int64 => dec.longs
-      case Dtype.Float32 =>
-        val a = new Array[Float](n); while (i < n) { a(i) = dec.doubles(i).toFloat; i += 1 }; a
-      case Dtype.Float64 => dec.doubles
+        if (dec.bytes.length == n) dec.bytes else java.util.Arrays.copyOf(dec.bytes, n)
+      case Dtype.UInt16 =>
+        val a = new Array[Int](n); while (i < n) { a(i) = buf.getShort() & 0xffff; i += 1 }; a
+      case Dtype.Int16 => val a = new Array[Short](n); buf.asShortBuffer().get(a); a
+      case Dtype.UInt32 =>
+        val a = new Array[Long](n); while (i < n) { a(i) = buf.getInt() & 0xffffffffL; i += 1 }; a
+      case Dtype.Int32 => val a = new Array[Int](n); buf.asIntBuffer().get(a); a
+      case Dtype.UInt64 | Dtype.Int64 => val a = new Array[Long](n); buf.asLongBuffer().get(a); a
+      case Dtype.Float32 => val a = new Array[Float](n); buf.asFloatBuffer().get(a); a
+      case Dtype.Float64 => val a = new Array[Double](n); buf.asDoubleBuffer().get(a); a
     }
   }
 
-  def blockSchema(d: Dtype): StructType = StructType(Seq(
+  def blockSchema(d: Dtype): StructType =
+    blockSchemaOf(ArrayType(elementType(d), containsNull = false))
+
+  /** The block schema internal pipelines read through
+    * `DataFrameReader.schema`: `data` is the block's big-endian element
+    * bytes, emitted by the reader uncopied.
+    */
+  val blockBytesSchema: StructType = blockSchemaOf(BinaryType)
+
+  private def blockSchemaOf(data: DataType): StructType = StructType(Seq(
     StructField("gx", IntegerType, nullable = false),
     StructField("gy", IntegerType, nullable = false),
     StructField("gz", IntegerType, nullable = false),
@@ -115,7 +131,7 @@ object N5Schema {
     StructField("y0", LongType, nullable = false),
     StructField("z0", LongType, nullable = false),
     StructField("shape", ArrayType(IntegerType, containsNull = false), nullable = false),
-    StructField("data", ArrayType(elementType(d), containsNull = false), nullable = false)))
+    StructField("data", data, nullable = false)))
 
   /** Schema of the columnar per-element view (`option("view","elements")`):
     * one row per voxel, emitted as ColumnarBatches directly from the
@@ -154,7 +170,8 @@ class N5Table(options: CaseInsensitiveStringMap, tableSchema: StructType)
     val merged = new java.util.HashMap[String, String]()
     o.forEach((k, v) => merged.put(k, v))
     options.forEach((k, v) => merged.put(k, v))
-    new N5ScanBuilder(root, dataset, attrs, new CaseInsensitiveStringMap(merged))
+    new N5ScanBuilder(root, dataset, attrs, tableSchema,
+      new CaseInsensitiveStringMap(merged))
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
@@ -165,7 +182,7 @@ class N5Table(options: CaseInsensitiveStringMap, tableSchema: StructType)
 
 class N5ScanBuilder(
     root: String, dataset: String, attrs: DatasetAttributes,
-    options: CaseInsensitiveStringMap)
+    tableSchema: StructType, options: CaseInsensitiveStringMap)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates {
@@ -180,9 +197,7 @@ class N5ScanBuilder(
   require(!fillMissing || elementsView, "fillMissing requires view=elements")
 
   private var pushed: Array[Filter] = Array.empty
-  private var required: StructType =
-    if (elementsView) N5Schema.elementSchema(attrs.dataType)
-    else N5Schema.blockSchema(attrs.dataType)
+  private var required: StructType = tableSchema
   private var aggregates: Array[N5Aggregate] = Array.empty
   private var hasAvg = false
 
@@ -787,11 +802,9 @@ object N5BlockIO {
     dec
   }
 
-  private def fillBlock(shape: Array[Int], attrs: DatasetAttributes): DecodedBlock = {
-    val n = shape.product
-    if (attrs.dataType.isFloat) DecodedBlock(shape, null, new Array[Double](n))
-    else DecodedBlock(shape, new Array[Long](n), null)
-  }
+  private def fillBlock(shape: Array[Int], attrs: DatasetAttributes): DecodedBlock =
+    DecodedBlock(shape, attrs.dataType,
+      new Array[Byte](shape.product * attrs.dataType.bytesPerElement))
 
 }
 
@@ -963,7 +976,9 @@ class N5BytesReadMetric extends CustomSumMetric {
 }
 
 /** Emits one row per block of its partition; payload decode is skipped
-  * entirely when the `data` column was pruned away.
+  * entirely when the `data` column was pruned away. A `binary` `data`
+  * column (declared by the reader's schema) carries the decoded element
+  * bytes uncopied; an array column carries [[N5Schema.sparkValues]].
   */
 class N5BlockReader(
     part: N5BlocksPartition, attrs: DatasetAttributes, required: StructType)
@@ -977,17 +992,24 @@ class N5BlockReader(
   private val metrics = new N5ReadMetrics
 
   private def needsData = required.fieldNames.contains("data")
+  private def asBytes = needsData && required("data").dataType == BinaryType
 
   override def next(): Boolean = {
     i += 1
     if (i >= part.grids.length) return false
     val g = part.grids(i)
     val shape: Array[Int] = attrs.blockShape(g)
-    val dataArr: org.apache.spark.sql.catalyst.util.ArrayData =
+    val data: AnyRef =
       if (needsData) {
         metrics.blocksRead += 1
-        toSparkArray(N5BlockIO.readDecode(fs, part.root, part.dataset, g,
-          attrs, shardState))
+        val dec = N5BlockIO.readDecode(fs, part.root, part.dataset, g, attrs, shardState)
+        // every block consumer assumes data covers shape.product elements,
+        // so a short varlength (mode-1) block must fail here with a
+        // diagnostic, not as an index error mid-copy
+        require(dec.elementCount >= dec.numElements,
+          s"block decodes ${dec.elementCount} elements, expected " +
+            s"${dec.numElements} — truncated or varlength-short block")
+        if (asBytes) dec.bytes else toSparkArray(dec)
       } else null
     val values = required.fieldNames.map {
       case "gx" => g(0)
@@ -997,7 +1019,7 @@ class N5BlockReader(
       case "y0" => if (g.length > 1) g(1).toLong * attrs.blockSize(1) else 0L
       case "z0" => if (g.length > 2) g(2).toLong * attrs.blockSize(2) else 0L
       case "shape" => new GenericArrayData(shape.map(i => i: Any))
-      case "data" => dataArr
+      case "data" => data
       case other => throw new IllegalArgumentException(s"unknown column $other")
     }
     row = InternalRow.fromSeq(values.toSeq)
@@ -1012,12 +1034,6 @@ class N5BlockReader(
     */
   private def toSparkArray(dec: DecodedBlock): org.apache.spark.sql.catalyst.expressions.UnsafeArrayData = {
     import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-    // every blocks-view consumer (Multiscale, Regroup, export) assumes
-    // data.length == shape.product, so a short varlength (mode-1) block
-    // must fail here with a diagnostic, not as an index error mid-copy
-    require(dec.elementCount >= dec.numElements,
-      s"block decodes ${dec.elementCount} elements, expected " +
-        s"${dec.numElements} — truncated or varlength-short block")
     N5Schema.sparkValues(dec, attrs.dataType) match {
       case a: Array[Short] => UnsafeArrayData.fromPrimitiveArray(a)
       case a: Array[Byte] => UnsafeArrayData.fromPrimitiveArray(a)
@@ -1362,7 +1378,10 @@ class N5WriterFactory(
     new N5BlockWriter(root, dataset, attrs, inputSchema, varlength)
 }
 
-/** Writes each incoming (gx,gy,gz,shape,data) row as one block file.
+/** Writes each incoming (gx,gy,gz,shape,data) row as one block file. A
+  * BINARY `data` is the block's big-endian element bytes and is encoded
+  * as it is; a typed array goes through the codec's range-checked
+  * [[BlockCodec.narrow]]. The input schema picks the branch.
   * Each block is written to a hidden temp file and atomically renamed
   * into place (FileContext rename with OVERWRITE — atomic on POSIX and
   * HDFS), so a crashed or speculative task can never leave a torn block
@@ -1384,26 +1403,38 @@ class N5BlockWriter(
   private val idx: Map[String, Int] =
     inputSchema.fieldNames.zipWithIndex.toMap
   private val elemType = N5Schema.elementType(attrs.dataType)
+  private val es = attrs.dataType.bytesPerElement
+  private val bytesIn = inputSchema("data").dataType == BinaryType
 
   override def write(r: InternalRow): Unit = {
     val gx = r.getInt(idx("gx"))
     val gy = if (idx.contains("gy")) r.getInt(idx("gy")) else 0
     val gz = if (idx.contains("gz")) r.getInt(idx("gz")) else 0
     val shape = r.getArray(idx("shape")).toIntArray()
-    val data = r.getArray(idx("data"))
     val n = shape.product
-    require(data.numElements() == n,
-      s"block ($gx,$gy,$gz): data has ${data.numElements()} elements, shape needs $n")
-    // the write conversion: the codec's (longs, doubles) payload
-    val (longs, doubles) = elemType match {
-      case ShortType => (data.toShortArray().map(_.toLong), null)
-      case ByteType => (data.toByteArray().map(_.toLong), null)
-      case IntegerType => (data.toIntArray().map(_.toLong), null)
-      case LongType => (data.toLongArray(), null)
-      case FloatType => (null, data.toFloatArray().map(_.toDouble))
-      case DoubleType => (null, data.toDoubleArray())
-      case other => throw new IllegalArgumentException(s"bad element type $other")
-    }
+    // element bytes are written as they are; a typed array is narrowed
+    // (range-checked) by the one dtype codec
+    val elems =
+      if (bytesIn) {
+        val b = r.getBinary(idx("data"))
+        require(b.length == n * es,
+          s"block ($gx,$gy,$gz): data has ${b.length} bytes, shape needs ${n * es}")
+        b
+      } else {
+        val data = r.getArray(idx("data"))
+        require(data.numElements() == n,
+          s"block ($gx,$gy,$gz): data has ${data.numElements()} elements, shape needs $n")
+        val (longs, doubles) = elemType match {
+          case ShortType => (data.toShortArray().map(_.toLong), null)
+          case ByteType => (data.toByteArray().map(_.toLong), null)
+          case IntegerType => (data.toIntArray().map(_.toLong), null)
+          case LongType => (data.toLongArray(), null)
+          case FloatType => (null, data.toFloatArray().map(_.toDouble))
+          case DoubleType => (null, data.toDoubleArray())
+          case other => throw new IllegalArgumentException(s"bad element type $other")
+        }
+        BlockCodec.narrow(longs, doubles, n, attrs.dataType)
+      }
     val bytes =
       if (attrs.isZarrFamily) {
         require(!varlength,
@@ -1415,12 +1446,12 @@ class N5BlockWriter(
           case None => (attrs.compression, attrs.zarrLittleEndian,
             attrs.isZarr3 && attrs.zarr3Crc)
         }
-        val chunk = BlockCodec.encodeZarr(shape, attrs.blockSize, longs,
-          doubles, attrs.dataType, comp, little)
+        val chunk = BlockCodec.encodeZarr(shape, attrs.blockSize, elems,
+          attrs.dataType, comp, little)
         // v3 chains end with crc32c: checksum of the compressed chunk,
         // 4 bytes little-endian (verified+stripped on read)
         if (crc) withCrc32c(chunk) else chunk
-      } else BlockCodec.encode(shape, longs, doubles, attrs.dataType,
+      } else BlockCodec.encode(shape, elems, attrs.dataType,
         attrs.compression, varlength)
     attrs.shard match {
       case Some(sp) =>

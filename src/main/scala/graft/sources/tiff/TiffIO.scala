@@ -35,11 +35,35 @@ object TiffIO {
     }
   }
 
+  /** The grayscale image of row-major (x fastest) `bits`-bit samples,
+    * `bits/8` big-endian bytes each — the export pages' layout.
+    */
+  def sampleImage(width: Int, height: Int, samples: Array[Byte], bits: Int): BufferedImage = {
+    require(samples.length == width * height * (bits / 8),
+      s"${samples.length} sample bytes != $width x $height x ${bits / 8}")
+    bits match {
+      case 8 =>
+        val im = new BufferedImage(width, height, BufferedImage.TYPE_BYTE_GRAY)
+        val buf = im.getRaster.getDataBuffer.asInstanceOf[DataBufferByte].getData
+        System.arraycopy(samples, 0, buf, 0, samples.length)
+        im
+      case 16 =>
+        val im = new BufferedImage(width, height, BufferedImage.TYPE_USHORT_GRAY)
+        java.nio.ByteBuffer.wrap(samples).asShortBuffer()
+          .get(im.getRaster.getDataBuffer.asInstanceOf[DataBufferUShort].getData)
+        im
+      case b => throw new IllegalArgumentException(s"unsupported bit depth $b")
+    }
+  }
+
   /** Encode a row-major (x fastest) pixel array as a grayscale TIFF. */
-  def encode(width: Int, height: Int, pixels: Array[Int], bits: Int): Array[Byte] = {
+  def encode(width: Int, height: Int, pixels: Array[Int], bits: Int): Array[Byte] =
+    encodeImage(buildImage(width, height, pixels, bits))
+
+  /** Encode an image as a TIFF file's bytes. */
+  def encodeImage(img: BufferedImage): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
-    require(ImageIO.write(buildImage(width, height, pixels, bits), "tiff", bos),
-      "no TIFF writer available")
+    require(ImageIO.write(img, "tiff", bos), "no TIFF writer available")
     bos.toByteArray
   }
 

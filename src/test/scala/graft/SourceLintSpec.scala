@@ -14,11 +14,15 @@ import scala.jdk.CollectionConverters._
   *    metadata read, grid walk or block reader costs tens of milliseconds
   *    per query.
   *  - Per-dtype element conversions live in one place per direction:
-  *    `BlockCodec.widen`/`narrow` between element bytes and the Long/
-  *    Double payload, and `N5Schema.elementType` plus the read
-  *    conversion `N5Schema.sparkValues` in the connector. A new
-  *    `case Dtype.UInt8` loop set elsewhere in those files is the
-  *    scattered sign handling the single codec exists to prevent.
+  *    `BlockCodec.widen`/`narrow` between element bytes and Long/Double
+  *    values, and `N5Schema.elementType` plus the read conversion
+  *    `N5Schema.sparkValues` (element bytes to Spark's typed arrays) in
+  *    the connector. A new `case Dtype.UInt8` loop set elsewhere in those
+  *    files is the scattered sign handling the single codec exists to
+  *    prevent.
+  *  - Blocks, fragments and TIFF pages carry their dtype's element bytes
+  *    from decode to encode: no raw-Double-bits convention and no
+  *    Long-widened block pipeline under the N5 and TIFF sources.
   *  - `N5.readBox` is one element scan: the scan lists the grid and
   *    densifies absent blocks itself, so the body needs no driver-side
   *    `listChunks` walk and no `union` of generated zero rows.
@@ -72,6 +76,20 @@ class SourceLintSpec extends AnyFunSuite {
     val outside = matches(sources.filter(_ != regroup), "slicesToBlocks(")
     assert(outside.isEmpty,
       s"slice fragmenting outside Regroup.writeSlices:\n${outside.mkString("\n")}")
+  }
+
+  test("N5 and TIFF pipelines move element bytes, not Long-widened payloads") {
+    val dirs = Seq("graft/n5", "graft/sources/n5", "graft/sources/tiff")
+      .map(mainRoot.resolve)
+    val needles = Seq("doubleToRawLongBits", "longBitsToDouble",
+      "typedLongBlocks(", "blocksDF(")
+    val offenders = for {
+      f <- sources if dirs.exists(f.startsWith)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if needles.exists(line.contains)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      s"raw Double bits or the Long-widened block pipeline:\n${offenders.mkString("\n")}")
   }
 
   test("N5.readBox is one scan: no driver-side listing, no union") {

@@ -133,6 +133,23 @@ class TiffPlaneSpec extends SparkSpec {
     assert(ex.getMessage.contains("outside dims 8x8x2"), ex.getMessage)
   }
 
+  test("ingestSlices names a .tif file without a numeric suffix before decoding it") {
+    val tmp = Files.createTempDirectory("planename").toString
+    val dir = new File(tmp, "tif")
+    dir.mkdirs()
+    for (z <- 0 until 2)
+      Files.write(new File(dir, s"slice_$z.tif").toPath,
+        TiffIO.encode(4, 3, Array.tabulate(12)(i => (i + z) % 256), 8))
+    // not a TIFF: decoding it would fail with a decoder error instead
+    Files.write(new File(dir, "foo.tif").toPath, "not a tiff".getBytes("UTF-8"))
+    val ex = intercept[IllegalArgumentException] {
+      TiffVolume.ingestSlices(spark, dir.toString, s"$tmp/a.n5", "v", Array(4, 4, 2))
+    }
+    assert(ex.getMessage.contains("contains .tif files without a numeric suffix"),
+      ex.getMessage)
+    assert(ex.getMessage.contains("foo.tif"), ex.getMessage)
+  }
+
   test("per-channel series and cropped OME page stacks ingest their planes") {
     val tmp = Files.createTempDirectory("planech").toString
     // a 3-band series: each band of each slice is a distinct plane
