@@ -14,8 +14,10 @@ import org.apache.spark.sql.functions._
   * → avg. One hash shuffle per level whose output size is 1/(fx*fy*fz) of
   * the input — at 100 TB the level-1 shuffle is the dominant cost and is
   * exactly the data reduction itself, so no formulation does less I/O
-  * unless factors divide the block size (then a block-local, shuffle-free
-  * coarsen applies — planned optimization, same writer interface).
+  * unless factors divide the block size. That is the usual case, and
+  * [[downsampleLevel]] then takes the block-local coarsen by default
+  * ([[downsampleLevelBlockLocal]]): the mean is taken inside each source
+  * block and only the reduced fragments are exchanged.
   * Each level is committed before the next starts: fault isolation per
   * level, unlike the reference's single giant task graph.
   *
@@ -213,7 +215,13 @@ object Multiscale {
               dz += 1
             }
             val i = x + y * ox + z * ox * oy
-            if (doubles != null) outD(i) = if (isMean) sd / win else sd
+            // a NaN result is stored as the canonical NaN: the sign of a
+            // NaN sum or extreme depends on operand order, which the JIT
+            // may choose, so a float pyramid stays byte-reproducible
+            if (doubles != null) {
+              val d = if (isMean) sd / win else sd
+              outD(i) = if (java.lang.Double.isNaN(d)) Double.NaN else d
+            }
             // numpy astype semantics: truncate toward zero
             else outL(i) = if (isMean) (sd / win).toLong else sl
             x += 1
@@ -230,11 +238,6 @@ object Multiscale {
     dst
   }
 
-  /** Element-shuffle formulation (general fallback for factors that do
-    * not divide the block size). Float means may differ from the
-    * block-local path in the last ulp (groupBy avg adds in partition
-    * order; the block-local loop adds in window order).
-    */
   /** Shared element-shuffle scaffolding: read s{level-1}, trim partial
     * high-edge windows, rebin coordinates by the factors, apply the
     * per-window `reduce` (given the source attrs and the OUTPUT dims the
@@ -268,6 +271,11 @@ object Multiscale {
     dst
   }
 
+  /** Element-shuffle formulation (general fallback for factors that do
+    * not divide the block size). Float means may differ from the
+    * block-local path in the last ulp (groupBy avg adds in partition
+    * order; the block-local loop adds in window order).
+    */
   def downsampleLevelElements(
       spark: SparkSession, root: String, group: String, level: Int,
       factors: Array[Int], method: String = "mean"): DatasetAttributes =

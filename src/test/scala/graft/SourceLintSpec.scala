@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.regex.Pattern
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,6 +27,12 @@ import scala.jdk.CollectionConverters._
   *  - `N5.readBox` is one element scan: the scan lists the grid and
   *    densifies absent blocks itself, so the body needs no driver-side
   *    `listChunks` walk and no `union` of generated zero rows.
+  *  - `VolumeCC` decodes and labels each block once per call: one block
+  *    pass emits both the per-label accumulators and the face voxels, and
+  *    one closure helper runs the face join and `ConnectedComponents`. A
+  *    second `localRoots` call beyond `labelVolume`'s relabel pass, or a
+  *    second closure, is another full pass over the volume or another
+  *    copy of the stitching plan.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -100,5 +107,15 @@ class SourceLintSpec extends AnyFunSuite {
     val body = src.substring(start, next.map(start + 1 + _.start).getOrElse(src.length))
     for (needle <- Seq("union(", "listChunks("))
       assert(!body.contains(needle), s"N5.readBox calls $needle")
+  }
+
+  test("VolumeCC reads and labels each block once: one block pass, one closure") {
+    val src = new String(Files.readAllBytes(
+      mainRoot.resolve("graft/operators/VolumeCC.scala")))
+    def count(needle: String) = src.split(Pattern.quote(needle), -1).length - 1
+    val roots = count("localRoots(") - count("def localRoots(")
+    assert(roots <= 2, s"$roots localRoots( call sites; at most 2 (block pass, relabel)")
+    val runs = count("ConnectedComponents.run(")
+    assert(runs == 1, s"$runs ConnectedComponents.run( calls; exactly 1")
   }
 }
