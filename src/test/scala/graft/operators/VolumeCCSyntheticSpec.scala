@@ -67,8 +67,8 @@ class VolumeCCSyntheticSpec extends SparkSpec {
     dir
   }
 
-  private def components(r: String, ds: String): Map[Long, Long] =
-    VolumeCC.components(N5.read(spark, r, ds), nx, ny, threshold)
+  private def components(dir: String, ds: String): Map[Long, Long] =
+    VolumeCC.components(N5.read(spark, dir, ds), nx, ny, threshold)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("the fixture has edge-trimmed blocks and components crossing " +
