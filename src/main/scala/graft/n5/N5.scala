@@ -238,7 +238,11 @@ object N5 {
     * (`n5_utils.py:6-18`). One element scan: the box predicates push into
     * the source, which prunes block FILES before any I/O and trims every
     * block to the box, so no row filter remains above the scan and
-    * count/sum/min/max over the box can be answered per block.
+    * count/sum/min/max over the box can be answered per block. When the
+    * box meets one block (or none), the scan's one row is the answer: the
+    * query runs as one Spark job with no exchange. Larger boxes spread
+    * their blocks over the session's cores, and Spark merges the scan's
+    * per-block rows.
     *
     * `fillMissing=true` (default) reproduces zarr fill-value semantics on
     * sparse volumes: voxels of the box whose block file is absent come

@@ -12,10 +12,13 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
 /** An aggregate the element scan computes per block over the block's
-  * trimmed rectangle, as a partial that Spark merges: a count or sum
-  * partial is summed, a min or max partial is min'd or max'd.
+  * trimmed rectangle. When the box meets at most one block that value is
+  * the final one (a complete pushdown: Spark only casts it to the
+  * aggregate's result type); otherwise it is a partial that Spark merges:
+  * a count or sum partial is summed, a min or max partial is min'd or
+  * max'd.
   *
-  * Only aggregates whose per-block partial is exact are accepted:
+  * Only aggregates whose per-block value is exact are accepted:
   * counts for every dtype, `SUM(v)` for integer dtypes of at most 32 bits
   * (a block holds under 2³¹ voxels, so its sum fits a long) and
   * `MIN`/`MAX(v)` for integer dtypes. Float sums, minima and maxima are
@@ -49,7 +52,7 @@ object N5Aggregate {
     override def toString: String = "MAX(v)"
   }
 
-  /** The scan's output schema when `aggs` are pushed: one partial column each. */
+  /** The scan's output schema when `aggs` are pushed: one column each. */
   def schema(aggs: Array[N5Aggregate], d: Dtype): StructType =
     StructType(aggs.zipWithIndex.map { case (a, i) =>
       StructField(s"agg$i", a.dataType(N5Schema.elementType(d)))
@@ -176,10 +179,12 @@ object N5Comparison {
   }
 }
 
-/** Emits one ColumnarBatch holding a partial row per block of its
-  * partition (or one empty-box row when it has none, so a count over an
-  * empty box is 0, not null). A fill block's voxels are all zero, so its
-  * partials need no payload.
+/** Emits one ColumnarBatch holding an aggregate row per block of its
+  * partition, or one empty-box row when it has none (count 0, null sum,
+  * min and max, as Spark's own aggregate over no rows). Under a complete
+  * pushdown the partition holds at most one block, so its one row is the
+  * query's final row; otherwise the rows are partials that Spark merges.
+  * A fill block's voxels are all zero, so its row needs no payload.
   */
 class N5AggregateReader(
     part: N5BlocksPartition, attrs: DatasetAttributes, box: N5Box,

@@ -5,6 +5,7 @@ import java.util
 import graft.n5._
 import graft.sources.HadoopFs
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -30,9 +31,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `DataFrameReader.schema` and get the big-endian element bytes instead.
   *
   * Scale design:
-  *  - one InputPartition per block file → a 1000-executor cluster reads a
-  *    100 TB volume with full parallelism and no driver bottleneck beyond
-  *    the block listing (listing is one RPC per grid directory);
+  *  - block files group into size-targeted InputPartitions (element
+  *    scans also spread over the session's cores) → a 1000-executor
+  *    cluster reads a 100 TB volume with full parallelism and no driver
+  *    bottleneck beyond the block listing (one RPC per grid directory);
   *  - grid predicates (gx/gy/gz =, <, >, IN, ranges) are pushed down and
   *    prune block files BEFORE any I/O — a box read touches only
   *    intersecting chunks, exactly like the reference's zarr slicing
@@ -227,26 +229,38 @@ class N5ScanBuilder(
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** Partial aggregates per block (see [[N5Aggregate]]); Spark merges
-    * them, so an aggregate the element scan cannot compute exactly is
-    * refused and the whole aggregation takes the row path. Spark asks
-    * this first, with the aggregation as written; an AVG in it would come
-    * back split into SUM and COUNT, whose long sum rounds differently
-    * from Spark's double-summing average, so it is remembered (across the
-    * later calls with the split aggregation) and refused.
+  /** True when the scan's one row is the aggregation's final row: the
+    * aggregation is pushable and the pushed box meets at most one grid
+    * position, so the scan plans exactly one partition (stored, fill or
+    * empty-box) and its reader emits one row. Spark then plans no
+    * Aggregate and no exchange, and the query runs as one job. Larger
+    * boxes answer false and get per-block partials that Spark merges.
+    * Filters are pushed before aggregates, so the box is known here, and
+    * the block count is arithmetic on it: no listing.
+    *
+    * Spark asks this first, with the aggregation as written; an AVG in it
+    * would come back split into SUM and COUNT, whose long sum rounds
+    * differently from Spark's double-summing average, so it is remembered
+    * (across the later calls with the split aggregation) and refused.
     */
   override def supportCompletePushDown(agg: Aggregation): Boolean = {
     hasAvg ||= agg.aggregateExpressions.exists(_.isInstanceOf[Avg])
-    false
+    pushable(agg) &&
+      N5GridFilters.elementBox(pushed, attrs.dimensions).blockCount(attrs) <= 1
   }
 
   override def pushAggregation(agg: Aggregation): Boolean = {
-    val fns = agg.aggregateExpressions.map(N5Aggregate.of(_, attrs.dataType))
-    val ok = elementsView && !hasAvg && agg.groupByExpressions.isEmpty &&
-      fns.forall(_.isDefined)
-    if (ok) aggregates = fns.map(_.get)
+    val ok = pushable(agg)
+    if (ok) aggregates = agg.aggregateExpressions.map(N5Aggregate.of(_, attrs.dataType).get)
     ok
   }
+
+  /** Every aggregate has an exact per-block form (see [[N5Aggregate]]);
+    * otherwise the whole aggregation takes the row path.
+    */
+  private def pushable(agg: Aggregation): Boolean =
+    elementsView && !hasAvg && agg.groupByExpressions.isEmpty &&
+      agg.aggregateExpressions.forall(N5Aggregate.of(_, attrs.dataType).isDefined)
 
   override def build(): Scan =
     new N5Scan(root, dataset, attrs, pushed,
@@ -265,18 +279,22 @@ class N5ScanBuilder(
         n
       },
       fillMissing = fillMissing,
-      aggregates = aggregates)
+      aggregates = aggregates,
+      parallelism =
+        if (elementsView) GraftSqlBridge.leafNodeParallelism(SparkSession.active) else 1)
 }
 
 object N5Scan {
   /** ~decoded bytes per scan partition (targetPartitionBytes option). */
   val DefaultTargetPartitionBytes: Long = 128L * 1024 * 1024
 
-  /** Group blocks into partitions of ~targetBytes decoded payload.
-    * One-partition-per-block would mean tens of millions of tasks on a
-    * 100 TB volume; grouping keeps task count = volume size / target,
-    * while the walk order preserves grid locality within a task. Shared
-    * by the batch scan and the streaming source's batch planning.
+  /** Group blocks into partitions of ~targetBytes decoded payload and at
+    * most `maxBlocksPerPartition` blocks. One-partition-per-block would
+    * mean tens of millions of tasks on a 100 TB volume; grouping keeps
+    * task count = volume size / target, while the walk order preserves
+    * grid locality within a task. Sharded zarr v3 is cut only at shard
+    * boundaries. Shared by the batch scan and the streaming source's
+    * batch planning.
     */
   def groupIntoPartitions(
       root: String, dataset: String, grids: Seq[Array[Int]],
@@ -455,14 +473,21 @@ final case class N5Box(lo: Array[Long], hi: Array[Long]) {
     BlockRect(shape, l, h)
   }
 
+  /** The grid positions the box meets on `axis` (box not empty). */
+  private def range(attrs: DatasetAttributes, axis: Int): Range = {
+    val bs = attrs.blockSize(axis)
+    (lo(axis) / bs).toInt to ((hi(axis) - 1) / bs).toInt
+  }
+
   /** Every grid position the box meets, x outermost. */
   def grids(attrs: DatasetAttributes): Seq[Array[Int]] =
     if (isEmpty) Nil
-    else {
-      val bs = attrs.blockSize
-      def range(a: Int) = (lo(a) / bs(a)).toInt to ((hi(a) - 1) / bs(a)).toInt
-      for (gx <- range(0); gy <- range(1); gz <- range(2)) yield Array(gx, gy, gz)
-    }
+    else for (gx <- range(attrs, 0); gy <- range(attrs, 1); gz <- range(attrs, 2))
+      yield Array(gx, gy, gz)
+
+  /** How many grid positions the box meets: the size of [[grids]]. */
+  def blockCount(attrs: DatasetAttributes): Long =
+    if (isEmpty) 0L else (0 until 3).map(range(attrs, _).length.toLong).product
 }
 
 /** A block of edge-trimmed `shape` restricted to the local rectangle
@@ -817,7 +842,8 @@ class N5Scan(
     elementsView: Boolean = false,
     elementBatchRows: Int = 16384,
     fillMissing: Boolean = false,
-    aggregates: Array[N5Aggregate] = Array.empty)
+    aggregates: Array[N5Aggregate] = Array.empty,
+    parallelism: Int = 1)
     extends Scan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
@@ -828,7 +854,15 @@ class N5Scan(
       (if (aggregates.isEmpty) "" else s", PushedAggregates: ${aggregates.mkString("[", ", ", "]")}") +
       (if (fillMissing) ", FillMissing" else "")
 
-  override def supportedCustomMetrics(): Array[CustomMetric] = N5ReadMetrics.supported
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    N5ReadMetrics.supported ++ N5ReadMetrics.driver
+
+  /** The plan's shape, after pruning: partitions and blocks (stored plus
+    * filled). Spark asks once the partitions are planned.
+    */
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = Array(
+    N5ReadMetrics.taskMetric("scanPartitions", partitions.length),
+    N5ReadMetrics.taskMetric("blocksPlanned", stored.length + absent.length))
 
   /** Streaming read: new block files become rows as they appear (see
     * N5MicroBatchStream for the offset design). Pushed grid filters prune
@@ -851,8 +885,9 @@ class N5Scan(
   private lazy val box: N5Box = N5GridFilters.elementBox(filters, attrs.dimensions)
 
   /** Statistics of what the scan emits: one row per voxel of the trimmed
-    * blocks (element view), one partial row per block (pushed aggregates)
-    * or one row per block (block view). Lets Catalyst broadcast small (or
+    * blocks (element view), one aggregate row per block and at least one
+    * (pushed aggregates: a complete pushdown's single row, or partials) or
+    * one row per block (block view). Lets Catalyst broadcast small (or
     * heavily pruned) block tables in joins.
     */
   override def estimateStatistics(): Statistics = new Statistics {
@@ -861,7 +896,7 @@ class N5Scan(
       if (elementsView) box.rect(attrs, g).rows
       else attrs.blockShape(g).map(_.toLong).product).sum
     private val rows =
-      if (aggregates.nonEmpty) blocks.length.toLong
+      if (aggregates.nonEmpty) math.max(1L, blocks.length.toLong)
       else if (elementsView) voxels
       else stored.length.toLong
     private val bytes =
@@ -897,17 +932,24 @@ class N5Scan(
     }
   }
 
-  /** Group blocks into partitions of ~targetBytes decoded payload (default
-    * 128 MiB). One-partition-per-block would mean tens of millions of
-    * tasks on a 100 TB volume; grouping keeps task count = volume size /
-    * target, while the walk order preserves grid locality within a task.
-    * `maxBlocksPerPartition=1` restores per-block tasks if desired. Absent
-    * blocks are filled by partitions of their own. Pushed aggregates always
-    * get a partition, so an empty box still yields its partial row.
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  /** Blocks grouped by [[N5Scan.groupIntoPartitions]]: at most
+    * `targetPartitionBytes` of decoded payload (default 128 MiB) and
+    * `maxBlocksPerPartition` blocks each (`1` restores per-block tasks).
+    * An element scan also takes at most ceil(blocks / `parallelism`)
+    * blocks per partition, so a box over a few dozen small blocks spreads
+    * over the session's cores instead of decoding on one; the block view
+    * and the streaming source keep the size target alone. Absent blocks
+    * are filled by partitions of their own. Pushed aggregates always get a
+    * partition, so an empty box still yields its row; a box over at most
+    * one block therefore plans exactly one partition, which a complete
+    * aggregate pushdown relies on.
     */
-  override def planInputPartitions(): Array[InputPartition] = {
+  private lazy val partitions: Array[InputPartition] = {
+    val spread = math.max(1L, (stored.length + absent.length + parallelism - 1L) / parallelism)
     def group(grids: Seq[Array[Int]]) = N5Scan.groupIntoPartitions(root, dataset,
-      grids, attrs, targetBytes, maxBlocksPerPartition)
+      grids, attrs, targetBytes, math.min(maxBlocksPerPartition, spread))
     val parts = group(stored) ++
       group(absent).map(p => p.asInstanceOf[N5BlocksPartition].copy(fill = true))
     if (parts.isEmpty && aggregates.nonEmpty)
@@ -941,20 +983,26 @@ final class N5ReadMetrics {
   var rowsEmitted = 0L
 
   def values(bytesRead: Long): Array[CustomTaskMetric] =
-    Seq("blocksRead" -> blocksRead, "blocksFilled" -> blocksFilled,
+    Array("blocksRead" -> blocksRead, "blocksFilled" -> blocksFilled,
       "rowsEmitted" -> rowsEmitted, "bytesRead" -> bytesRead).map {
-      case (n, v) => new CustomTaskMetric {
-        override def name(): String = n
-        override def value(): Long = v
-      }: CustomTaskMetric
-    }.toArray
+      case (n, v) => N5ReadMetrics.taskMetric(n, v)
+    }
 }
 
 object N5ReadMetrics {
-  /** The scan metrics Spark shows in the SQL UI and status store. */
+  /** The task-side scan metrics Spark shows in the SQL UI and status store. */
   val supported: Array[CustomMetric] = Array(
     new N5BlocksReadMetric, new N5BlocksFilledMetric,
     new N5RowsEmittedMetric, new N5BytesReadMetric)
+
+  /** The driver-side ones: what the scan planned (see `reportDriverMetrics`). */
+  val driver: Array[CustomMetric] = Array(
+    new N5ScanPartitionsMetric, new N5BlocksPlannedMetric)
+
+  def taskMetric(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = n
+    override def value(): Long = v
+  }
 }
 
 // Spark re-creates a metric from its class name, so each is a top-level class
@@ -973,6 +1021,14 @@ class N5RowsEmittedMetric extends CustomSumMetric {
 class N5BytesReadMetric extends CustomSumMetric {
   override def name(): String = "bytesRead"
   override def description(): String = "n5 compressed bytes read"
+}
+class N5ScanPartitionsMetric extends CustomSumMetric {
+  override def name(): String = "scanPartitions"
+  override def description(): String = "n5 scan partitions"
+}
+class N5BlocksPlannedMetric extends CustomSumMetric {
+  override def name(): String = "blocksPlanned"
+  override def description(): String = "n5 blocks planned"
 }
 
 /** Emits one row per block of its partition; payload decode is skipped
@@ -1054,7 +1110,7 @@ class N5BlockReader(
   * batch scan hands whole-stage codegen primitive column vectors filled
   * straight from the decoded block payload, replacing the block-row →
   * posexplode → per-row unravel pipeline for element consumers. With
-  * pushed aggregates the reader emits per-block partial rows instead.
+  * pushed aggregates the [[N5AggregateReader]] emits aggregate rows instead.
   */
 class N5ElementsReaderFactory(
     attrs: DatasetAttributes, required: StructType, batchRows: Int,

@@ -43,6 +43,14 @@ object GraftSqlBridge {
         s"unpersistCheckpoint needs a bare checkpoint, got:\n$p")
     }
 
+  /** The number of partitions Spark aims a leaf scan at:
+    * `spark.sql.leafNodeDefaultParallelism`, else the context's default
+    * parallelism (its core count in local mode). File sources size their
+    * splits by the same number (`FilePartition.maxSplitBytes`).
+    */
+  def leafNodeParallelism(spark: SparkSession): Int =
+    castToImpl(spark).leafNodeDefaultParallelism
+
   /** `df.localCheckpoint()` planned with AQE off, on a clone of `df`'s
     * session, so the caller's session is never touched; the result is
     * bound back to the caller's session. See `graft.operators.LoopStatic`

@@ -5,16 +5,22 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.n5.{Compression, DatasetAttributes, Dtype, N5}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.jdk.CollectionConverters._
+
 /** Box queries answered at block granularity: the element scan trims
   * every block to the box, fills absent blocks, and computes pushed
-  * count/sum/min/max partials per block. Pushed results must equal the
-  * row path's (an aggregate list the scan refuses keeps Spark on rows) for
-  * every dtype's extreme values, over boxes inside one block, straddling
-  * eight blocks, covering edge-trimmed and absent blocks, and empty.
+  * count/sum/min/max per block, as the final row when the box meets one
+  * block and as partials Spark merges otherwise. Pushed results must equal
+  * the row path's (an aggregate list the scan refuses keeps Spark on rows)
+  * for every dtype's extreme values, over boxes inside one stored, absent
+  * or edge-trimmed block, straddling eight blocks, covering edge-trimmed
+  * and absent blocks, and empty.
   */
 class BoxPushdownSpec extends SparkSpec {
 
@@ -87,6 +93,8 @@ class BoxPushdownSpec extends SparkSpec {
   /** (name, start, end) of the boxes every dtype is checked on. */
   private val boxes: Seq[(String, Array[Long], Array[Long])] = Seq(
     ("inside one block", Array(2L, 3L, 1L), Array(10L, 9L, 7L)),
+    ("inside one absent block", Array(2L, 18L, 3L), Array(12L, 27L, 11L)),
+    ("inside one edge-trimmed block", Array(33L, 17L, 17L), Array(45L, 35L, 25L)),
     ("straddling 8 blocks", Array(10L, 12L, 9L), Array(21L, 19L, 18L)),
     ("edge-trimmed blocks", Array(30L, 20L, 10L), Array(40L, 30L, 20L)),
     ("absent blocks", Array(5L, 10L, 8L), Array(38L, 30L, 19L)),
@@ -193,6 +201,49 @@ class BoxPushdownSpec extends SparkSpec {
       assert(box.agg(count(lit(1)), sum(col("v")))
         .queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     } finally spark.conf.set(key, prev)
+  }
+
+  /** The Spark jobs that running `df` starts, counted by a listener. */
+  private def jobs(df: DataFrame): Int = {
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val jobExecs = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val ended = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => jobExecs.add(id.toLong))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => execs.add(s.executionId)
+        case x: SparkListenerSQLExecutionEnd => ended.add(x.executionId)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      df.collect()
+      // the listener bus is asynchronous: wait for this execution's end
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def done = !execs.isEmpty && ended.contains(execs.peek())
+      while (!done && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(done, "no SQL execution end seen")
+      jobExecs.asScala.count(_ == execs.peek())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a box inside one block is answered by the scan alone, in one job") {
+    val root = volume(Dtype.UInt8, extremes.head._2)
+    def q(lo: Array[Long], hi: Array[Long]) = N5.readBox(spark, root, "v", lo, hi)
+      .agg(count(lit(1)), sum(col("v")).cast("long"), max(col("v")).cast("long"),
+        count(when(col("v") >= 128, 1)))
+    val one = q(Array(2L, 3L, 1L), Array(10L, 9L, 7L))
+    val p = plan(one)
+    assert(p.contains("PushedAggregates"), p)
+    assert(!p.contains("Exchange") && !p.contains("HashAggregate"), p)
+    // a box over more than one block keeps Spark's merge of the partials
+    val straddling = plan(q(Array(10L, 12L, 9L), Array(21L, 19L, 18L)))
+    assert(straddling.contains("PushedAggregates") && straddling.contains("Exchange") &&
+      straddling.contains("HashAggregate"), straddling)
+    assert(jobs(one) == 1)
   }
 
   test("unpushable aggregates (AVG, min(x)) stay on rows and stay right") {

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import graft.SparkSpec
 import graft.n5.{Compression, DatasetAttributes, Dtype, N5}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.connector.metric.CustomMetric
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -31,26 +32,8 @@ class N5ScanMetricsSpec extends SparkSpec {
 
   private def blockFile(g: String): Path = Paths.get(root, "v", g)
 
-  /** The N5 scan metrics of running `df`, by description. */
-  private def metrics(df: DataFrame): Map[String, Long] = {
-    val store = spark.sharedState.statusStore
-    val before = store.executionsList().map(_.executionId).toSet
-    df.collect()
-    val deadline = System.nanoTime() + 30L * 1000000000L
-    def finished = store.executionsList()
-      .filter(e => !before(e.executionId) && e.completionTime.isDefined)
-    while (finished.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-    val exec = finished.maxBy(_.executionId)
-    var values = store.executionMetrics(exec.executionId)
-    while (values.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(20)
-      values = store.executionMetrics(exec.executionId)
-    }
-    val names = N5ReadMetrics.supported.map(_.description()).toSet
-    store.planGraph(exec.executionId).allNodes.flatMap(_.metrics)
-      .filter(m => names(m.name) && values.contains(m.accumulatorId))
-      .map(m => m.name -> values(m.accumulatorId).replace(",", "").toLong).toMap
-  }
+  private def metrics(df: DataFrame): Map[String, Long] =
+    N5ScanMetricsSpec.scanMetrics(spark, df, N5ReadMetrics.supported)
 
   private def box(lo: Long, hi: Long) =
     N5.readBox(spark, root, "v", Array(lo, lo, lo), Array(hi, hi, hi))
@@ -88,5 +71,31 @@ class N5ScanMetricsSpec extends SparkSpec {
     val b = metrics(N5.read(spark, root, "v").select(col("data")))
     assert(b("n5 blocks read") == 3L && b("n5 rows emitted") == 3L)
     assert(b("n5 compressed bytes read") == files.map(Files.size).sum)
+  }
+}
+
+object N5ScanMetricsSpec {
+  /** The `declared` N5 scan metrics of running `df`, by description, as
+    * the SQL status store holds them once the execution has finished.
+    */
+  def scanMetrics(
+      spark: SparkSession, df: DataFrame, declared: Array[CustomMetric]): Map[String, Long] = {
+    val store = spark.sharedState.statusStore
+    val before = store.executionsList().map(_.executionId).toSet
+    df.collect()
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    def finished = store.executionsList()
+      .filter(e => !before(e.executionId) && e.completionTime.isDefined)
+    while (finished.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    val exec = finished.maxBy(_.executionId)
+    var values = store.executionMetrics(exec.executionId)
+    while (values.isEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(20)
+      values = store.executionMetrics(exec.executionId)
+    }
+    val names = declared.map(_.description()).toSet
+    store.planGraph(exec.executionId).allNodes.flatMap(_.metrics)
+      .filter(m => names(m.name) && values.contains(m.accumulatorId))
+      .map(m => m.name -> values(m.accumulatorId).replace(",", "").toLong).toMap
   }
 }
