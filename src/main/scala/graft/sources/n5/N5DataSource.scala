@@ -436,14 +436,14 @@ object N5GridFilters {
     * position g on `axis` when the block's coordinate range
     * [g·bs, (g+1)·bs) meets the box. `In` lists prune conservatively (a
     * block holding any listed value is kept) and Spark evaluates them on
-    * the rows.
+    * the rows. An empty box keeps no block, whatever its other axes span.
     */
   def elementAxisOk(filters: Array[Filter], box: N5Box, blockSize: Array[Int])(
       axis: Int, g: Int): Boolean = {
     val bs = blockSize(axis).toLong
     val lo = g * bs
     val hi = (g + 1) * bs - 1
-    box.lo(axis) <= hi && box.hi(axis) > lo && filters.forall {
+    !box.isEmpty && box.lo(axis) <= hi && box.hi(axis) > lo && filters.forall {
       // an In list with a null member (isin(5, null)) cannot prune
       case In(a, xs) if a == elemAxes(axis) && xs.forall(_ != null) =>
         xs.exists(x => { val v = asLong(x); v >= lo && v <= hi })
@@ -941,10 +941,10 @@ class N5Scan(
     * blocks per partition, so a box over a few dozen small blocks spreads
     * over the session's cores instead of decoding on one; the block view
     * and the streaming source keep the size target alone. Absent blocks
-    * are filled by partitions of their own. Pushed aggregates always get a
-    * partition, so an empty box still yields its row; a box over at most
-    * one block therefore plans exactly one partition, which a complete
-    * aggregate pushdown relies on.
+    * are filled by partitions of their own. An empty box lists no block,
+    * and pushed aggregates always get a partition, so it still yields its
+    * row; a box over at most one block therefore plans exactly one
+    * partition, which a complete aggregate pushdown relies on.
     */
   private lazy val partitions: Array[InputPartition] = {
     val spread = math.max(1L, (stored.length + absent.length + parallelism - 1L) / parallelism)

@@ -6,6 +6,7 @@ import graft.SparkSpec
 import graft.n5.{Compression, DatasetAttributes, Dtype, N5}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.metric.CustomMetric
+import org.apache.spark.sql.execution.ui.SQLExecutionUIData
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -75,19 +76,36 @@ class N5ScanMetricsSpec extends SparkSpec {
 }
 
 object N5ScanMetricsSpec {
+  /** Runs `df` and returns its SQL execution as the status store holds it
+    * once finished. The run is tagged with a job description of its own,
+    * so a straggling event of an earlier query, which the asynchronous
+    * listener bus may still be delivering, is never mistaken for it.
+    */
+  def execution(spark: SparkSession, df: DataFrame): SQLExecutionUIData = {
+    val sc = spark.sparkContext
+    val store = spark.sharedState.statusStore
+    val tag = s"n5-scan-spec-${tags.incrementAndGet()}"
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(tag)
+    try df.collect()
+    finally sc.setJobDescription(prev)
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    def finished = store.executionsList()
+      .find(e => e.description == tag && e.completionTime.isDefined)
+    while (finished.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    finished.getOrElse(throw new AssertionError(s"no finished SQL execution for $tag"))
+  }
+
+  private val tags = new java.util.concurrent.atomic.AtomicLong
+
   /** The `declared` N5 scan metrics of running `df`, by description, as
     * the SQL status store holds them once the execution has finished.
     */
   def scanMetrics(
       spark: SparkSession, df: DataFrame, declared: Array[CustomMetric]): Map[String, Long] = {
     val store = spark.sharedState.statusStore
-    val before = store.executionsList().map(_.executionId).toSet
-    df.collect()
+    val exec = execution(spark, df)
     val deadline = System.nanoTime() + 30L * 1000000000L
-    def finished = store.executionsList()
-      .filter(e => !before(e.executionId) && e.completionTime.isDefined)
-    while (finished.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-    val exec = finished.maxBy(_.executionId)
     var values = store.executionMetrics(exec.executionId)
     while (values.isEmpty && System.nanoTime() < deadline) {
       Thread.sleep(20)
