@@ -7,9 +7,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point: registers the native codegen
   * expressions as SQL functions so `spark.sql("SELECT vector_dot(a, b)")`
-  * works anywhere (pure SQL users, thrift server, notebooks), and the
+  * works anywhere (pure SQL users, thrift server, notebooks), the
   * N5 box-pruning analyzer rule (element-coordinate range predicates →
-  * block-grid pruning in the DSv2 scan).
+  * block-grid pruning in the DSv2 scan), and the planner strategy that
+  * answers a one-block N5 box aggregate on the driver, with no Spark job
+  * ([[graft.sources.n5.N5DriverAggregateStrategy]]). A session without
+  * the extensions runs that aggregate as one job.
   *
   * Usage: `SparkSession.builder.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.GraftExtensions`.
@@ -25,6 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[VectorL2Norm].getName, "vector_l2_norm"),
       GraftExtensions.normBuilder))
     ext.injectPostHocResolutionRule(s => graft.plans.N5BoxPruning(s))
+    ext.injectPlannerStrategy(_ => graft.sources.n5.N5DriverAggregateStrategy)
   }
 }
 

@@ -265,8 +265,7 @@ object Multiscale {
       .select(expr(s"x div $fx").as("x"), expr(s"y div $fy").as("y"),
         expr(s"z div $fz").as("z"), col("v"))
     val e = reduce(src, dstDims, rebinned)
-    val blocks = N5.blocksFromElements(e, dst,
-      N5Schema.elementType(dst.dataType))
+    val blocks = N5.blocksFromElements(e, dst)
     N5.write(blocks, root, s"$group/s$level", dst)
     dst
   }

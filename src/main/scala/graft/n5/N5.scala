@@ -2,7 +2,6 @@ package graft.n5
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
 
 /** Public N5 API over the DSv2 connector: block tables, element views, and
   * block reassembly (the Spark-native equivalents of the reference's
@@ -239,10 +238,11 @@ object N5 {
     * the source, which prunes block FILES before any I/O and trims every
     * block to the box, so no row filter remains above the scan and
     * count/sum/min/max over the box can be answered per block. When the
-    * box meets one block (or none), the scan's one row is the answer: the
-    * query runs as one Spark job with no exchange. Larger boxes spread
-    * their blocks over the session's cores, and Spark merges the scan's
-    * per-block rows.
+    * box meets one block (or none), the scan's one row is the answer: a
+    * session with [[graft.GraftExtensions]] reads it on the driver and
+    * runs no Spark job, one without runs one job with no exchange. Larger
+    * boxes spread their blocks over the session's cores, and Spark merges
+    * the scan's per-block rows.
     *
     * `fillMissing=true` (default) reproduces zarr fill-value semantics on
     * sparse volumes: voxels of the box whose block file is absent come
@@ -414,8 +414,8 @@ object N5 {
 
   /** Reassemble an element table (x,y,z,v) into the (gx,gy,gz,shape,data)
     * block layout of `target`, ready for `write`: `data` holds each
-    * block's big-endian element bytes of `target.dataType`, whose Spark
-    * element type `elemSparkType` is. One shuffle keyed by grid position —
+    * block's big-endian element bytes of `target.dataType`. One shuffle
+    * keyed by grid position —
     * the rechunk Exchange of `tif_to_n5.py:22` / `n5_to_tif.py:50`.
     *
     * Scale formulation: the map-side patch combine of [[patches]], then a
@@ -424,12 +424,10 @@ object N5 {
     * enforced with a coverage bitset; wholly absent blocks stay absent
     * (sparse volumes).
     */
-  def blocksFromElements(
-      elems: DataFrame, target: DatasetAttributes,
-      elemSparkType: DataType): DataFrame = {
+  def blocksFromElements(elems: DataFrame, target: DatasetAttributes): DataFrame = {
     import elems.sparkSession.implicits._
     val es = target.dataType.bytesPerElement
-    patches(elems, target, s"blocksFromElements (${elemSparkType.catalogString})")
+    patches(elems, target, s"blocksFromElements (${target.dataType.name})")
       .groupByKey(p => (p._1, p._2, p._3))
       .mapGroups { (g, it) =>
         val grid = Array(g._1, g._2, g._3)
@@ -505,8 +503,7 @@ object N5 {
     val src = N5Meta.datasetAttributes(srcRoot, srcDataset)
     val dst = src.copy(blockSize = newBlockSize, compression = compression)
     val elems = elementsScan(spark, srcRoot, srcDataset)
-    val blocks = blocksFromElements(elems, dst,
-      graft.sources.n5.N5Schema.elementType(dst.dataType))
+    val blocks = blocksFromElements(elems, dst)
     write(blocks, dstRoot, dstDataset, dst)
     dst
   }

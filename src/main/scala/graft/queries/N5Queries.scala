@@ -277,8 +277,7 @@ object N5Queries {
           (col("id") / (dims(0) * dims(1))).cast("long").as("z"))
         .select(col("x"), col("y"), col("z"),
           ((col("x") * 7 + col("y") * 13 + col("z") * 29) % 256).as("v"))
-      N5.write(N5.blocksFromElements(elems, attrs,
-        org.apache.spark.sql.types.ShortType), out, "vol/s0", attrs)
+      N5.write(N5.blocksFromElements(elems, attrs), out, "vol/s0", attrs)
       graft.n5.Regroup.rechunkBlocks(s, out, "vol/s0", out, "re/s0",
         Array(96, 96, 96))
       Multiscale.downsampleLevel(s, out, "re", 1, Array(2, 2, 2))
@@ -464,8 +463,7 @@ object N5Queries {
         N5.read(s, fixtureRoot, fixtureDs), 186L, 226L, threshold = 128L)
       val attrs = DatasetAttributes(Array(186L, 226L, 27L),
         Array(64, 64, 64), Dtype.UInt32, Compression("gzip"))
-      N5.write(N5.blocksFromElements(elems, attrs,
-        org.apache.spark.sql.types.LongType), tmp, "labels/s0", attrs)
+      N5.write(N5.blocksFromElements(elems, attrs), tmp, "labels/s0", attrs)
       val back = N5.elementsScan(s, tmp, "labels/s0")
         .filter(col("v") > 0)
         .select((col("v").cast("long") - 1L).as("component"))

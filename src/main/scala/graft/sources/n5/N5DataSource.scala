@@ -233,10 +233,12 @@ class N5ScanBuilder(
     * aggregation is pushable and the pushed box meets at most one grid
     * position, so the scan plans exactly one partition (stored, fill or
     * empty-box) and its reader emits one row. Spark then plans no
-    * Aggregate and no exchange, and the query runs as one job. Larger
-    * boxes answer false and get per-block partials that Spark merges.
+    * Aggregate and no exchange; with [[graft.GraftExtensions]] installed
+    * the scan is answered on the driver by [[N5DriverAggregateExec]] and
+    * `collect` runs no job. Larger boxes answer false and get per-block
+    * partials that Spark merges.
     * Filters are pushed before aggregates, so the box is known here, and
-    * the block count is arithmetic on it: no listing.
+    * whether it meets one block is arithmetic on it: no listing.
     *
     * Spark asks this first, with the aggregation as written; an AVG in it
     * would come back split into SUM and COUNT, whose long sum rounds
@@ -245,8 +247,7 @@ class N5ScanBuilder(
     */
   override def supportCompletePushDown(agg: Aggregation): Boolean = {
     hasAvg ||= agg.aggregateExpressions.exists(_.isInstanceOf[Avg])
-    pushable(agg) &&
-      N5GridFilters.elementBox(pushed, attrs.dimensions).blockCount(attrs) <= 1
+    pushable(agg) && N5GridFilters.elementBox(pushed, attrs.dimensions).meetsOneBlock(attrs)
   }
 
   override def pushAggregation(agg: Aggregation): Boolean = {
@@ -485,9 +486,11 @@ final case class N5Box(lo: Array[Long], hi: Array[Long]) {
     else for (gx <- range(attrs, 0); gy <- range(attrs, 1); gz <- range(attrs, 2))
       yield Array(gx, gy, gz)
 
-  /** How many grid positions the box meets: the size of [[grids]]. */
-  def blockCount(attrs: DatasetAttributes): Long =
-    if (isEmpty) 0L else (0 until 3).map(range(attrs, _).length.toLong).product
+  /** Whether the box meets at most one grid position, by arithmetic on the
+    * box: no listing.
+    */
+  def meetsOneBlock(attrs: DatasetAttributes): Boolean =
+    isEmpty || (0 until 3).forall(range(attrs, _).length == 1)
 }
 
 /** A block of edge-trimmed `shape` restricted to the local rectangle
@@ -961,6 +964,27 @@ class N5Scan(
     if (elementsView)
       new N5ElementsReaderFactory(attrs, required, elementBatchRows, box, aggregates)
     else new N5ReaderFactory(attrs, required)
+
+  /** Whether the scan's one row is its aggregation's final row: the test
+    * of [[N5ScanBuilder.supportCompletePushDown]], pushed aggregates over a
+    * box that meets at most one grid position.
+    */
+  def completeAggregate: Boolean = aggregates.nonEmpty && box.meetsOneBlock(attrs)
+
+  /** The one row of a [[completeAggregate]] scan, read in the calling
+    * thread by the task's reader over the scan's single partition (stored,
+    * fill or empty-box), with the metrics a task and the driver would
+    * report for it.
+    */
+  def aggregateRow(): (InternalRow, Array[CustomTaskMetric]) = {
+    require(completeAggregate, s"not a one-block aggregate scan: ${description()}")
+    val Array(part: N5BlocksPartition) = partitions
+    val reader = new N5AggregateReader(part, attrs, box, aggregates)
+    try {
+      reader.next()
+      (reader.get().getRow(0).copy(), reader.currentMetricsValues() ++ reportDriverMetrics())
+    } finally reader.close()
+  }
 }
 
 /** Blocks a task reads; a `fill` partition's blocks are absent and read as

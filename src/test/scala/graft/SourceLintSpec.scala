@@ -33,6 +33,10 @@ import scala.jdk.CollectionConverters._
   *    second `localRoots` call beyond `labelVolume`'s relabel pass, or a
   *    second closure, is another full pass over the volume or another
   *    copy of the stitching plan.
+  *  - Pushed N5 aggregates have one implementation, `N5AggregateReader`:
+  *    the element reader factory builds it for tasks and
+  *    `N5Scan.aggregateRow` for the driver-side one-block answer. A third
+  *    construction site is the start of a second aggregate path.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -107,6 +111,15 @@ class SourceLintSpec extends AnyFunSuite {
     val body = src.substring(start, next.map(start + 1 + _.start).getOrElse(src.length))
     for (needle <- Seq("union(", "listChunks("))
       assert(!body.contains(needle), s"N5.readBox calls $needle")
+  }
+
+  test("N5AggregateReader is built only by the reader factory and the driver path") {
+    val sites = for {
+      f <- sources
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("new N5AggregateReader(")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(sites.size == 2, s"expected 2 N5AggregateReader constructions:\n${sites.mkString("\n")}")
   }
 
   test("VolumeCC reads and labels each block once: one block pass, one closure") {

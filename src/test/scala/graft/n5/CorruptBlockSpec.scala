@@ -29,8 +29,7 @@ class CorruptBlockSpec extends SparkSpec {
         (col("id") / (dims(0) * dims(1))).cast("long").as("z"))
       .select(col("x"), col("y"), col("z"),
         ((col("x") + col("y") * 7 + col("z") * 13) % 200).cast("short").as("v"))
-    N5.write(N5.blocksFromElements(elems, attrs,
-      org.apache.spark.sql.types.ShortType), r, ds, attrs)
+    N5.write(N5.blocksFromElements(elems, attrs), r, ds, attrs)
     // block 0/0/0: cut the gzip stream in half
     val truncated = Paths.get(r, ds, "0/0/0")
     val bytes = Files.readAllBytes(truncated)

@@ -121,7 +121,7 @@ class DtypeExtremesSpec extends SparkSpec {
           StructField("v", elemT)))
       val target = DatasetAttributes(dims, bs, dtype, Compression("gzip"))
       // one task, so a shard's inner chunks reach a single writer
-      N5.blocksFromElements(elems, target, elemT).coalesce(1)
+      N5.blocksFromElements(elems, target).coalesce(1)
         .write.format("n5").option("dataset", "v")
         .option("dimensions", dims.mkString(","))
         .option("blockSize", bs.mkString(","))

@@ -36,7 +36,7 @@ class DtypeRoundTripSpec extends SparkSpec {
       case other => fail(s"unhandled $other")
     }
     N5.write(N5.blocksFromElements(
-      valued.select("x", "y", "z", "v"), attrs, elemT), root, "v/s0", attrs)
+      valued.select("x", "y", "z", "v"), attrs), root, "v/s0", attrs)
     // attrs round trip
     val back = N5Meta.datasetAttributes(root, "v/s0")
     assert(back.dataType == dtype)
@@ -65,8 +65,7 @@ class DtypeRoundTripSpec extends SparkSpec {
           ((col("id") / dims(0)) % dims(1)).cast("long").as("y"),
           (col("id") / (dims(0) * dims(1))).cast("long").as("z"),
           (col("id") % 256).as("v"))
-      N5.write(N5.blocksFromElements(elems, attrs,
-        org.apache.spark.sql.types.ShortType), root, "v/s0", attrs)
+      N5.write(N5.blocksFromElements(elems, attrs), root, "v/s0", attrs)
       val back = N5Meta.datasetAttributes(root, "v/s0")
       assert(back.compression.codec == codec, codec)
       val n = N5.elements(N5.read(spark, root, "v/s0"))

@@ -90,7 +90,7 @@ class GoldenBytesSpec extends SparkSpec {
     val elems = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
       StructType(Seq("x", "y", "z").map(StructField(_, LongType)) :+
         StructField("v", elemT)))
-    N5.write(N5.blocksFromElements(elems, attrs, elemT), root, "v", attrs)
+    N5.write(N5.blocksFromElements(elems, attrs), root, "v", attrs)
   }
 
   private def grids: Seq[Array[Int]] = for {

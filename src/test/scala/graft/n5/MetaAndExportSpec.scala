@@ -76,8 +76,7 @@ class MetaAndExportSpec extends SparkSpec {
     val elems = N5.boxGrid(spark, Array(0L, 0L, 0L), Array(4L, 4L, 2L))
       .select(col("x"), col("y"), col("z"),
         (col("x") - lit(2)).as("v")) // includes -2, -1
-    N5.write(N5.blocksFromElements(elems, attrs,
-      org.apache.spark.sql.types.IntegerType), s"$tmp/n.n5", "v/s0", attrs)
+    N5.write(N5.blocksFromElements(elems, attrs), s"$tmp/n.n5", "v/s0", attrs)
     val ex = intercept[Exception] {
       TiffVolume.exportSlices(spark, s"$tmp/n.n5", "v/s0", s"$tmp/out")
     }
@@ -91,8 +90,7 @@ class MetaAndExportSpec extends SparkSpec {
       Dtype.Float32, Compression("raw"))
     val elems = N5.boxGrid(spark, Array(0L, 0L, 0L), Array(4L, 4L, 1L))
       .select(col("x"), col("y"), col("z"), lit(3.7f).as("v"))
-    N5.write(N5.blocksFromElements(elems, attrs,
-      org.apache.spark.sql.types.FloatType), s"$tmp/f.n5", "v/s0", attrs)
+    N5.write(N5.blocksFromElements(elems, attrs), s"$tmp/f.n5", "v/s0", attrs)
     val ex = intercept[Exception] {
       TiffVolume.exportBox(spark, s"$tmp/f.n5", "v/s0", s"$tmp/f.tif",
         Array(0L, 0L, 0L), Array(4L, 4L, 1L))

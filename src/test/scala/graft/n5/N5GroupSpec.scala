@@ -28,8 +28,7 @@ class N5GroupSpec extends SparkSpec {
         expr(s"(id div $dx) % $dy").as("y"),
         expr(s"id div ${dx * dy}").as("z"),
         lit(10 * c + l).as("v"))
-      N5.write(N5.blocksFromElements(elems, attrs,
-        org.apache.spark.sql.types.ShortType), root, s"g/c$c/s$l", attrs)
+      N5.write(N5.blocksFromElements(elems, attrs), root, s"g/c$c/s$l", attrs)
     }
 
   test("readGroup surfaces channel/level and all datasets' blocks") {
@@ -57,8 +56,7 @@ class N5GroupSpec extends SparkSpec {
       val elems = spark.range(attrs.dimensions.product).select(
         expr(s"id % $dx").as("x"), expr(s"(id div $dx) % $dy").as("y"),
         expr(s"id div ${dx * dy}").as("z"), lit(l).as("v"))
-      N5.write(N5.blocksFromElements(elems, attrs,
-        org.apache.spark.sql.types.ShortType), root, s"vol/s$l", attrs)
+      N5.write(N5.blocksFromElements(elems, attrs), root, s"vol/s$l", attrs)
     }
     val g = N5.readGroup(spark, root, "vol")
     assert(g.select(col("channel")).distinct().collect()
@@ -91,8 +89,7 @@ class N5GroupSpec extends SparkSpec {
     val elems = spark.range(attrs0.dimensions.product).select(
       expr(s"id % $dx").as("x"), expr(s"(id div $dx) % $dy").as("y"),
       expr(s"id div ${dx * dy}").as("z"), lit(7).as("v"))
-    N5.write(N5.blocksFromElements(elems, attrs0,
-      org.apache.spark.sql.types.ShortType), root, "g/c01/s0", attrs0)
+    N5.write(N5.blocksFromElements(elems, attrs0), root, "g/c01/s0", attrs0)
     val ex = intercept[IllegalArgumentException] {
       N5.readGroup(spark, root, "g")
     }
@@ -107,8 +104,7 @@ class N5GroupSpec extends SparkSpec {
     val elems = spark.range(fAttrs.dimensions.product).select(
       expr(s"id % $dx").as("x"), expr(s"(id div $dx) % $dy").as("y"),
       expr(s"id div ${dx * dy}").as("z"), lit(1.5f).as("v"))
-    N5.write(N5.blocksFromElements(elems, fAttrs,
-      org.apache.spark.sql.types.FloatType), root, "g/c2/s0", fAttrs)
+    N5.write(N5.blocksFromElements(elems, fAttrs), root, "g/c2/s0", fAttrs)
     val ex = intercept[IllegalArgumentException] {
       N5.readGroup(spark, root, "g")
     }

@@ -60,8 +60,7 @@ class RegroupSpec extends SparkSpec {
       .withColumn("v", (sin(col("x") * 0.9) * 10 + col("y") * 0.5
         + col("z")).cast("float"))
     for (r <- Seq(s"$root/a.n5", s"$root/b.n5"))
-      N5.write(N5.blocksFromElements(gen, attrs,
-        org.apache.spark.sql.types.FloatType), r, "vol/s0", attrs)
+      N5.write(N5.blocksFromElements(gen, attrs), r, "vol/s0", attrs)
     // 8 % 2 == 0 -> the dispatcher must take the block-local path for
     // floats too (r4); both paths' means agree within float ulp slack
     // (summation order differs)
@@ -86,8 +85,7 @@ class RegroupSpec extends SparkSpec {
     val elems = N5.boxGrid(spark, Array(0L, 0L, 0L), Array(2L, 2L, 1L))
       .select(col("x"), col("y"), col("z"), lit(2.5d).as("v"))
     val ex = intercept[Exception] {
-      N5.write(N5.blocksFromElements(elems, attrs,
-        org.apache.spark.sql.types.ShortType), root, "v/s0", attrs)
+      N5.write(N5.blocksFromElements(elems, attrs), root, "v/s0", attrs)
     }
     val msg = ex.getMessage + String.valueOf(ex.getCause)
     assert(msg.contains("non-integral"), msg.take(300))
@@ -104,8 +102,7 @@ class RegroupSpec extends SparkSpec {
         (col("id") / (dims(0) * dims(1))).cast("long").as("z"))
       .withColumn("v", (sin(col("x") * 1.7) + col("y") * 0.25
         - col("z") * 3.5).cast("float"))
-    N5.write(N5.blocksFromElements(elems, attrs,
-      org.apache.spark.sql.types.FloatType), root, "v/s0", attrs)
+    N5.write(N5.blocksFromElements(elems, attrs), root, "v/s0", attrs)
     Regroup.rechunkBlocks(spark, root, "v/s0", root, "v2/s0", Array(3, 5, 2))
     val orig = N5.elements(N5.read(spark, root, "v/s0"))
     val back = N5.elements(N5.read(spark, root, "v2/s0"))

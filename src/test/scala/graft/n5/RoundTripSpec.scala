@@ -120,8 +120,7 @@ class RoundTripSpec extends SparkSpec {
         Array(5, 3, 3) -> "element")) {
       val root = Files.createTempDirectory("n5minmax").toString + "/t.n5"
       val attrs = DatasetAttributes(dims, bs, Dtype.UInt16, Compression("gzip"))
-      N5.write(N5.blocksFromElements(elems, attrs,
-        graft.sources.n5.N5Schema.elementType(attrs.dataType)), root, "vol/s0", attrs)
+      N5.write(N5.blocksFromElements(elems, attrs), root, "vol/s0", attrs)
       for (method <- Seq("min", "max")) {
         Multiscale.downsampleLevel(spark, root, "vol", 1, Array(2, 2, 2), method)
         val got = N5.elements(N5.read(spark, root, "vol/s1"))
@@ -155,8 +154,7 @@ class RoundTripSpec extends SparkSpec {
         Array(3, 3, 1) -> "element"); method <- Seq("min", "max")) {
       val root = Files.createTempDirectory("n5nan").toString + "/t.n5"
       val attrs = DatasetAttributes(dims, bs, Dtype.Float32, Compression("gzip"))
-      N5.write(N5.blocksFromElements(elems, attrs,
-        graft.sources.n5.N5Schema.elementType(attrs.dataType)),
+      N5.write(N5.blocksFromElements(elems, attrs),
         root, "vol/s0", attrs)
       Multiscale.downsampleLevel(spark, root, "vol", 1, Array(2, 2, 2), method)
       val got = N5.elements(N5.read(spark, root, "vol/s1"))
@@ -235,8 +233,7 @@ class RoundTripSpec extends SparkSpec {
         (c("id") / (dims(0) * dims(1))).cast("long").as("z"))
       .select(c("x"), c("y"), c("z"),
         ((c("x") / 2).cast("long") + c("y") + c("z")).mod(5).as("v"))
-    N5.write(N5.blocksFromElements(elems, attrs,
-      org.apache.spark.sql.types.ShortType), tmp, "lbl/s0", attrs)
+    N5.write(N5.blocksFromElements(elems, attrs), tmp, "lbl/s0", attrs)
 
     val dst = Multiscale.downsampleLevelMode(spark, tmp, "lbl", 1, Array(2, 2, 2))
     assert(dst.dimensions.toSeq == Seq(4L, 3L, 2L))
@@ -258,7 +255,7 @@ class RoundTripSpec extends SparkSpec {
     val fAttrs = attrs.copy(dataType = Dtype.Float32)
     N5.write(N5.blocksFromElements(
       elems.select(c("x"), c("y"), c("z"), c("v").cast("double").as("v")),
-      fAttrs, org.apache.spark.sql.types.DoubleType), tmp, "flt/s0", fAttrs)
+      fAttrs), tmp, "flt/s0", fAttrs)
     val e = intercept[IllegalArgumentException](
       Multiscale.downsampleLevelMode(spark, tmp, "flt", 1, Array(2, 2, 2)))
     assert(e.getMessage.contains("label volumes"))

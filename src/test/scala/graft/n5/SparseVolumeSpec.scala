@@ -24,8 +24,7 @@ class SparseVolumeSpec extends SparkSpec {
         ((col("x") + col("y") + col("z")) % 251 + 1).as("v")) // never 0
       .filter((col("x") < 32 && col("y") < 32)
         || (col("x") >= 32 && col("y") >= 32))
-    N5.write(N5.blocksFromElements(elems, attrs,
-      org.apache.spark.sql.types.ShortType), s"$tmp/s.n5", "vol/s0", attrs)
+    N5.write(N5.blocksFromElements(elems, attrs), s"$tmp/s.n5", "vol/s0", attrs)
     s"$tmp/s.n5"
   }
 

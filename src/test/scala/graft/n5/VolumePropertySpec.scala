@@ -50,8 +50,7 @@ class VolumePropertySpec extends SparkSpec {
       .select(col("x"), col("y"), col("z"),
         (abs(lit(seed) + col("x") * 31 + col("y") * 131 + col("z") * 1031) % 256)
           .as("v"))
-    val blocks = N5.blocksFromElements(elems, attrs,
-      org.apache.spark.sql.types.ShortType)
+    val blocks = N5.blocksFromElements(elems, attrs)
     N5.write(blocks, root, "vol/s0", attrs)
     root
   }
@@ -148,8 +147,7 @@ class VolumePropertySpec extends SparkSpec {
         ((col("id") / dims(0)) % dims(1)).cast("long").as("y"),
         (col("id") / (dims(0) * dims(1))).cast("long").as("z"),
         lit(7).as("v"))
-    N5.write(N5.blocksFromElements(elems, attrs,
-      org.apache.spark.sql.types.ShortType), root, "vol/s0", attrs)
+    N5.write(N5.blocksFromElements(elems, attrs), root, "vol/s0", attrs)
     Multiscale.downsampleLevel(spark, root, "vol", 1, Array(2, 2, 2))
     val s1 = N5.elements(N5.read(spark, root, "vol/s1"))
     assert(s1.count() == 4L * 4 * 2)
@@ -238,7 +236,7 @@ class VolumePropertySpec extends SparkSpec {
     val root = Files.createTempDirectory(s"prop_${dtype.name}").toString
     val attrs = DatasetAttributes(dims, bs, dtype, Compression("gzip"))
     N5.write(N5.blocksFromElements(elemsOf(dtype, Array(0L, 0L, 0L), dims, f),
-      attrs, N5Schema.elementType(dtype)), root, "vol/s0", attrs)
+      attrs), root, "vol/s0", attrs)
     root
   }
 

@@ -85,8 +85,7 @@ class WriteBoxSpec extends SparkSpec {
       Dtype.UInt8, Compression("raw"))
     val base = N5.boxGrid(spark, Array(0L, 0L, 0L), Array(4L, 2L, 1L))
       .select(col("x"), col("y"), col("z"), lit(9).as("v"))
-    N5.write(N5.blocksFromElements(base, attrs,
-      org.apache.spark.sql.types.ShortType), s"$tmp/d.n5", "vol/s0", attrs)
+    N5.write(N5.blocksFromElements(base, attrs), s"$tmp/d.n5", "vol/s0", attrs)
     // 8 input rows = block volume, but only 4 DISTINCT voxels (x<2 twice
     // each): coverage must be judged by distinct voxels, so the uncovered
     // half keeps its stored 9s instead of being silently zeroed
@@ -110,8 +109,7 @@ class WriteBoxSpec extends SparkSpec {
       expr("id % 32").as("x"), expr("(id div 32) % 32").as("y"),
       expr("id div 1024").as("z"),
       (col("id") % 7).cast("float").as("v"))
-    N5.write(N5.blocksFromElements(base, attrs,
-      org.apache.spark.sql.types.FloatType), s"$tmp/f.n5", "vol/s0", attrs)
+    N5.write(N5.blocksFromElements(base, attrs), s"$tmp/f.n5", "vol/s0", attrs)
 
     val start = Array(5L, 5L, 2L)
     val end = Array(20L, 30L, 6L)

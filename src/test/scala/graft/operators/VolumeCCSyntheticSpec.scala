@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.n5.{Compression, DatasetAttributes, Dtype, N5}
-import graft.sources.n5.N5Schema
 
 /** VolumeCC on a volume the spec writes itself: a 21×17×13 uint8 volume
   * in 8×6×5 blocks (3 blocks per axis, the last one edge-trimmed on every
@@ -62,8 +61,7 @@ class VolumeCCSyntheticSpec extends SparkSpec {
     val elems = voxels.map { case (x, y, z, i) =>
       (x.toLong, y.toLong, z.toLong, values(i).toLong)
     }.toSeq.toDF("x", "y", "z", "v")
-    N5.write(N5.blocksFromElements(elems, attrs,
-      N5Schema.elementType(attrs.dataType)), dir, "vol/s0", attrs)
+    N5.write(N5.blocksFromElements(elems, attrs), dir, "vol/s0", attrs)
     dir
   }
 

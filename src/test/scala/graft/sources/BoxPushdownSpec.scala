@@ -76,7 +76,7 @@ class BoxPushdownSpec extends SparkSpec {
     val attrs = DatasetAttributes(dims, bs, dtype, Compression("gzip"))
     // one task, shard by shard, so a shard's inner chunks reach one
     // writer consecutively (shards are 2×1×2 chunks)
-    N5.blocksFromElements(elems, attrs, elemT).repartition(1)
+    N5.blocksFromElements(elems, attrs).repartition(1)
       .sortWithinPartitions(col("gx").bitwiseAND(-2), col("gy"), col("gz").bitwiseAND(-2))
       .write.format("n5").option("dataset", "v")
       .option("dimensions", dims.mkString(","))
@@ -202,20 +202,44 @@ class BoxPushdownSpec extends SparkSpec {
     } finally spark.conf.set(key, prev)
   }
 
-  test("a box inside one block is answered by the scan alone, in one job") {
+  test("a box inside one block is answered on the driver, in no job") {
     val root = volume(Dtype.UInt8, extremes.head._2)
     def q(lo: Array[Long], hi: Array[Long]) = N5.readBox(spark, root, "v", lo, hi)
       .agg(count(lit(1)), sum(col("v")).cast("long"), max(col("v")).cast("long"),
         count(when(col("v") >= 128, 1)))
     val one = q(Array(2L, 3L, 1L), Array(10L, 9L, 7L))
     val p = plan(one)
-    assert(p.contains("PushedAggregates"), p)
+    assert(p.contains("N5DriverAggregate") && p.contains("PushedAggregates"), p)
     assert(!p.contains("Exchange") && !p.contains("HashAggregate"), p)
     // a box over more than one block keeps Spark's merge of the partials
     val straddling = plan(q(Array(10L, 12L, 9L), Array(21L, 19L, 18L)))
     assert(straddling.contains("PushedAggregates") && straddling.contains("Exchange") &&
-      straddling.contains("HashAggregate"), straddling)
-    assert(N5ScanMetricsSpec.execution(spark, one).jobs.size == 1)
+      straddling.contains("HashAggregate") && !straddling.contains("N5DriverAggregate"),
+      straddling)
+    val want = one.collect().toSeq
+    assert(want.length == 1)
+    for ((name, action) <- Seq[(String, DataFrame => Seq[Row])](
+        "collect" -> (_.collect().toSeq), "first" -> (df => Seq(df.first())),
+        "take(1)" -> (_.take(1).toSeq))) {
+      val exec = N5ScanMetricsSpec.execution(spark, one, df => assert(action(df) == want, name))
+      assert(exec.jobs.isEmpty, s"$name ran ${exec.jobs.size} jobs")
+    }
+  }
+
+  test("a one-block aggregate reads its block when it runs, not when it plans") {
+    val root = volume(Dtype.UInt8, extremes.head._2)
+    val q = N5.readBox(spark, root, "v", Array(2L, 3L, 1L), Array(10L, 9L, 7L))
+      .agg(count(lit(1)), sum(col("v")))
+    assert(q.queryExecution.executedPlan.toString.contains("N5DriverAggregate"))
+    Console.withOut(new java.io.ByteArrayOutputStream())(q.explain())
+    val block = java.nio.file.Paths.get(root, "v", "0", "0", "0")
+    val bytes = Files.readAllBytes(block)
+    Files.write(block, bytes.take(bytes.length / 2))
+    val ex = intercept[Exception](q.collect())
+    val chain = Iterator.iterate(ex: Throwable)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+    assert(chain.exists(m => m.contains("v/0/0/0") && m.contains(block.toString)),
+      s"expected a failure naming v/0/0/0 and its file, got: $chain")
   }
 
   test("unpushable aggregates (AVG, min(x)) stay on rows and stay right") {

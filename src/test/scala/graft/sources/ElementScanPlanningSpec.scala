@@ -7,7 +7,6 @@ import graft.n5.{Compression, DatasetAttributes, Dtype, N5}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.ShortType
 
 /** How the element scan groups blocks into partitions on the 4-core spec
   * session: a box over many small blocks spreads over every core, a box
@@ -33,7 +32,7 @@ class ElementScanPlanningSpec extends SparkSpec {
         ((col("x") * 7 + col("y") * 3 + col("z")) % 256).cast("short").as("v"))
     // one task, shard by shard, so a shard's inner chunks reach one writer
     // consecutively
-    N5.blocksFromElements(elems, attrs, ShortType).repartition(1)
+    N5.blocksFromElements(elems, attrs).repartition(1)
       .sortWithinPartitions(col("gx").bitwiseAND(-2), col("gy").bitwiseAND(-2),
         col("gz").bitwiseAND(-2))
       .write.format("n5").option("dataset", "v")

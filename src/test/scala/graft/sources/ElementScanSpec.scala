@@ -26,7 +26,7 @@ class ElementScanSpec extends SparkSpec {
         (col("id") / (dims(0) * dims(1))).cast("long").as("z"))
       .select(col("x"), col("y"), col("z"),
         ((col("x") * 3 + col("y") * 5 + col("z") * 7) % 97).cast(elemT).as("v"))
-    N5.write(N5.blocksFromElements(elems, attrs, elemT), root, ds, attrs)
+    N5.write(N5.blocksFromElements(elems, attrs), root, ds, attrs)
     (root, ds)
   }
 
@@ -102,8 +102,7 @@ class ElementScanSpec extends SparkSpec {
     val tgt = DatasetAttributes(dims, Array(6, 5, 2), Dtype.UInt16,
       Compression("gzip"))
     N5.write(
-      N5.blocksFromElements(N5.elementsScan(spark, root, ds), tgt,
-        N5Schema.elementType(Dtype.UInt16)),
+      N5.blocksFromElements(N5.elementsScan(spark, root, ds), tgt),
       out, ds, tgt)
     def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.orderBy(col("z"), col("y"), col("x"))

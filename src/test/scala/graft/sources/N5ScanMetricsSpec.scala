@@ -26,8 +26,7 @@ class N5ScanMetricsSpec extends SparkSpec {
       .filter(!(col("x") >= 32 && col("y") < 32))
       .select(col("x"), col("y"), col("z"),
         ((col("x") * 7 + col("y") * 3 + col("z")) % 256).cast("short").as("v"))
-    N5.write(N5.blocksFromElements(elems, attrs,
-      org.apache.spark.sql.types.ShortType), root, "v", attrs)
+    N5.write(N5.blocksFromElements(elems, attrs), root, "v", attrs)
     root
   }
 
@@ -76,18 +75,20 @@ class N5ScanMetricsSpec extends SparkSpec {
 }
 
 object N5ScanMetricsSpec {
-  /** Runs `df` and returns its SQL execution as the status store holds it
-    * once finished. The run is tagged with a job description of its own,
-    * so a straggling event of an earlier query, which the asynchronous
-    * listener bus may still be delivering, is never mistaken for it.
+  /** Runs `action` on `df` (by default `collect`) and returns its SQL
+    * execution as the status store holds it once finished. The run is
+    * tagged with a job description of its own, so a straggling event of
+    * an earlier query, which the asynchronous listener bus may still be
+    * delivering, is never mistaken for it.
     */
-  def execution(spark: SparkSession, df: DataFrame): SQLExecutionUIData = {
+  def execution(spark: SparkSession, df: DataFrame,
+      action: DataFrame => Any = _.collect()): SQLExecutionUIData = {
     val sc = spark.sparkContext
     val store = spark.sharedState.statusStore
     val tag = s"n5-scan-spec-${tags.incrementAndGet()}"
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(tag)
-    try df.collect()
+    try action(df)
     finally sc.setJobDescription(prev)
     val deadline = System.nanoTime() + 30L * 1000000000L
     def finished = store.executionsList()

@@ -37,8 +37,7 @@ class TiffPlaneSpec extends SparkSpec {
       .filter(stored)
       .select(col("x"), col("y"), col("z"),
         v.cast(N5Schema.elementType(attrs.dataType)).as("v"))
-    N5.write(N5.blocksFromElements(elems, attrs,
-      N5Schema.elementType(attrs.dataType)), root, ds, attrs)
+    N5.write(N5.blocksFromElements(elems, attrs), root, ds, attrs)
   }
 
   private def voxels(root: String, ds: String): Voxels =

@@ -37,8 +37,7 @@ class MetaFormatSpec extends SparkSpec {
         ((col("x") * 3 + col("y") * 5 + col("z") * 7) % 97 + 1).cast("int").as("v"))
     formats.foreach { fmt =>
       val a = attrsFor(fmt)
-      N5.write(N5.blocksFromElements(elems, a,
-        org.apache.spark.sql.types.IntegerType), r, fmt, a)
+      N5.write(N5.blocksFromElements(elems, a), r, fmt, a)
     }
     r
   }

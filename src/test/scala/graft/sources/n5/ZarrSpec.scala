@@ -270,8 +270,7 @@ class ZarrSpec extends SparkSpec {
       (col("id") % 5).as("x"), ((col("id") / 5) % 3).as("y"),
       (col("id") / 15).as("z"),
       (col("id").cast("double") * 0.5).cast("float").as("v"))
-    N5.writeZarr(N5.blocksFromElements(elems, attrs,
-      org.apache.spark.sql.types.FloatType), dir, "f", attrs, separator = "/")
+    N5.writeZarr(N5.blocksFromElements(elems, attrs), dir, "f", attrs, separator = "/")
     val back = N5Meta.datasetAttributes(dir, "f")
     assert(back.isZarr && back.zarrSeparator == "/" &&
       back.dataType == Dtype.Float32)
@@ -291,8 +290,7 @@ class ZarrSpec extends SparkSpec {
       N5.writeZarr(N5.blocksFromElements(
         spark.range(8).select((col("id") % 2).as("x"),
           ((col("id") / 2) % 2).as("y"), (col("id") / 4).as("z"),
-          lit(1L).as("v")), badAttrs,
-        org.apache.spark.sql.types.ShortType), dir, "bad", badAttrs)
+          lit(1L).as("v")), badAttrs), dir, "bad", badAttrs)
     }
     assert(String.valueOf(e.getMessage).contains("unsupported") ||
       String.valueOf(e.getCause).contains("unsupported"))
@@ -338,7 +336,7 @@ class ZarrSpec extends SparkSpec {
       .select(col("x"), col("y"), col("z"),
         ((col("x") * 1000 + col("y") * 77 + col("z") * 5001) % 65536).cast("int").as("v"))
     val attrs = DatasetAttributes(dims, Array(4, 4, 3), Dtype.UInt16, Compression("zlib", 6))
-    N5.blocksFromElements(elems, attrs, org.apache.spark.sql.types.IntegerType)
+    N5.blocksFromElements(elems, attrs)
       .write.format("n5").option("dataset", "be").option("format", "zarr")
       .option("zarrLittleEndian", "false")
       .option("dimensions", dims.mkString(",")).option("blockSize", "4,4,3")

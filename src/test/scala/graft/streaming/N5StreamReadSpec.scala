@@ -22,8 +22,7 @@ class N5StreamReadSpec extends SparkSpec {
       Array(64L, 64L, (gz + 1) * 32L))
       .select(col("x"), col("y"), col("z"),
         ((col("x") + col("y") + col("z")) % 256).as("v"))
-    N5.write(N5.blocksFromElements(elems, attrs,
-      org.apache.spark.sql.types.ShortType), root, "vol/s0", attrs)
+    N5.write(N5.blocksFromElements(elems, attrs), root, "vol/s0", attrs)
   }
 
   /** Drain the stream into a parquet sink (supports checkpoint recovery,
@@ -169,8 +168,7 @@ class N5StreamReadSpec extends SparkSpec {
       val elems = N5.boxGrid(spark, Array(0L, 0L, 0L), za.dimensions)
         .select(col("x"), col("y"), col("z"),
           ((col("x") + col("y") * 2 + col("z") * 3) % 256).as("v"))
-      N5.write(N5.blocksFromElements(elems, za,
-        org.apache.spark.sql.types.ShortType), root, "vol/s0", za)
+      N5.write(N5.blocksFromElements(elems, za), root, "vol/s0", za)
       runOnce(root, s"$tmp/ckpt", s"$tmp/out")
       val streamed = spark.read.parquet(s"$tmp/out").collect()
         .map(r => (r.getAs[Int]("gx"), r.getAs[Int]("gy"), r.getAs[Int]("gz")) ->
