@@ -264,13 +264,18 @@ object AnnIndex {
       s"ANN catalog marker $marker moved from $expect to $now during " +
         "maintenance — concurrent build from another driver process; " +
         "this session's tables still serve their pre-maintenance generation")
-    val tmp = new org.apache.hadoop.fs.Path(marker.getParent,
-      s".${marker.getName}.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(s"g$gen\n$fp".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
-      .rename(tmp, marker, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    val bytes = s"g$gen\n$fp".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val local = graft.sources.HadoopFs.localPath(fs, marker)
+    if (local != null) graft.sources.HadoopFs.writeLocal(local, bytes)
+    else {
+      val tmp = new org.apache.hadoop.fs.Path(marker.getParent,
+        s".${marker.getName}.tmp-${java.util.UUID.randomUUID()}")
+      val out = fs.create(tmp, false)
+      try out.write(bytes)
+      finally out.close()
+      org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
+        .rename(tmp, marker, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    }
   }
 
   /** Idempotent build-or-recover; returns the catalog database name.

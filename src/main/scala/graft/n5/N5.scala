@@ -24,6 +24,8 @@ object N5 {
 
   /** The block table with `data` as the blocks' big-endian element bytes
     * (N5Schema.blockBytesSchema): the read every internal pipeline uses.
+    * Unlike [[read]], it spreads a volume of a few dozen blocks over the
+    * session's cores, since each block it reads is decoded and re-encoded.
     */
   private[graft] def readBytes(spark: SparkSession, root: String, dataset: String): DataFrame =
     spark.read.format("n5").option("dataset", dataset)

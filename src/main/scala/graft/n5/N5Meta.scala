@@ -212,11 +212,12 @@ object N5Meta {
     try mapper.readTree(in) finally in.close()
   }
 
-  private def writeJson(p: Path, node: JsonNode): Unit = {
-    val out = fs(p).create(p, true)
-    try out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
-    finally out.close()
-  }
+  /** Every metadata file is published whole: on `file://` a concurrent
+    * reader sees the old or the new JSON, never a truncated one.
+    */
+  private def writeJson(p: Path, node: JsonNode): Unit =
+    graft.sources.HadoopFs.writeFile(p,
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
 
   def datasetAttributes(root: String, dataset: String): DatasetAttributes = {
     val n5Path = new Path(root, s"$dataset/attributes.json")
@@ -609,7 +610,6 @@ object N5Meta {
     }
     a.extra.foreach { case (k, v) => o.set[ObjectNode](k, mapper.readTree(v)) }
     val p = new Path(root, s"$dataset/attributes.json")
-    fs(p).mkdirs(p.getParent)
     writeJson(p, o)
   }
 
@@ -667,7 +667,6 @@ object N5Meta {
     o.put("fill_value", 0)
     o.put("dimension_separator", a.zarrSeparator)
     val p = new Path(root, s"$dataset/.zarray")
-    fs(p).mkdirs(p.getParent)
     writeJson(p, o)
     // user attributes (downsamplingFactors, pixelResolution, …) belong in
     // the sibling `.zattrs`, not in `.zarray` — zarr v2 keeps array
@@ -763,7 +762,6 @@ object N5Meta {
       attrsNode.set[ObjectNode](k, mapper.readTree(v))
     }
     val p = new Path(root, s"$dataset/zarr.json")
-    fs(p).mkdirs(p.getParent)
     writeJson(p, o)
   }
 

@@ -1,6 +1,7 @@
 package graft.n5
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Block-fragment regroup: the scale-safe rechunk (SURVEY §7 "hard parts").
@@ -11,7 +12,9 @@ import org.apache.spark.sql.functions._
   * fragments that intersect output blocks and shuffles one row per
   * FRAGMENT: the same bytes move, but row count drops by ~blockSize³ and
   * assembly is primitive array pastes instead of a groupBy-sort over
-  * voxels. Equivalence with the element path is property-tested.
+  * voxels. The fragments move in one shuffle that spreads the output
+  * blocks over every core, so every core encodes (see [[assemble]]).
+  * Equivalence with the element path is property-tested.
   *
   * Fragments and assembled blocks carry the dtype's big-endian element
   * bytes — what the codec decodes and encodes — so one byte pipeline
@@ -43,27 +46,52 @@ object Regroup {
     out
   }
 
-  /** Shuffle fragments to their output blocks and paste (shared by
-    * rechunk, the block-local pyramid and the slice-ingest path).
+  /** Shuffle fragments to their output blocks and paste: the one paste
+    * behind rechunk, the block-local pyramid, the slice-ingest path and
+    * the TIFF page export (a page is a w×h×1 block).
+    *
+    * Each fragment is keyed by its block's linear grid index and shuffled
+    * into n = min(blocks, max(P, ⌈output bytes ÷ the scan's partition
+    * size target⌉)) partitions, P the session's leaf parallelism (its
+    * cores in local mode). Small keys hash to themselves, so blocks land
+    * round-robin and every core encodes, while a 100 TB volume still gets
+    * size-targeted tasks rather than one per block. The exchange is an
+    * RDD shuffle: AQE coalesces a Dataset exchange of a few MB onto one
+    * to three tasks, and it also runs that exchange's map stage as a job
+    * of its own. Each partition arrives sorted by key, so a task pastes
+    * one sorted run, one block, at a time and never holds its partition.
     */
   def assemble(
       frags: org.apache.spark.sql.Dataset[Frag],
       dst: DatasetAttributes): org.apache.spark.sql.Dataset[OutBlock] = {
-    import frags.sparkSession.implicits._
+    val spark = frags.sparkSession
+    import spark.implicits._
     val es = dst.dataType.bytesPerElement
-    frags
-      .groupByKey(f => (f.tgx, f.tgy, f.tgz))
-      .mapGroups { (key: (Int, Int, Int), it: Iterator[Frag]) =>
-        val (tgx, tgy, tgz) = key
-        val tshape = dst.blockShape(Array(tgx, tgy, tgz))
-        val out = new Array[Byte](tshape.product * es)
-        it.foreach { f =>
-          val ext = Array(f.sx, f.sy, f.sz)
-          BlockCodec.copyBox(f.data, ext, new Array[Int](3), out, tshape,
-            Array(f.ox, f.oy, f.oz), ext, es)
+    val Array(ngx, ngy, ngz) = dst.gridDims.map(_.toLong)
+    val target = graft.sources.n5.N5Scan.DefaultTargetPartitionBytes
+    val bySize = (dst.dimensions.product * es + target - 1) / target
+    val n = math.max(1L, math.min(ngx * ngy * ngz,
+      math.max(GraftSqlBridge.leafNodeParallelism(spark).toLong, bySize))).toInt
+    val blocks = frags.rdd
+      .map(f => (f.tgx + ngx * (f.tgy + ngy * f.tgz), f))
+      .repartitionAndSortWithinPartitions(new HashPartitioner(n))
+      .mapPartitions { it =>
+        val runs = it.buffered
+        Iterator.continually(runs).takeWhile(_.hasNext).map { _ =>
+          val (key, first) = runs.head
+          val grid = Array(first.tgx, first.tgy, first.tgz)
+          val tshape = dst.blockShape(grid)
+          val out = new Array[Byte](tshape.product * es)
+          while (runs.hasNext && runs.head._1 == key) {
+            val f = runs.next()._2
+            val ext = Array(f.sx, f.sy, f.sz)
+            BlockCodec.copyBox(f.data, ext, new Array[Int](3), out, tshape,
+              Array(f.ox, f.oy, f.oz), ext, es)
+          }
+          OutBlock(grid(0), grid(1), grid(2), tshape, out)
         }
-        OutBlock(tgx, tgy, tgz, tshape, out)
       }
+    spark.createDataset(blocks)
   }
 
   /** The one plane-to-block writer: every TIFF ingest (slice series,

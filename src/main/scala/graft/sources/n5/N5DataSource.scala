@@ -32,9 +32,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Scale design:
   *  - block files group into size-targeted InputPartitions (element
-  *    scans also spread over the session's cores) → a 1000-executor
-  *    cluster reads a 100 TB volume with full parallelism and no driver
-  *    bottleneck beyond the block listing (one RPC per grid directory);
+  *    scans and the internal element-byte block view also spread over
+  *    the session's cores) → a 1000-executor cluster reads a 100 TB
+  *    volume with full parallelism and no driver bottleneck beyond the
+  *    block listing (one RPC per grid directory);
   *  - grid predicates (gx/gy/gz =, <, >, IN, ranges) are pushed down and
   *    prune block files BEFORE any I/O — a box read touches only
   *    intersecting chunks, exactly like the reference's zarr slicing
@@ -263,6 +264,10 @@ class N5ScanBuilder(
     elementsView && !hasAvg && agg.groupByExpressions.isEmpty &&
       agg.aggregateExpressions.forall(N5Aggregate.of(_, attrs.dataType).isDefined)
 
+  /** The scan, with the session's leaf parallelism for the element view
+    * and the element-byte block view, so they spread over its cores; the
+    * typed block view gets parallelism 1 and keeps the size target alone.
+    */
   override def build(): Scan =
     new N5Scan(root, dataset, attrs, pushed,
       if (aggregates.isEmpty) required else N5Aggregate.schema(aggregates, attrs.dataType),
@@ -282,7 +287,16 @@ class N5ScanBuilder(
       fillMissing = fillMissing,
       aggregates = aggregates,
       parallelism =
-        if (elementsView) GraftSqlBridge.leafNodeParallelism(SparkSession.active) else 1)
+        if (elementsView || bytesView) GraftSqlBridge.leafNodeParallelism(SparkSession.active)
+        else 1)
+
+  /** The element-byte block view internal pipelines read ([[N5.readBytes]]:
+    * rechunk, the pyramid, TIFF export). Like the element view it spreads
+    * over the cores, since every block it reads is decoded, cut and
+    * re-encoded; the public typed block view keeps the size target.
+    */
+  private def bytesView: Boolean =
+    tableSchema.find(_.name == "data").exists(_.dataType == BinaryType)
 }
 
 object N5Scan {
@@ -635,43 +649,9 @@ object N5GridWalk {
   * view.
   */
 object N5BlockIO {
-  /** java.nio fast path for `file://` (r20): the Hadoop local-FS stack
-    * (ProxyLocalFileSystem → ChecksumFileSystem) costs ~8 ms per create
-    * (checksum sibling + permission round-trips) and ~27 ms per
-    * FileContext rename (measured on this machine), so a 58-chunk zarr
-    * write spent 2.2 s of its 2.7 s in filesystem overhead. For the
-    * local scheme the same create-temp → write → set-mtime → atomic
-    * rename sequence runs through java.nio (~0.14 ms for write+move)
-    * with identical semantics: Files.move(ATOMIC_MOVE) is the POSIX
-    * rename(2) the Hadoop path used, overwrite included. Non-file
-    * schemes (HDFS, object stores) keep the Hadoop path untouched.
-    */
-  def localPath(fs: FileSystem, p: HPath): java.nio.file.Path =
-    if ("file" == fs.getScheme) java.nio.file.Paths.get(p.toUri.getPath)
-    else null
-
-  /** Publish a fully written `file://` temp over `dest`: stamp the mtime
-    * at PUBLISH time (not temp-close time) so the streaming source's
-    * watermark can never advance past a file that is not yet visible,
-    * then atomically rename. A `.<name>.crc` sibling left by an earlier
-    * Hadoop write describes the bytes being replaced, and shard reads go
-    * through the checksummed `fs.open`, so it is deleted first: a reader
-    * then sees old or new bytes without a checksum, never new bytes
-    * under a stale one.
-    */
-  def publishLocal(tmp: java.nio.file.Path, dest: java.nio.file.Path): Unit = {
-    java.nio.file.Files.setLastModifiedTime(tmp,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-    java.nio.file.Files.deleteIfExists(
-      dest.resolveSibling(s".${dest.getFileName}.crc"))
-    java.nio.file.Files.move(tmp, dest,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** Whole-file read: nio for file://, Hadoop stream otherwise. */
   private def readAllBytes(fs: FileSystem, p: HPath): Array[Byte] = {
-    val lp = localPath(fs, p)
+    val lp = HadoopFs.localPath(fs, p)
     if (lp != null) java.nio.file.Files.readAllBytes(lp)
     else {
       val in = fs.open(p)
@@ -940,11 +920,13 @@ class N5Scan(
   /** Blocks grouped by [[N5Scan.groupIntoPartitions]]: at most
     * `targetPartitionBytes` of decoded payload (default 128 MiB) and
     * `maxBlocksPerPartition` blocks each (`1` restores per-block tasks).
-    * An element scan also takes at most ceil(blocks / `parallelism`)
-    * blocks per partition, so a box over a few dozen small blocks spreads
-    * over the session's cores instead of decoding on one; the block view
-    * and the streaming source keep the size target alone. Absent blocks
-    * are filled by partitions of their own. An empty box lists no block,
+    * An element scan and the element-byte block view of
+    * [[graft.n5.N5.readBytes]] also take at most ceil(blocks /
+    * `parallelism`) blocks per partition, so a box or volume of a few
+    * dozen small blocks spreads over the session's cores instead of
+    * decoding on one; the public typed block view and the streaming
+    * source keep the size target alone. Absent blocks are filled by
+    * partitions of their own. An empty box lists no block,
     * and pushed aggregates always get a partition, so it still yields its
     * row; a box over at most one block therefore plans exactly one
     * partition, which a complete aggregate pushdown relies on.
@@ -1543,23 +1525,18 @@ class N5BlockWriter(
       if (attrs.isZarrFamily)
         new HPath(root, s"$dataset/${attrs.chunkKey(Array(gx, gy, gz))}")
       else new HPath(root, s"$dataset/$gx/$gy/$gz")
+    val lp = HadoopFs.localPath(fs, path)
+    if (lp != null) {
+      // file:// fast path (see HadoopFs.localPath): same temp-write →
+      // publish-mtime → atomic-rename sequence through java.nio
+      HadoopFs.writeLocal(lp, bytes)
+      return
+    }
     // unique temp per attempt: concurrent speculative attempts must not
     // share a temp file (a truncate under a live fd would corrupt the
     // published inode on POSIX)
     val tmp = new HPath(path.getParent,
       s".${path.getName}.tmp-${java.util.UUID.randomUUID()}")
-    val lp = N5BlockIO.localPath(fs, path)
-    if (lp != null) {
-      // file:// fast path (see N5BlockIO.localPath): same temp-write →
-      // publish-mtime → atomic-rename sequence through java.nio
-      java.nio.file.Files.createDirectories(lp.getParent)
-      val ltmp = lp.getParent.resolve(tmp.getName)
-      pending = tmp
-      java.nio.file.Files.write(ltmp, bytes)
-      N5BlockIO.publishLocal(ltmp, lp)
-      pending = null
-      return
-    }
     fs.mkdirs(path.getParent)
     pending = tmp
     val out = fs.create(tmp, true)
@@ -1622,7 +1599,7 @@ class N5BlockWriter(
       val path = new HPath(root, s"$dataset/$key")
       shardTmp = new HPath(path.getParent,
         s".${path.getName}.tmp-${java.util.UUID.randomUUID()}")
-      val lp = N5BlockIO.localPath(fs, path)
+      val lp = HadoopFs.localPath(fs, path)
       pending = shardTmp
       shardOut =
         if (lp != null) {
@@ -1661,9 +1638,9 @@ class N5BlockWriter(
     shardOut.close()
     shardOut = null
     val dest = new HPath(root, s"$dataset/$shardKey")
-    val lp = N5BlockIO.localPath(fs, dest)
+    val lp = HadoopFs.localPath(fs, dest)
     if (lp != null)
-      N5BlockIO.publishLocal(lp.getParent.resolve(shardTmp.getName), lp)
+      HadoopFs.publishLocal(lp.getParent.resolve(shardTmp.getName), lp)
     else {
       fs.setTimes(shardTmp, System.currentTimeMillis(), -1)
       fc.rename(shardTmp, dest,
@@ -1684,7 +1661,7 @@ class N5BlockWriter(
   override def abort(): Unit = {
     if (shardOut != null) { shardOut.close(); shardOut = null }
     if (pending != null) {
-      val lp = N5BlockIO.localPath(fs, pending)
+      val lp = HadoopFs.localPath(fs, pending)
       if (lp != null) java.nio.file.Files.deleteIfExists(lp)
       else fs.delete(pending, false)
       pending = null

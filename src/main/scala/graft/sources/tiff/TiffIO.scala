@@ -3,6 +3,7 @@ package graft.sources.tiff
 import java.awt.image.{BufferedImage, DataBufferByte, DataBufferUShort}
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
 
 /** Grayscale TIFF encode/decode via the JDK's built-in ImageIO TIFF plugin
   * (JDK 9+; no external deps). 8-bit and 16-bit single-channel images —
@@ -60,10 +61,16 @@ object TiffIO {
   def encode(width: Int, height: Int, pixels: Array[Int], bits: Int): Array[Byte] =
     encodeImage(buildImage(width, height, pixels, bits))
 
-  /** Encode an image as a TIFF file's bytes. */
+  /** Encode an image as a TIFF file's bytes. ImageIO gets an in-memory
+    * image stream: handed a plain stream, it would wrap it in a file
+    * cache backed by a temp file under `java.io.tmpdir` (the JDK default
+    * `ImageIO.getUseCache`), one per page.
+    */
   def encodeImage(img: BufferedImage): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
-    require(ImageIO.write(img, "tiff", bos), "no TIFF writer available")
+    val ios = new MemoryCacheImageOutputStream(bos)
+    try require(ImageIO.write(img, "tiff", ios), "no TIFF writer available")
+    finally ios.close()
     bos.toByteArray
   }
 
@@ -121,7 +128,8 @@ object TiffIO {
     * like any other series.
     */
   private def readImage(bytes: Array[Byte]): BufferedImage = {
-    val img = ImageIO.read(new ByteArrayInputStream(bytes))
+    // an in-memory image stream, for the reason given at encodeImage
+    val img = ImageIO.read(new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes)))
     require(img != null, "not a decodable image")
     img
   }

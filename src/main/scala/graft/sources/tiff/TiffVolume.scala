@@ -1,6 +1,6 @@
 package graft.sources.tiff
 
-import graft.n5.{BlockCodec, Compression, DatasetAttributes, DecodedBlock, Dtype, N5, N5Meta, Regroup}
+import graft.n5.{Compression, DatasetAttributes, DecodedBlock, Dtype, N5, N5Meta, Regroup}
 import graft.sources.HadoopFs
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -12,9 +12,11 @@ import org.apache.spark.sql.functions._
   *
   * Export: [[pages]], the block-to-page assembler — element-byte block
   * read pruned to the box's grid range → per-z plane fragments clipped to
-  * the box and safe-cast to TIFF samples → one shuffle pasting one page
-  * per z. `exportSlices` writes each page in its task (data never returns
-  * to the driver — same worker-writes discipline as Dask's
+  * the box and safe-cast to TIFF samples → [[graft.n5.Regroup.assemble]],
+  * the paste every block writer shares, since a page is a w×h×1 block of
+  * samples: pages land round-robin on every core, and each task pastes
+  * one page at a time. `exportSlices` writes each page in its task (data
+  * never returns to the driver — same worker-writes discipline as Dask's
   * `store(lock=False)`); `exportBox` collects the box's pages into one
   * multi-page file.
   *
@@ -25,17 +27,12 @@ import org.apache.spark.sql.functions._
   */
 object TiffVolume {
 
-  /** Write one encoded slice file (executor-side). */
+  /** Write one encoded slice file (executor-side), published whole. */
   private def writePage(
       outDir: String, prefix: String, z: Int,
-      w: Int, h: Int, samples: Array[Byte], bits: Int): Unit = {
-    val bytes = TiffIO.encodeImage(TiffIO.sampleImage(w, h, samples, bits))
-    val p = new HPath(outDir, f"$prefix$z%05d.tif")
-    val fs = HadoopFs.fs(p)
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write(bytes) finally out.close()
-  }
+      w: Int, h: Int, samples: Array[Byte], bits: Int): Unit =
+    HadoopFs.writeFile(new HPath(outDir, f"$prefix$z%05d.tif"),
+      TiffIO.encodeImage(TiffIO.sampleImage(w, h, samples, bits)))
 
   /** The block-to-page assembler shared by both exports: one (z, page)
     * row per z of the box [start, end) that holds any stored voxel, the
@@ -46,8 +43,9 @@ object TiffVolume {
     *
     * Scale formulation: one PLANE FRAGMENT row per (block, local z) —
     * primitive sample arrays at the TIFF sample width, not per-voxel
-    * struct rows — shuffled to a per-z paste. Peak memory per task is one
-    * page, the floor any whole-page TIFF encoder needs. The safe cast at
+    * struct rows — pasted by [[graft.n5.Regroup.assemble]] into the
+    * blocks of a w×h×1 grid over the box, one block per z. Peak memory
+    * per task is one page, the floor any whole-page TIFF encoder needs. The safe cast at
     * the cut fails loudly on values outside [0, 2^bits) (the unsigned TIFF
     * sample would silently wrap them) and on non-integral float voxels
     * (numpy casting='safe' refuses float->int; a plain cast would truncate
@@ -69,7 +67,7 @@ object TiffVolume {
     val blocks = N5.readBytes(spark, root, dataset).filter(inGrid)
       .select(col("x0"), col("y0"), col("z0"), col("shape"), col("data"))
       .as[(Long, Long, Long, Array[Int], Array[Byte])]
-    blocks.flatMap { case (x0, y0, z0, shape, data) =>
+    val frags = blocks.flatMap { case (x0, y0, z0, shape, data) =>
       val Array(sx, sy, sz) = shape
       val dec = DecodedBlock(shape, dtype, data)
       val (longs, doubles) = (dec.longs, dec.doubles)
@@ -98,16 +96,13 @@ object TiffVolume {
           }
           y += 1
         }
-        (z, (ix0 - start(0)).toInt, (iy0 - start(1)).toInt, fw, fh, plane)
+        Regroup.Frag(0, 0, (z - start(2)).toInt,
+          (ix0 - start(0)).toInt, (iy0 - start(1)).toInt, 0, fw, fh, 1, plane)
       }
-    }.groupByKey(_._1).mapGroups { (z, it) =>
-      val page = new Array[Byte](w * h * sb)
-      it.foreach { case (_, fx0, fy0, fw, fh, plane) =>
-        BlockCodec.copyBox(plane, Array(fw, fh), Array(0, 0), page, Array(w, h),
-          Array(fx0, fy0), Array(fw, fh), sb)
-      }
-      (z, page)
     }
+    val pageGrid = DatasetAttributes(Array(w.toLong, h.toLong, end(2) - start(2)),
+      Array(w, h, 1), if (sb == 1) Dtype.UInt8 else Dtype.UInt16, Compression("raw"))
+    Regroup.assemble(frags, pageGrid).map(b => (start(2) + b.gz, b.data))
   }
 
   /** Export every z-slice of a dataset as `prefix%05d.tif` under outDir.
@@ -173,10 +168,7 @@ object TiffVolume {
     val blank = new Array[Byte](w * h * bits / 8)
     val imgs = (start(2) until end(2)).map(z =>
       TiffIO.sampleImage(w, h, stored.getOrElse(z, blank), bits))
-    val p = new HPath(outFile)
-    val fs = HadoopFs.fs(p)
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
+    val out = new java.io.ByteArrayOutputStream()
     val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(out)
     val writer = javax.imageio.ImageIO.getImageWritersByFormatName("tiff").next()
     writer.setOutput(ios)
@@ -185,7 +177,7 @@ object TiffVolume {
       writer.writeToSequence(new javax.imageio.IIOImage(i, null, null), null))
     writer.endWriteSequence()
     ios.close()
-    out.close()
+    HadoopFs.writeFile(new HPath(outFile), out.toByteArray)
   }
 
   /** The ranked (z, content, bad) slice relation shared by the ingest

@@ -37,6 +37,16 @@ import scala.jdk.CollectionConverters._
   *    the element reader factory builds it for tasks and
   *    `N5Scan.aggregateRow` for the driver-side one-block answer. A third
   *    construction site is the start of a second aggregate path.
+  *  - Block and page pastes take `Regroup.assemble`'s balanced RDD
+  *    shuffle: a `groupByKey` in `Regroup` or `TiffVolume` is a Dataset
+  *    exchange that AQE coalesces onto one to three encoding tasks.
+  *  - Whole files are published through `HadoopFs.localPath` on
+  *    `file://`: a Hadoop `create` there costs milliseconds per file and
+  *    writes a `.crc` sibling. `.create(` is left only in the four
+  *    non-`file://` fallbacks: blocks, shards, `HadoopFs.writeFile` and
+  *    the ANN catalog marker.
+  *  - ImageIO reads and writes TIFFs through in-memory image streams:
+  *    handed a plain stream, it caches through a temp file per image.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -130,5 +140,46 @@ class SourceLintSpec extends AnyFunSuite {
     assert(roots <= 2, s"$roots localRoots( call sites; at most 2 (block pass, relabel)")
     val runs = count("ConnectedComponents.run(")
     assert(runs == 1, s"$runs ConnectedComponents.run( calls; exactly 1")
+  }
+
+  private def sitesOf(needle: String): Seq[(Path, Int, String)] = for {
+    f <- sources
+    (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+    if line.contains(needle)
+  } yield (f, i + 1, line.trim)
+
+  test("block and page pastes use no groupByKey exchange") {
+    for (rel <- Seq("graft/n5/Regroup.scala", "graft/sources/tiff/TiffVolume.scala")) {
+      val src = new String(Files.readAllBytes(mainRoot.resolve(rel)))
+      assert(!src.contains("groupByKey("), s"$rel calls groupByKey(")
+    }
+  }
+
+  test("Hadoop creates are left only in the non-file:// fallbacks") {
+    val want = Map("graft/sources/n5/N5DataSource.scala" -> 2,
+      "graft/sources/HadoopFs.scala" -> 1, "graft/functions/AnnIndex.scala" -> 1)
+    val sites = sitesOf(".create(")
+    val got = sites.groupBy(s => mainRoot.relativize(s._1).toString).map { case (f, ss) => f -> ss.size }
+    assert(got == want, sites.map { case (f, i, l) => s"$f:$i: $l" }.mkString("\n"))
+    for (rel <- want.keys)
+      assert(new String(Files.readAllBytes(mainRoot.resolve(rel))).contains("localPath("),
+        s"$rel creates through Hadoop without a file:// path")
+  }
+
+  test("ImageIO reads and writes only in-memory image streams") {
+    // the stream argument: read's first, write's third
+    val call = """ImageIO\.(?:read\(|write\([^,]+,[^,]+,)\s*(new\s+[\w.]+|\w+)""".r
+    val sites = sitesOf("ImageIO.read(") ++ sitesOf("ImageIO.write(")
+    assert(sites.nonEmpty)
+    for ((f, i, line) <- sites) {
+      val src = new String(Files.readAllBytes(f))
+      val ok = call.findFirstMatchIn(line).exists { m =>
+        val arg = m.group(1)
+        if (arg.startsWith("new")) arg.matches("""new\s+[\w.]*MemoryCacheImage(Input|Output)Stream""")
+        else raw"""val\s+$arg\s*=\s*new\s+[\w.]*MemoryCacheImage(Input|Output)Stream\(""".r
+          .findFirstIn(src).isDefined
+      }
+      assert(ok, s"$f:$i: ImageIO on a plain stream: $line")
+    }
   }
 }

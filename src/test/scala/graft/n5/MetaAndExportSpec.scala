@@ -2,7 +2,9 @@ package graft.n5
 
 import java.nio.file.Files
 import graft.SparkSpec
-import graft.sources.tiff.{OmeTiffVolume, TiffVolume}
+import graft.sources.tiff.{OmeTiffVolume, TiffIO, TiffVolume}
+
+import scala.jdk.CollectionConverters._
 
 /** R6 (single-box multi-page TIFF export with safe cast) and R8
   * (pixelResolution precedence) tests.
@@ -97,5 +99,62 @@ class MetaAndExportSpec extends SparkSpec {
     }
     val msg = ex.getMessage + String.valueOf(ex.getCause)
     assert(msg.contains("non-integral"), msg.take(300))
+  }
+
+  /** Writes `bytes` at `p` through the Hadoop local filesystem, which
+    * also writes a `.crc` sibling, as an older graft did for every page
+    * and metadata file.
+    */
+  private def hadoopWrite(p: java.nio.file.Path, bytes: Array[Byte]): Unit = {
+    val hp = new org.apache.hadoop.fs.Path(p.toUri.toString)
+    val out = graft.sources.HadoopFs.fs(hp).create(hp, true)
+    try out.write(bytes) finally out.close()
+    assert(Files.exists(p.resolveSibling(s".${p.getFileName}.crc")))
+  }
+
+  private def listed(dir: java.nio.file.Path): Seq[String] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.map(_.getFileName.toString).toList.sorted
+    finally s.close()
+  }
+
+  test("exportSlices over an older Hadoop-written series replaces its pages whole") {
+    val tmp = Files.createTempDirectory("reexport")
+    val attrs = DatasetAttributes(Array(24L, 20L, 6L), Array(16, 16, 4),
+      Dtype.UInt8, Compression("gzip"))
+    val elems = N5.boxGrid(spark, Array(0L, 0L, 0L), attrs.dimensions)
+      .select(col("x"), col("y"), col("z"),
+        ((col("x") * 5 + col("y") * 3 + col("z")) % 256).cast("short").as("v"))
+    N5.write(N5.blocksFromElements(elems, attrs), s"$tmp/v.n5", "s0", attrs)
+    val out = tmp.resolve("tif")
+    Files.createDirectories(out)
+    // the older series: other pixels, each page with its checksum sibling
+    for (z <- 0 until 6)
+      hadoopWrite(out.resolve(f"slice_$z%05d.tif"),
+        TiffIO.encode(24, 20, Array.fill(24 * 20)(200), 8))
+    assert(TiffVolume.exportSlices(spark, s"$tmp/v.n5", "s0", out.toString) == 6)
+    assert(listed(out) == (0 until 6).map(z => f"slice_$z%05d.tif"))
+    for (z <- 0 until 6) {
+      val p = new org.apache.hadoop.fs.Path(out.resolve(f"slice_$z%05d.tif").toUri.toString)
+      val in = graft.sources.HadoopFs.fs(p).open(p)
+      val bytes = try in.readAllBytes() finally in.close()
+      val px = TiffIO.decode(bytes).pixels
+      assert(px.toSeq == Seq.tabulate(24 * 20)(i => (i % 24 * 5 + i / 24 * 3 + z) % 256),
+        s"page $z")
+    }
+  }
+
+  test("rewritten attributes replace a Hadoop-written copy and its checksum") {
+    val root = Files.createTempDirectory("rewrite-attrs")
+    val old = DatasetAttributes(Array(8L, 8L, 8L), Array(4, 4, 4), Dtype.UInt8,
+      Compression("raw"))
+    N5Meta.writeDatasetAttributes(root.toString, "v", old)
+    val json = root.resolve("v/attributes.json")
+    hadoopWrite(json, Files.readAllBytes(json))
+    val now = old.copy(dimensions = Array(16L, 12L, 8L), compression = Compression("gzip"))
+    N5Meta.writeDatasetAttributes(root.toString, "v", now)
+    val back = N5Meta.datasetAttributes(root.toString, "v")
+    assert(back.dimensions.toSeq == Seq(16L, 12L, 8L) && back.compression.codec == "gzip")
+    assert(listed(root.resolve("v")) == Seq("attributes.json"))
   }
 }

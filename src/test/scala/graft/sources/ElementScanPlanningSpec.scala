@@ -11,8 +11,10 @@ import org.apache.spark.sql.functions._
 /** How the element scan groups blocks into partitions on the 4-core spec
   * session: a box over many small blocks spreads over every core, a box
   * inside one block plans one partition, `maxBlocksPerPartition` still
-  * caps the group, the block view keeps its size target and a sharded
-  * zarr v3 scan cuts only between shards. Pushed results do not depend on
+  * caps the group, the public typed block view of `N5.read` keeps its
+  * size target (the internal element-byte view spreads like the element
+  * scan; see `WriteLayoutSpec`) and a sharded zarr v3 scan cuts only
+  * between shards. Pushed results do not depend on
   * the layout. The scan also reports what it planned as driver metrics.
   */
 class ElementScanPlanningSpec extends SparkSpec {

@@ -83,18 +83,35 @@ object N5ScanMetricsSpec {
     */
   def execution(spark: SparkSession, df: DataFrame,
       action: DataFrame => Any = _.collect()): SQLExecutionUIData = {
-    val sc = spark.sparkContext
     val store = spark.sharedState.statusStore
-    val tag = s"n5-scan-spec-${tags.incrementAndGet()}"
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(tag)
-    try action(df)
-    finally sc.setJobDescription(prev)
+    val tag = tagged(spark)(action(df))
     val deadline = System.nanoTime() + 30L * 1000000000L
     def finished = store.executionsList()
       .find(e => e.description == tag && e.completionTime.isDefined)
     while (finished.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
     finished.getOrElse(throw new AssertionError(s"no finished SQL execution for $tag"))
+  }
+
+  /** Every SQL execution `action` ran, in order. A tagged one-row query
+    * run after it is awaited through [[execution]]; the status store
+    * handles events in order, so by then it holds all of the action's.
+    */
+  def executions(spark: SparkSession)(action: => Any): Seq[SQLExecutionUIData] = {
+    val tag = tagged(spark)(action)
+    execution(spark, spark.range(1).toDF())
+    spark.sharedState.statusStore.executionsList()
+      .filter(_.description == tag).sortBy(_.executionId)
+  }
+
+  /** Runs `action` under a job description of its own and returns it. */
+  private def tagged(spark: SparkSession)(action: => Any): String = {
+    val sc = spark.sparkContext
+    val tag = s"n5-scan-spec-${tags.incrementAndGet()}"
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(tag)
+    try action
+    finally sc.setJobDescription(prev)
+    tag
   }
 
   private val tags = new java.util.concurrent.atomic.AtomicLong
